@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
-/** The engine's standard local-session configuration, in ONE place —
-  * Bench, ScalingBench, Verify, Explain and RunOne all build from
-  * here, so a perf conf added for one harness cannot silently drift
-  * out of the others (the repo already retrofitted
-  * `objectHashAggregate.sortBased.fallbackThreshold` into every
-  * builder by hand once). The settings are the BENCH.md §0/§3
+/** The engine's session configuration, in ONE place: every session
+  * the repository builds comes from [[builder]] — Bench, ScalingBench,
+  * Verify, Diag, PipelineMain and the test suites' `TestSpark` — so a
+  * perf conf added for one entry point cannot silently drift out of
+  * the others. Sessions built elsewhere (a caller's own) get the same
+  * functions, strategy and runtime SQL defaults from
+  * [[GraftExtensions.setup]]. The settings are the BENCH.md §0/§3
   * hygiene set:
   *
   *  - `shuffle.partitions` = the worker-thread count (not 200)
@@ -17,36 +19,45 @@ import org.apache.spark.sql.SparkSession
   *    thousands of query_id groups on the hash partial path)
   *  - `InferFiltersFromGenerate` excluded engine-wide (13× on the
   *    shingle explodes)
+  *  - streaming checkpoints without file checksums, through the
+  *    FileSystem-based checkpoint manager
   *  - UTC session time zone, AQE on, no UI
+  *
+  * Every setting is a default: the builder starts from a `SparkConf`
+  * that already holds the launcher's settings (`spark-submit --conf`,
+  * `-Dspark.*`) and fills only the keys left unset, so a deployment
+  * overrides any of them, `spark.master` included, with `--conf`.
   */
 object GraftSession {
 
-  def builder(master: String, partitions: String): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "256")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_MANAGER",
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
+  /** Runtime SQL defaults every engine query expects of its session. */
+  private[graft] val sqlDefaults: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.parquet.columnarReaderBatchSize" -> "256",
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
+    "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+
+  def builder(master: String, partitions: String): SparkSession.Builder = {
+    val conf = new SparkConf()
+    (Seq(
+      "spark.master" -> master,
+      "spark.sql.shuffle.partitions" -> partitions,
       // local `file:` scheme without the Shell-fork chmod fallback and
       // without `.crc` shadow files (see NioLocalFileSystem scaladoc);
-      // HDFS/object-store deployments override or simply never touch
-      // `file:` paths
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-          "graft.hadoop.NioLocalFileSystem"))
+      // HDFS/object-store deployments never touch `file:` paths
+      "spark.hadoop.fs.file.impl" -> "graft.hadoop.NioLocalFileSystem",
       // shuffle/block scratch follows java.io.tmpdir (build.sbt points
       // both at tmpfs when available; SPARK_GRAFT_TMPDIR overrides) —
       // Spark's own default is the literal "/tmp", which ignores the
       // JVM's tmpdir setting
-      .config("spark.local.dir", sys.props("java.io.tmpdir"))
-      .config("spark.ui.enabled", "false")
+      "spark.local.dir" -> sys.props("java.io.tmpdir"),
+      "spark.ui.enabled" -> "false") ++ sqlDefaults)
+      .foreach { case (k, v) => conf.setIfMissing(k, v) }
+    SparkSession.builder().config(conf).withExtensions(new GraftExtensions)
+  }
 }

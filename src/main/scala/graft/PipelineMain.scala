@@ -27,9 +27,10 @@ import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics}
   *
   * Every sink is the exactly-once batchId-committed MERGE protocol
   * with per-partition lineage (D2/D7); restart with the same
-  * checkpoint dir resumes with no dup/dropped rows. On a cluster, the
-  * master/executor topology comes from spark-submit; locally pass
-  * `--master local[N]`.
+  * checkpoint dir resumes with no dup/dropped rows. The master comes
+  * from `spark-submit --master` or `-Dspark.master`; without either the
+  * app runs at `local[SPARK_GRAFT_CPUS]`. Session settings are
+  * [[GraftSession]]'s, each overridable with `--conf`.
   *
   * Options (all have defaults for a local smoke run):
   *   --input <dir>       clip parquet dir (default: staged sf0.001)
@@ -63,6 +64,10 @@ object PipelineMain {
   private val clipSchema = graft.model.Schemas.clips
 
   private val BooleanFlags = Set("once", "rocksdb")
+
+  private val ValueOptions = Set("input", "updates", "output", "checkpoint",
+    "watermark", "window", "state-ttl-ms", "interval", "pipelines",
+    "token-budget", "strict-max-failures")
 
   private[graft] val AllPipelines =
     Seq("mapped", "dedup", "rollup", "sessions", "join", "upsert", "budget")
@@ -100,6 +105,8 @@ object PipelineMain {
         case flag :: tail if flag.startsWith("--") =>
           val name = flag.drop(2)
           if (BooleanFlags(name)) loop(tail, acc + (name -> "true"))
+          else if (!ValueOptions(name))
+            throw new IllegalArgumentException(s"unknown option --$name")
           else tail match {
             case v :: t2 if !v.startsWith("--") => loop(t2, acc + (name -> v))
             case _ =>
@@ -131,21 +138,10 @@ object PipelineMain {
           System.err.println(s"[pipeline] ${e.getMessage}")
           sys.exit(2)
       }
-    val builder = SparkSession.builder()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .appName("graft-pipeline")
-      .withExtensions(new GraftExtensions) // as-of strategy + simhash32/minhash32 SQL functions
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        opt.getOrElse("shuffle-partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.sql.parquet.columnarReaderBatchSize", "256")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536") // ANN top-k: keep thousands of query_id groups on the hash partial path
-      .config("spark.sql.adaptive.enabled", "true")
-    // master comes from spark-submit on a cluster; default local for dev
-    val spark =
-      (if (opt.contains("master") || sys.props.contains("spark.master")) builder
-       else builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-        .getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -206,14 +202,16 @@ object PipelineMain {
   /** Builds, starts and drains every enabled pipeline on `spark` —
     * the whole engine application minus session lifecycle, so the
     * reconciliation spec can run it end-to-end on the shared test
-    * session.
+    * session. The session's conf is left as it was found.
     */
   private[graft] def run(spark: SparkSession, opt: Map[String, String],
-      enabled: Seq[String]): PipelineRun = {
+      enabled: Seq[String]): PipelineRun =
     if (opt.contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.TwsDedup.withRocksDB(spark)(drain(spark, opt, enabled))
+    else drain(spark, opt, enabled)
 
+  private def drain(spark: SparkSession, opt: Map[String, String],
+      enabled: Seq[String]): PipelineRun = {
     val input = opt.getOrElse("input", {
       graft.synth.ClipGen.stagedClips(spark, "/root/testdata/sf0.001").head(1)
       graft.synth.ClipGen.clipsTablePath("/root/testdata/sf0.001")

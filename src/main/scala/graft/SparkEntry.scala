@@ -17,9 +17,7 @@ object SparkEntry {
     * M1/M4 re-expressed) on sf0.001; driver smoke-checks rows > 0.
     */
   def entry(spark: SparkSession): DataFrame = {
-    functions.SimHash32.register(spark)
-    functions.MinHash32.register(spark)
-    functions.VecMath.register(spark)
+    GraftExtensions.setup(spark)
     Registry.all.find(_.name == "p01_decode_full").get
       .fn(spark, "/root/testdata/sf0.001")
   }
@@ -28,19 +26,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.all.map { q =>
       q.name -> { (s: SparkSession, d: String) =>
-        functions.SimHash32.register(s)
-        functions.MinHash32.register(s)
-        functions.VecMath.register(s)
-        // see BENCH.md §3: InferFiltersFromGenerate re-evaluates
-        // expensive generator inputs in an interpreted filter (13x on
-        // the shingle join) — excluded for every engine query
-        s.conf.set("spark.sql.optimizer.excludedRules",
-          "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-        // ANN top-k (q36/q37/q47): thousands of query_id groups must
-        // stay on the ObjectHashAggregate hash-partial path — set here
-        // too so an externally-built session gets the engine's conf
-        s.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-          "65536")
+        GraftExtensions.setup(s)
         q.fn(s, d)
       }
     }.toMap

@@ -99,23 +99,12 @@ object MinHash32 {
       if (m == null) null else UTF8String.fromString(m)))
   }
 
-  /** Register `minhash32(arr, k)` in the session function registry.
-    * k must be a foldable integral literal — `lit(8L)` or a SQL
-    * `CAST(... AS BIGINT)` are accepted (not just INT literals), and a
-    * non-literal k is rejected with a clear analysis error instead of
-    * an undefined eval-against-no-row.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash32", fromExprs, "built-in")
-
-  /** Expression builder shared by [[register]] and
-    * [[graft.GraftExtensions]].
+  /** `minhash32(arr, k)` expression builder for
+    * [[graft.GraftExtensions]], which checks the arity.
     */
   private[graft] def fromExprs(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): MinHash32 = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    require(exprs.length == 2, s"minhash32(arr, k) takes 2 args, got ${exprs.length}")
     // any FOLDABLE integral expression works (lit(8), lit(8L),
     // CAST(8 AS BIGINT), 4+4); evaluating a foldable needs no input
     // row. Non-foldable k is rejected with a clear error instead of an
@@ -144,7 +133,7 @@ object MinHash32 {
     MinHash32(exprs.head, k)
   }
 
-  /** Column wrapper (requires [[register]] on the active session). */
+  /** Column wrapper (the session needs [[graft.GraftExtensions]]). */
   def minhash32(shingles: Column, k: Int): Column =
     call_function("minhash32", shingles, org.apache.spark.sql.functions.lit(k))
 }

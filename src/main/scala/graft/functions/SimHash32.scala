@@ -86,16 +86,7 @@ object SimHash32 {
     out
   }
 
-  /** Register `simhash32` in the session function registry (needed
-    * once per session before using [[simhash32]] / SQL `simhash32()`).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash32",
-      exprs => SimHash32(exprs.head),
-      "built-in")
-
-  /** Column wrapper (requires [[register]] on the active session). */
+  /** Column wrapper (the session needs [[graft.GraftExtensions]]). */
   def simhash32(tokens: Column): Column = call_function("simhash32", tokens)
 
   /** Hamming distance between two simhash longs as a Column. */

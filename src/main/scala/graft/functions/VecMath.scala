@@ -73,14 +73,7 @@ object VecMath {
     java.lang.Double.valueOf(Math.sqrt(acc))
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_d", exprs => DotD(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "norm_d", exprs => NormD(exprs.head), "built-in")
-  }
-
-  /** Column wrappers (require [[register]] on the active session). */
+  /** Column wrappers (the session needs [[graft.GraftExtensions]]). */
   def dotD(a: Column, b: Column): Column = call_function("dot_d", a, b)
   def normD(a: Column): Column = call_function("norm_d", a)
 }

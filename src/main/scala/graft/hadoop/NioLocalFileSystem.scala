@@ -50,9 +50,9 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   * durability story for local scratch (checkpoints, staged fixtures,
   * sink work dirs) is the atomic-rename commit protocol, not `.crc`
   * twins that double every metadata operation. Registered for the
-  * `file:` scheme by [[graft.GraftSession]]; env-overridable
-  * (SPARK_GRAFT_LOCAL_FS) and simply never used by HDFS/object-store
-  * deployments.
+  * `file:` scheme by [[graft.GraftSession]]; overridable with
+  * `--conf spark.hadoop.fs.file.impl=...` and simply never used by
+  * HDFS/object-store deployments.
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
 

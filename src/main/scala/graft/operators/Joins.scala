@@ -73,15 +73,12 @@ object Joins {
     * ([[graft.plans.AsofJoin]]): same semantics as
     * [[asofJoinBackward]], planned as one co-partitioned O(n+m)
     * streaming merge per partition instead of union + window. The
-    * planner strategy is installed on the session on first use.
+    * session needs [[graft.GraftExtensions]] (its planner strategy).
     */
   def asofJoinNative(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String, rightOrd: String): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =

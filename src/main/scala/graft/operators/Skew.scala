@@ -42,15 +42,4 @@ object Skew {
       .agg(
         sum(col("__n")).as("n_clips"),
         sum(col("__d")).as("total_dur_ms"))
-
-  /** AQE + skew settings the engine expects on a real cluster (set on
-    * SparkSession builder; collected here so spark-submit conf and
-    * tests share one list).
-    */
-  val recommendedConf: Map[String, String] = Map(
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-    "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "3",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m")
 }

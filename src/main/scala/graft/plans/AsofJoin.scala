@@ -57,8 +57,8 @@ case class AsofJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy mapping the logical node to its exec. Injected via
-  * `spark.experimental.extraStrategies` (see [[AsofJoin.install]]).
+/** Planner strategy mapping the logical node to its exec. Injected by
+  * [[graft.GraftExtensions]].
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -162,28 +162,30 @@ class PipelineMainSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("pipe_budget_").toString
     graft.synth.ClipGen.stagedClips(spark, "/root/testdata/sf0.001").head(1)
     val input = graft.synth.ClipGen.clipsTablePath("/root/testdata/sf0.001")
-    graft.streaming.TwsDedup.withRocksDB(spark) {
-      val r = PipelineMain.run(spark,
-        Map("input" -> input, "output" -> out, "checkpoint" -> s"$out/_ckpt",
-          "rocksdb" -> "true", "token-budget" -> "200"),
-        Seq("budget"))
-      val per = r.sinks("budget").readCommitted(spark)
-        .groupBy(col("source"))
-        .agg(max(col("cum_tokens")).as("max_cum"), sum(col("n_tok")).as("tot"),
-          sum(when(col("admitted"), 1L).otherwise(0L)).as("adm"),
-          count(lit(1)).as("n"))
-        .as[(String, Long, Long, Long, Long)].collect()
-      assert(per.nonEmpty)
-      per.foreach { case (src, maxCum, tot, adm, n) =>
-        // the running total survived every batch boundary iff the max
-        // committed prefix equals the source's full token count
-        assert(maxCum == tot, s"$src prefix broken: max cum $maxCum != total $tot")
-        assert(adm <= n)
-      }
-      assert(per.map(_._4).sum > 0, "no source admitted anything")
-      assert(per.exists { case (_, _, _, adm, n) => adm < n },
-        "budget never cut — the 200-token budget should reject some clips")
+    // run selects the RocksDB provider itself and restores the session's value
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val providerBefore = spark.conf.getOption(provider)
+    val r = PipelineMain.run(spark,
+      Map("input" -> input, "output" -> out, "checkpoint" -> s"$out/_ckpt",
+        "rocksdb" -> "true", "token-budget" -> "200"),
+      Seq("budget"))
+    assert(spark.conf.getOption(provider) == providerBefore)
+    val per = r.sinks("budget").readCommitted(spark)
+      .groupBy(col("source"))
+      .agg(max(col("cum_tokens")).as("max_cum"), sum(col("n_tok")).as("tot"),
+        sum(when(col("admitted"), 1L).otherwise(0L)).as("adm"),
+        count(lit(1)).as("n"))
+      .as[(String, Long, Long, Long, Long)].collect()
+    assert(per.nonEmpty)
+    per.foreach { case (src, maxCum, tot, adm, n) =>
+      // the running total survived every batch boundary iff the max
+      // committed prefix equals the source's full token count
+      assert(maxCum == tot, s"$src prefix broken: max cum $maxCum != total $tot")
+      assert(adm <= n)
     }
+    assert(per.map(_._4).sum > 0, "no source admitted anything")
+    assert(per.exists { case (_, _, _, adm, n) => adm < n },
+      "budget never cut — the 200-token budget should reject some clips")
   }
 
   test("parseArgs: value flags, boolean flags, malformed input") {
@@ -196,6 +198,11 @@ class PipelineMainSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException] {
       PipelineMain.parseArgs(Array("stray"))
+    }
+    Seq(Array("--master", "x"), Array("--shuffle-partitions", "8"),
+      Array("--watermak", "5")).foreach { a =>
+      val e = intercept[IllegalArgumentException](PipelineMain.parseArgs(a))
+      assert(e.getMessage.contains(s"unknown option ${a.head}"))
     }
   }
 }

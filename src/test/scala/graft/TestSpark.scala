@@ -2,32 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites. */
+/** One shared local session for all suites, built by [[GraftSession]]
+  * like every main, so the suites exercise what the mains run with. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", "4")
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "256")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536") // ANN top-k: hash-partial path, same as the entry mains
-      // same streaming-checkpoint IO configuration as GraftSession, so
-      // the kill/restart (D7) suites exercise the manager the engine
-      // actually runs with
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh_").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    functions.SimHash32.register(s)
-    functions.MinHash32.register(s)
-    functions.VecMath.register(s)
     s
   }
 }
