@@ -26,7 +26,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - `updates <outDir> [sfDir]` writes the transcript-update table for
   *    `PipelineMain --updates` runs (sfDir default sf0.001).
   *
-  * `run` and `bench` use `local[SPARK_GRAFT_CPUS]` (default 32).
+  * `run` and `bench` use `local[SPARK_GRAFT_CPUS]` (unset: the host's
+  * cores, at most 16 — [[GraftSession.localCpus]]).
   * Usage: `runMain graft.Diag <subcommand> [args...]`.
   */
 object Diag {
@@ -47,7 +48,7 @@ object Diag {
       sys.exit(2)
   }
 
-  private def cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  private def cpus = GraftSession.localCpus()
 
   private def withSession(master: String, partitions: String,
       logLevel: String)(f: SparkSession => Unit): Unit = {

@@ -21,6 +21,19 @@ import org.apache.spark.sql.SparkSession
   *    shingle explodes)
   *  - streaming checkpoints without file checksums, through the
   *    FileSystem-based checkpoint manager
+  *  - file paths always listed on the driver
+  *    (`parallelPartitionDiscovery.threshold` = Int.MaxValue; Spark
+  *    lists more than 32 paths as a cluster job).
+  *    `FileStreamSource.getBatch` rebuilds each micro-batch's relation
+  *    over the batch's files, and `ExactlyOnceSink.readCommitted` passes
+  *    one path per committed batch, so a 48-file backlog drain ran one
+  *    48-task, 1.4–2.7 s listing job per query before any data job
+  *    (`getBatch` self time 9868 → 313 ms without them). Listing on
+  *    `file:` from a warm `local[4]` session, cluster job → driver:
+  *    48 paths 347–456 → 51–66 ms, 500 paths 2.29–2.33 s → 105–120 ms,
+  *    2382 paths 10.2–10.8 s → 253–310 ms (BENCH.md §R7). HDFS or
+  *    object-store deployments with very large backlogs can lower it
+  *    with `--conf`
   *  - UTC session time zone, AQE on, no UI
   *
   * Every setting is a default: the builder starts from a `SparkConf`
@@ -40,7 +53,17 @@ object GraftSession {
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString)
+
+  /** Worker threads for a `local[n]` master: `SPARK_GRAFT_CPUS` when
+    * set, else the host's cores capped at 16 — also the shuffle and
+    * state partition count, so an unset variable never sizes a small
+    * host's micro-batches for 32 threads.
+    */
+  def localCpus(env: Map[String, String] = sys.env,
+      cores: Int = Runtime.getRuntime.availableProcessors()): String =
+    env.getOrElse("SPARK_GRAFT_CPUS", math.min(16, cores).toString)
 
   def builder(master: String, partitions: String): SparkSession.Builder = {
     val conf = new SparkConf()

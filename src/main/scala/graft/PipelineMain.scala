@@ -29,7 +29,8 @@ import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics}
   * with per-partition lineage (D2/D7); restart with the same
   * checkpoint dir resumes with no dup/dropped rows. The master comes
   * from `spark-submit --master` or `-Dspark.master`; without either the
-  * app runs at `local[SPARK_GRAFT_CPUS]`. Session settings are
+  * app runs at `local[SPARK_GRAFT_CPUS]` (unset: the host's cores, at
+  * most 16 — [[GraftSession.localCpus]]). Session settings are
   * [[GraftSession]]'s, each overridable with `--conf`.
   *
   * Options (all have defaults for a local smoke run):
@@ -138,7 +139,7 @@ object PipelineMain {
           System.err.println(s"[pipeline] ${e.getMessage}")
           sys.exit(2)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.localCpus()
     val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .appName("graft-pipeline")
       .getOrCreate()

@@ -543,8 +543,11 @@ object ScalingBench {
       // cross-pair dispersion all check out — three independent
       // contention signals
       val valid: Boolean = ceilValid && pairsValid && dispersionValid
-      // an INVALID ceiling never becomes the denominator — normalize
-      // against neutral 1.0 instead (can only understate, not flatter)
+      // the denominator is the MEDIAN pair's own ceiling; only when
+      // THAT pair's probe is invalid does it fall back to neutral 1.0
+      // (can only understate). An invalid probe on any other pair
+      // leaves the median pair's ceiling in place and is carried by
+      // `valid` (through ceilValid) instead
       val norm: Double =
         math.min(raw / (if (midUnit.ceilValid) ceil else 1.0), 1.0)
     }
@@ -656,6 +659,16 @@ object ScalingBench {
       // non-finite — Infinity is not valid JSON and would break the
       // driver's artifact parse; clamp to a visibly-absurd finite value
       val disp = if (java.lang.Double.isFinite(p.dispersion)) p.dispersion else 999.999
+      // since round 6 (per-pair ceiling probes) three ceiling fields keep
+      // their round-5 names but not their round-5 meaning:
+      //  - ceiling_raw: the median pair's own-window probe (round 5: the
+      //    one pass-level probe)
+      //  - ceiling_valid: every surviving non-sentinel pair's probe was
+      //    plausible (round 5: the one pass-level probe was)
+      //  - ceiling_probe_tries: probe attempts summed over the pass's
+      //    surviving pairs; probes spent on dispersion outliers that
+      //    were re-measured are not counted
+      // compare them across rounds with that in mind
       f"""{"raw":${p.raw}%.3f,"ceiling":${p.ceil}%.3f,"ceiling_raw":${p.ceilRaw}%.3f,"ceiling_probe_tries":${p.ceilTries},"ceiling_valid":${p.ceilValid},"pairs_valid":${p.pairsValid},"dispersion":$disp%.3f,"dispersion_valid":${p.dispersionValid},"valid":${p.valid},"normalized":${p.norm}%.3f,"sec_lo":${p.tLo}%.2f,"sec_hi":${p.tHi}%.2f,"pair_ratios":$prs,"pair_ceilings":$pcs,"pair_ext_cpu":$ext,"rejected_pairs":$rej}"""
     }.mkString("[", ",", "]")
     val isolation = if (forkUnavailable) "in-process" else "fork"

@@ -10,8 +10,7 @@ object Verify {
     // optional trailing args: run only these query names (local iteration;
     // the driver always calls with exactly two args)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(16, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = GraftSession.localCpus()
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

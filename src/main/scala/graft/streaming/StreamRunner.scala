@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Helpers for driving streaming plans to a deterministic batch result
@@ -296,15 +296,40 @@ object StreamRunner {
           .start()
         (name, q)
       }
-      try started.foreach(_._2.awaitTermination())
-      catch {
-        case e: Throwable =>
-          // don't leave the sibling query running against a half-torn
-          // session if one half fails
-          started.foreach(s => try s._2.stop() catch { case _: Throwable => () })
-          throw e
-      }
+      awaitAll(started.map(_._2))
       started.map { case (name, _) => spark.table(name) }
+    }
+  }
+
+  /** Waits until every query has ended, polling each `isActive`, and
+    * rethrows the earliest failure with the later ones attached as
+    * suppressed. The first failure seen stops the still-running
+    * siblings (none is left running against a half-torn session), so a
+    * failing query surfaces its own error at once instead of waiting
+    * behind, or being masked by, a sibling that happened to be awaited
+    * first.
+    */
+  private def awaitAll(queries: Seq[StreamingQuery]): Unit = {
+    def stopQuietly(q: StreamingQuery): Unit =
+      try q.stop() catch { case _: Throwable => () }
+    val failures = scala.collection.mutable.ArrayBuffer.empty[Throwable]
+    var running = queries
+    try {
+      while (running.nonEmpty) {
+        val (ended, active) = running.partition(!_.isActive)
+        failures ++= ended.flatMap(_.exception)
+        if (failures.nonEmpty) active.foreach(stopQuietly)
+        running = active
+        if (running.nonEmpty) Thread.sleep(10)
+      }
+    } catch {
+      case e: Throwable =>
+        queries.foreach(stopQuietly)
+        throw e
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
     }
   }
 

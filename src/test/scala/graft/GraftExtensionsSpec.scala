@@ -66,11 +66,14 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("setup restores dropped functions, the strategy and SQL defaults; a second call changes nothing") {
     val excluded = "spark.sql.optimizer.excludedRules"
+    val listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     val tz = "spark.sql.session.timeZone"
-    // a caller-built session: no extensions; one default unset, one
+    // a caller-built session: no extensions; two defaults unset, one
     // key set to the caller's own value
     val plain = PlainSessionBridge.plainSession(spark)
     plain.conf.unset(excluded)
+    plain.conf.unset(listing)
+    assert(plain.conf.get(listing) == "32")
     plain.conf.set(tz, "America/New_York")
     functionIds.foreach(f => plain.sessionState.functionRegistry.dropFunction(f))
     // an engine session whose functions were dropped
@@ -92,10 +95,18 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
     assert(plain.conf.get(excluded) ==
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    assert(plain.conf.get(listing) == Int.MaxValue.toString)
     assert(plain.conf.get(tz) == "America/New_York")
     assert(plain.sql(
       "SELECT dot_d(array(1.0D, 2.0D), array(3.0D, 4.0D)), norm_d(array(3.0D, 4.0D))")
       .head().toSeq == Seq(11.0, 5.0))
+  }
+
+  test("localCpus: SPARK_GRAFT_CPUS wins, else the host's cores capped at 16") {
+    assert(GraftSession.localCpus(Map("SPARK_GRAFT_CPUS" -> "7"), cores = 64) == "7")
+    assert(GraftSession.localCpus(Map.empty, cores = 4) == "4")
+    assert(GraftSession.localCpus(Map.empty, cores = 16) == "16")
+    assert(GraftSession.localCpus(Map.empty, cores = 64) == "16")
   }
 
   test("GraftSession.builder is the only session builder under src/") {
