@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.sink.ExactlyOnceSink
-import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics}
+import graft.sink.{ExactlyOnceSink, UpsertSink}
+import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics, StreamRunner}
 
 /** The deployable engine application — `spark-submit --class
   * graft.PipelineMain <jar> [options]` runs the full reference
@@ -126,7 +126,7 @@ object PipelineMain {
     */
   final case class PipelineRun(
       sinks: Map[String, ExactlyOnceSink],
-      upserts: Map[String, graft.sink.UpsertSink],
+      upserts: Map[String, UpsertSink],
       listener: GraftQueryListener)
 
   def main(args: Array[String]): Unit = {
@@ -149,8 +149,7 @@ object PipelineMain {
     val r = run(spark, opt, enabled)
 
     // metrics summary (D8) — rows processed per query + late drops
-    val summary = Seq("graft_mapped", "graft_dedup", "graft_rollup",
-      "graft_sessions", "graft_join", "graft_upsert", "graft_budget")
+    val summary = AllPipelines.map(p => s"graft_$p")
       .map(n => s""""$n":{"rows":${r.listener.totalInputRows(n)},"batches":${r.listener.batches(n)},"late_dropped":${r.listener.droppedByWatermark(n)}}""")
       .mkString("{", ",", "}")
     // lineage reconciliation (D7): every committed batch's partition
@@ -203,7 +202,8 @@ object PipelineMain {
   /** Builds, starts and drains every enabled pipeline on `spark` —
     * the whole engine application minus session lifecycle, so the
     * reconciliation spec can run it end-to-end on the shared test
-    * session. The session's conf is left as it was found.
+    * session. The session's conf is left as it was found. The first
+    * query to fail stops the others and its own error is rethrown.
     */
   private[graft] def run(spark: SparkSession, opt: Map[String, String],
       enabled: Seq[String]): PipelineRun =
@@ -225,193 +225,145 @@ object PipelineMain {
     val trigger =
       opt.get("interval").map(Trigger.ProcessingTime(_)).getOrElse(Trigger.AvailableNow())
 
-    val listener = new GraftQueryListener
-    spark.streams.addListener(listener)
-
     import spark.implicits._
 
     def clipStream(): DataFrame =
       spark.readStream.schema(clipSchema).parquet(input)
 
-    var sinks = Map.empty[String, ExactlyOnceSink]
-    var upserts = Map.empty[String, graft.sink.UpsertSink]
+    // watermarked clip metadata keyed per occurrence (dedup, sessions)
+    def clipMeta(): Dataset[ClipMeta] = clipStream()
+      .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
+        col("transcript"), col("event_time").cast("timestamp").as("event_time"),
+        xxhash64(col("clip_id"), col("event_time")).as("event_id"))
+      .withWatermark("event_time", watermark)
+      .as[ClipMeta]
 
-    // ---- query 1: decode map → mapped-record sink (the reference's
-    //      core topology, M1/M4 + F1/F4; --strict-max-failures swaps in
-    //      the poison-pill decode)
-    val q1 = if (!enabled.contains("mapped")) None else Some {
-      val mappedSink = new ExactlyOnceSink(s"$output/mapped", Seq("out_id"))
-      sinks += ("mapped" -> mappedSink)
-      val typedClips = clipStream().as[graft.model.Clip]
-      val decoded = opt.get("strict-max-failures") match {
-        case Some(n) => ClipPipeline.decodeStageStrict(typedClips, n.toLong)
-        case None    => ClipPipeline.decodeStage(typedClips)
+    def exactlyOnce(dir: String, orderCols: String*) =
+      Left(new ExactlyOnceSink(s"$output/$dir", orderCols))
+
+    // one entry per enabled pipeline: its sink and its output frame.
+    // The checkpoint is <ckpt>/<name>, the query name graft_<name>.
+    val pipelines: Seq[(String, Either[ExactlyOnceSink, UpsertSink], DataFrame)] =
+      AllPipelines.filter(enabled.contains).map { name =>
+        val (sink, out) = name match {
+          // decode map → mapped-record sink (the reference's core
+          // topology, M1/M4 + F1/F4; --strict-max-failures swaps in the
+          // poison-pill decode)
+          case "mapped" =>
+            val typedClips = clipStream().as[graft.model.Clip]
+            val decoded = opt.get("strict-max-failures") match {
+              case Some(n) => ClipPipeline.decodeStageStrict(typedClips, n.toLong)
+              case None    => ClipPipeline.decodeStage(typedClips)
+            }
+            val mapped = decoded.toDF()
+              .withColumn("event_time", col("event_time").cast("timestamp"))
+            (exactlyOnce("mapped", "out_id"), Metrics.observed(mapped, "mapped_out"))
+          // keyed stateful dedup decisions (D1)
+          case "dedup" =>
+            (exactlyOnce("dedup", "clip_id", "occurrence"),
+              ClipPipeline.dedupStage(clipMeta(), stateTtl).toDF())
+          // watermarked tumbling rollup (A3/D4), append mode — only
+          // finalized windows are committed
+          case "rollup" =>
+            (exactlyOnce("rollups", "window_start", "codec"),
+              ClipPipeline.tumblingRollup(
+                clipStream()
+                  .withColumn("event_time", col("event_time").cast("timestamp"))
+                  .withWatermark("event_time", watermark),
+                windowDur))
+          // session-window MERGE per clip_id (D1b) — the reference's
+          // within-message merge generalized; on --rocksdb this runs the
+          // transformWithState processor (typed state + event-time
+          // timers), otherwise the portable fMGWS twin, so a deployment
+          // exercises whichever state API its store supports
+          case "sessions" =>
+            val merged =
+              if (opt.contains("rocksdb"))
+                graft.streaming.TwsSessionMerge.sessionMergeStageTws(clipMeta())
+              else ClipPipeline.sessionMergeStage(clipMeta())
+            (exactlyOnce("sessions", "clip_id", "session_start"), merged.toDF())
+          // transcript-update interval join (J3; needs --updates)
+          case "join" =>
+            val updates = spark.readStream
+              .schema(StructType(Seq(
+                StructField("clip_id", StringType),
+                StructField("u_transcript", StringType),
+                StructField("u_event_time", TimestampNTZType))))
+              .parquet(opt("updates"))
+              .withColumn("u_event_time", col("u_event_time").cast("timestamp"))
+            val clips = clipStream()
+              .select(col("clip_id"), col("transcript"),
+                col("event_time").cast("timestamp").as("event_time"))
+            (exactlyOnce("joined", "clip_id", "u_event_time"),
+              ClipPipeline.transcriptUpdateJoin(clips, updates, watermark, "10 MINUTES"))
+          // keyed MERGE upsert into a bucketed snapshot chain (S3's
+          // Iceberg-MERGE shape) — the CURRENT-STATE view of the clip
+          // table: latest event time wins per clip_id, stale replays
+          // never regress a key, untouched buckets carry forward by
+          // reference
+          case "upsert" =>
+            val keyed = clipStream()
+              .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
+                col("transcript"),
+                col("event_time").cast("timestamp").as("event_time"))
+              .withColumn("ver", unix_micros(col("event_time")))
+            (Right(new UpsertSink(s"$output/upsert", Seq("clip_id"), "ver")),
+              Metrics.observed(keyed, "upsert_in"))
+          // per-source token-budget admission (the ingestion-time mixing
+          // control — s34's stateful operator as a deployable stage):
+          // each codec stratum admits clips in processing order until its
+          // running transcript-token total passes --token-budget; rows
+          // past the cut are still committed as rejected audit rows,
+          // never silently dropped. Requires --rocksdb
+          // (transformWithState). doc_id is xxhash64(clip_id,
+          // event_time) — the same per-OCCURRENCE identity the dedup
+          // pipeline keys on: bare clip_id repeats in the stream, and
+          // tied doc_ids would leave the fold's in-batch order (hence
+          // cum_tokens attribution and the sink's byte-identical replay)
+          // shuffle-order-dependent.
+          case "budget" =>
+            val docs = clipStream()
+              .select(col("codec").as("source"),
+                xxhash64(col("clip_id"), col("event_time")).as("doc_id"),
+                col("transcript").as("text"))
+            (exactlyOnce("budget", "doc_id"),
+              graft.streaming.StreamTokenBudget
+                .stage(graft.streaming.StreamTokenBudget.docTokens(docs),
+                  opt.getOrElse("token-budget", "100000").toLong)
+                .toDF())
+        }
+        (name, sink, out)
       }
-      val mapped = decoded.toDF()
-        .withColumn("event_time", col("event_time").cast("timestamp"))
-      Metrics.observed(mapped, "mapped_out")
-        .writeStream
-        .queryName("graft_mapped")
-        .foreachBatch((df: DataFrame, id: Long) => mappedSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/mapped")
+
+    def start(name: String, sink: Either[ExactlyOnceSink, UpsertSink],
+        out: DataFrame): StreamingQuery =
+      out.writeStream
+        .queryName(s"graft_$name")
+        .foreachBatch(sink.fold(s => s.write _, s => s.write _))
+        .option("checkpointLocation", s"$ckpt/$name")
         .trigger(trigger)
         .start()
-    }
 
-    // ---- query 2: keyed stateful dedup decisions (D1)
-    val q2 = if (!enabled.contains("dedup")) None else Some {
-      val dedupSink = new ExactlyOnceSink(s"$output/dedup", Seq("clip_id", "occurrence"))
-      sinks += ("dedup" -> dedupSink)
-      val meta = clipStream()
-        .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
-          col("transcript"), col("event_time").cast("timestamp").as("event_time"),
-          xxhash64(col("clip_id"), col("event_time")).as("event_id"))
-        .withWatermark("event_time", watermark)
-        .as[ClipMeta]
-      ClipPipeline.dedupStage(meta, stateTtl).toDF()
-        .writeStream
-        .queryName("graft_dedup")
-        .foreachBatch((df: DataFrame, id: Long) => dedupSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/dedup")
-        .trigger(trigger)
-        .start()
+    val listener = new GraftQueryListener
+    spark.streams.addListener(listener)
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    try {
+      pipelines.foreach { case (name, sink, out) => started += start(name, sink, out) }
+      // the first query to fail stops its siblings and is rethrown
+      StreamRunner.awaitAll(started.toSeq)
+      // progress events arrive on the async listener bus — drain it
+      // before detaching, or the summary can miss the final micro-batch
+      if (!org.apache.spark.graftbridge.ListenerBridge
+          .drainListenerBus(spark.sparkContext, 30000L))
+        System.err.println(
+          "[pipeline] WARN listener bus not drained in 30s; metrics summary may undercount")
+    } finally {
+      started.foreach(_.stop())
+      spark.streams.removeListener(listener)
     }
-
-    // ---- query 3: watermarked tumbling rollup (A3/D4), append mode —
-    //      only finalized windows are committed
-    val q3 = if (!enabled.contains("rollup")) None else Some {
-      val rollupSink = new ExactlyOnceSink(s"$output/rollups", Seq("window_start", "codec"))
-      sinks += ("rollup" -> rollupSink)
-      val rollup = ClipPipeline.tumblingRollup(
-        clipStream()
-          .withColumn("event_time", col("event_time").cast("timestamp"))
-          .withWatermark("event_time", watermark),
-        windowDur)
-      rollup.writeStream
-        .queryName("graft_rollup")
-        .outputMode("append")
-        .foreachBatch((df: DataFrame, id: Long) => rollupSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/rollup")
-        .trigger(trigger)
-        .start()
-    }
-
-    // ---- query 5: session-window MERGE per clip_id (D1b) — the
-    //      reference's within-message merge generalized; on --rocksdb
-    //      this runs the transformWithState processor (typed state +
-    //      event-time timers), otherwise the portable fMGWS twin, so a
-    //      deployment exercises whichever state API its store supports
-    val q5 = if (!enabled.contains("sessions")) None else Some {
-      val sessSink = new ExactlyOnceSink(s"$output/sessions",
-        Seq("clip_id", "session_start"))
-      sinks += ("sessions" -> sessSink)
-      val meta = clipStream()
-        .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
-          col("transcript"), col("event_time").cast("timestamp").as("event_time"),
-          xxhash64(col("clip_id"), col("event_time")).as("event_id"))
-        .withWatermark("event_time", watermark)
-        .as[ClipMeta]
-      val merged =
-        if (opt.contains("rocksdb"))
-          graft.streaming.TwsSessionMerge.sessionMergeStageTws(meta)
-        else ClipPipeline.sessionMergeStage(meta)
-      merged.toDF()
-        .writeStream
-        .queryName("graft_sessions")
-        .foreachBatch((df: DataFrame, id: Long) => sessSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/sessions")
-        .trigger(trigger)
-        .start()
-    }
-
-    // ---- query 4: transcript-update interval join (J3; needs --updates)
-    val q4 = if (!enabled.contains("join")) None else Some {
-      val updDir = opt("updates")
-      val joinSink = new ExactlyOnceSink(s"$output/joined", Seq("clip_id", "u_event_time"))
-      sinks += ("join" -> joinSink)
-      val updates = spark.readStream
-        .schema(StructType(Seq(
-          StructField("clip_id", StringType),
-          StructField("u_transcript", StringType),
-          StructField("u_event_time", TimestampNTZType))))
-        .parquet(updDir)
-        .withColumn("u_event_time", col("u_event_time").cast("timestamp"))
-      val clips = clipStream()
-        .select(col("clip_id"), col("transcript"),
-          col("event_time").cast("timestamp").as("event_time"))
-      val joined = ClipPipeline.transcriptUpdateJoin(clips, updates, watermark, "10 MINUTES")
-      joined.writeStream
-        .queryName("graft_join")
-        .foreachBatch((df: DataFrame, id: Long) => joinSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/join")
-        .trigger(trigger)
-        .start()
-    }
-
-    // ---- query 6: keyed MERGE upsert into a bucketed snapshot chain
-    //      (S3's Iceberg-MERGE shape) — the CURRENT-STATE view of the
-    //      clip table: latest event time wins per clip_id, stale
-    //      replays never regress a key, untouched buckets carry
-    //      forward by reference
-    // ---- query 7: per-source token-budget admission (the ingestion-
-    //      time mixing control — s34's stateful operator as a
-    //      deployable stage): each codec stratum admits clips in
-    //      processing order until its running transcript-token total
-    //      passes --token-budget; rows past the cut are still
-    //      committed as rejected audit rows, never silently dropped.
-    //      Requires --rocksdb (transformWithState). doc_id is
-    //      xxhash64(clip_id, event_time) — the same per-OCCURRENCE
-    //      identity the dedup pipeline keys on: bare clip_id repeats
-    //      in the stream, and tied doc_ids would leave the fold's
-    //      in-batch order (hence cum_tokens attribution and the
-    //      sink's byte-identical replay) shuffle-order-dependent.
-    val q7 = if (!enabled.contains("budget")) None else Some {
-      val budgetSink = new ExactlyOnceSink(s"$output/budget", Seq("doc_id"))
-      sinks += ("budget" -> budgetSink)
-      val budget = opt.getOrElse("token-budget", "100000").toLong
-      val docs = clipStream()
-        .select(col("codec").as("source"),
-          xxhash64(col("clip_id"), col("event_time")).as("doc_id"),
-          col("transcript").as("text"))
-      graft.streaming.StreamTokenBudget
-        .stage(graft.streaming.StreamTokenBudget.docTokens(docs), budget)
-        .toDF()
-        .writeStream
-        .queryName("graft_budget")
-        .foreachBatch((df: DataFrame, id: Long) => budgetSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/budget")
-        .trigger(trigger)
-        .start()
-    }
-
-    val q6 = if (!enabled.contains("upsert")) None else Some {
-      val upSink = new graft.sink.UpsertSink(s"$output/upsert",
-        Seq("clip_id"), "ver")
-      upserts += ("upsert" -> upSink)
-      val keyed = clipStream()
-        .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
-          col("transcript"),
-          col("event_time").cast("timestamp").as("event_time"))
-        .withColumn("ver", unix_micros(col("event_time")))
-      Metrics.observed(keyed, "upsert_in")
-        .writeStream
-        .queryName("graft_upsert")
-        .foreachBatch((df: DataFrame, id: Long) => upSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/upsert")
-        .trigger(trigger)
-        .start()
-    }
-
-    (q1.toSeq ++ q2.toSeq ++ q3.toSeq ++ q5.toSeq ++ q4.toSeq ++ q6.toSeq ++
-      q7.toSeq)
-      .foreach(_.awaitTermination())
-    // progress events arrive on the async listener bus — drain it
-    // before detaching, or the summary can miss the final micro-batch
-    if (!org.apache.spark.graftbridge.ListenerBridge
-        .drainListenerBus(spark.sparkContext, 30000L))
-      System.err.println(
-        "[pipeline] WARN listener bus not drained in 30s; metrics summary may undercount")
-    spark.streams.removeListener(listener)
-    PipelineRun(sinks, upserts, listener)
+    PipelineRun(
+      pipelines.collect { case (name, Left(sink), _) => name -> sink }.toMap,
+      pipelines.collect { case (name, Right(sink), _) => name -> sink }.toMap,
+      listener)
   }
 }

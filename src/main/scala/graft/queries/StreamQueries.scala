@@ -1053,14 +1053,7 @@ object StreamQueries {
           StreamRunner.parquetStream(s, dir, eventsSchema,
             maxFilesPerTrigger = Some(1)))
         val sink = new ExactlyOnceSink(outDir, Seq("event_id"))
-        StreamRunner.withSizedStatePartitions(s) {
-          val q = clips.writeStream
-            .foreachBatch((df: DataFrame, id: Long) => sink.write(df, id))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", s"$outDir/_checkpoint")
-            .start()
-          q.awaitTermination()
-        }
+        StreamRunner.runToSink(clips, s"$outDir/_checkpoint")(sink.write)
         require(sink.committedBatchIds.size == 3,
           s"s17 expects 3 committed micro-batches, got ${sink.committedBatchIds}")
         val lin = sink.lineage
@@ -1108,14 +1101,7 @@ object StreamQueries {
         val fanIn = clips.unionByName(updates)
         val sink = new ExactlyOnceSink(outDir,
           Seq("clip_id", "event_time", "kind", "payload"))
-        StreamRunner.withSizedStatePartitions(s) {
-          val q = fanIn.writeStream
-            .foreachBatch((df: DataFrame, id: Long) => sink.write(df, id))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", s"$outDir/_checkpoint")
-            .start()
-          q.awaitTermination()
-        }
+        StreamRunner.runToSink(fanIn, s"$outDir/_checkpoint")(sink.write)
         require(sink.committedBatchIds.size == 3,
           s"s20 expects 3 committed fan-in micro-batches, got ${sink.committedBatchIds}")
         require(sink.lineage.forall(b => b.partitionRows.sum == b.rows),
@@ -1152,14 +1138,7 @@ object StreamQueries {
           StreamRunner.parquetStream(s, dir, eventsSchema,
             maxFilesPerTrigger = Some(1)))
         val sink = new graft.sink.UpsertSink(outDir, Seq("clip_id"), "event_id")
-        StreamRunner.withSizedStatePartitions(s) {
-          val q = clips.writeStream
-            .foreachBatch((df: DataFrame, id: Long) => sink.write(df, id))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", s"$outDir/_checkpoint")
-            .start()
-          q.awaitTermination()
-        }
+        StreamRunner.runToSink(clips, s"$outDir/_checkpoint")(sink.write)
         val commitCount = {
           val stream = java.nio.file.Files.list(
             java.nio.file.Paths.get(outDir, "_commits"))
@@ -1188,14 +1167,7 @@ object StreamQueries {
         val clips = metaProjection(
           StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
         val sink = new ExactlyOnceSink(outDir, Seq("event_id"))
-        StreamRunner.withSizedStatePartitions(s) {
-          val q = clips.writeStream
-            .foreachBatch((df: DataFrame, id: Long) => sink.write(df, id))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", s"$outDir/_checkpoint")
-            .start()
-          q.awaitTermination()
-        }
+        StreamRunner.runToSink(clips, s"$outDir/_checkpoint")(sink.write)
         sink.readCommitted(s)
           .select(col("clip_id"), col("event_id"), col("codec"),
             col("dur_ms"), col("event_time"))

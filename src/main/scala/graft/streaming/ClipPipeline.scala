@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -399,20 +399,16 @@ object ClipPipeline {
     * (window, codec) — Catalyst's standard two-phase agg.
     */
   def tumblingRollup(clips: DataFrame, windowDur: String): DataFrame =
-    clips
-      .groupBy(window(col("event_time"), windowDur), col("codec"))
-      .agg(
-        count(lit(1)).as("n_clips"),
-        sum(col("dur_ms")).cast("long").as("total_dur_ms"))
-      .select(
-        col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("codec"), col("n_clips"), col("total_dur_ms"))
+    rollupBy(clips, window(col("event_time"), windowDur))
 
   /** Sliding-window rollup (windowDur every slide). */
   def slidingRollup(clips: DataFrame, windowDur: String, slide: String): DataFrame =
+    rollupBy(clips, window(col("event_time"), windowDur, slide))
+
+  /** The per-(window, codec) agg + select both window rollups share. */
+  private def rollupBy(clips: DataFrame, win: Column): DataFrame =
     clips
-      .groupBy(window(col("event_time"), windowDur, slide), col("codec"))
+      .groupBy(win, col("codec"))
       .agg(
         count(lit(1)).as("n_clips"),
         sum(col("dur_ms")).cast("long").as("total_dur_ms"))
@@ -454,7 +450,23 @@ object ClipPipeline {
     * grows with key heat).
     */
   def transcriptUpdateJoin(clips: DataFrame, updates: DataFrame,
-      watermark: String, joinWindow: String): DataFrame = {
+      watermark: String, joinWindow: String): DataFrame =
+    bucketedUpdateJoin(clips, updates, watermark, joinWindow, "inner")
+
+  /** LEFT OUTER variant of [[transcriptUpdateJoin]]: clips with no
+    * update inside the interval are emitted with null update columns
+    * once the watermark passes their join window (state eviction time).
+    * Same bucketed equality key as the inner join.
+    */
+  def transcriptUpdateLeftJoin(clips: DataFrame, updates: DataFrame,
+      watermark: String, joinWindow: String): DataFrame =
+    bucketedUpdateJoin(clips, updates, watermark, joinWindow, "leftOuter")
+
+  /** The bucketed interval join body of [[transcriptUpdateJoin]] and
+    * [[transcriptUpdateLeftJoin]], which differ only in `joinType`.
+    */
+  private def bucketedUpdateJoin(clips: DataFrame, updates: DataFrame,
+      watermark: String, joinWindow: String, joinType: String): DataFrame = {
     val windowUs = parseDurationUs(joinWindow)
     val c = clips
       .withColumn("__cb", floor(unix_micros(col("event_time")) / windowUs))
@@ -469,15 +481,11 @@ object ClipPipeline {
         u,
         expr(s"""clip_id = u_clip_id AND __cb = __ub AND
                  u_event_time >= event_time AND
-                 u_event_time <= event_time + INTERVAL $joinWindow"""))
+                 u_event_time <= event_time + INTERVAL $joinWindow"""),
+        joinType)
       .drop("__cb", "__ub")
   }
 
-  /** LEFT OUTER variant of [[transcriptUpdateJoin]]: clips with no
-    * update inside the interval are emitted with null update columns
-    * once the watermark passes their join window (state eviction time).
-    * Same bucketed equality key as the inner join.
-    */
   /** FULL OUTER watermarked interval join: matched pairs emit
     * immediately; an unmatched CLIP emits (clip, null) once the
     * watermark passes its join window, an unmatched UPDATE emits
@@ -506,27 +514,6 @@ object ClipPipeline {
                  u_event_time >= event_time AND
                  u_event_time <= event_time + INTERVAL $joinWindow"""),
         "fullOuter")
-  }
-
-  def transcriptUpdateLeftJoin(clips: DataFrame, updates: DataFrame,
-      watermark: String, joinWindow: String): DataFrame = {
-    val windowUs = parseDurationUs(joinWindow)
-    val c = clips
-      .withColumn("__cb", floor(unix_micros(col("event_time")) / windowUs))
-      .withWatermark("event_time", watermark)
-    val u = updates
-      .withColumnRenamed("clip_id", "u_clip_id")
-      .withColumn("__ub", explode(array(
-        floor(unix_micros(col("u_event_time")) / windowUs),
-        floor(unix_micros(col("u_event_time")) / windowUs) - 1)))
-      .withWatermark("u_event_time", watermark)
-    c.join(
-        u,
-        expr(s"""clip_id = u_clip_id AND __cb = __ub AND
-                 u_event_time >= event_time AND
-                 u_event_time <= event_time + INTERVAL $joinWindow"""),
-        "leftOuter")
-      .drop("__cb", "__ub")
   }
 
   /** The update-side half of the SCALE-SAFE full-outer composition:

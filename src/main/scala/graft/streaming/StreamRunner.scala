@@ -4,13 +4,16 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Helpers for driving streaming plans to a deterministic batch result
   * (the engine's TopologyTestDriver analogue, SURVEY.md §5) and for
-  * reading the file-backed input streams.
+  * reading the file-backed input streams. Every query run here is
+  * started, sized from its own sources, awaited and released in one
+  * place.
   */
 object StreamRunner {
 
@@ -24,22 +27,20 @@ object StreamRunner {
   // Each state partition costs a provider instance (and on RocksDB a
   // native store) plus per-batch delta/commit files; a constant tuned
   // for the worker-thread count (32) makes every micro-batch pay 32×
-  // those fixed costs even when a batch carries a few MB. The sizing
-  // below targets `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-  // (default 64 MB) of SOURCE bytes per state partition (×4 expansion
-  // for parquet→row decompression), clamped to [2, defaultParallelism]
-  // locally; a cluster deployment overrides the result with
-  // SPARK_GRAFT_STREAM_PARTITIONS (absolute) exactly like the other
-  // env-parameterised scale knobs. Results are partitioning-independent
-  // (hash-partitioned keyed state; every query's oracle sorts), so this
-  // only moves fixed cost, never semantics.
-
-  /** Bytes of pending stream sources registered since the last query
-    * start ([[parquetStream]] accumulates; [[withSizedStatePartitions]]
-    * consumes). Queries are constructed and started sequentially in
-    * Verify/Bench, so a plain atomic is enough.
-    */
-  private val pendingSourceBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+  // those fixed costs even when a batch carries a few MB. Every query
+  // started here is sized from its OWN file sources — the
+  // `StreamingRelation` leaves of its analyzed plan, however the
+  // stream was opened — so no state is carried from one query to the
+  // next. The sizing targets
+  // `spark.sql.adaptive.advisoryPartitionSizeInBytes` (default 64 MB)
+  // of SOURCE bytes per state partition (×4 expansion for
+  // parquet→row decompression), clamped to [min(8, par), par] with
+  // par = defaultParallelism; a cluster deployment overrides the
+  // result with SPARK_GRAFT_STREAM_PARTITIONS (absolute) exactly like
+  // the other env-parameterised scale knobs. Results are
+  // partitioning-independent (hash-partitioned keyed state; every
+  // query's oracle sorts), so this only moves fixed cost, never
+  // semantics.
 
   private def dirBytes(path: String): Long = {
     val p = java.nio.file.Paths.get(path)
@@ -54,6 +55,16 @@ object StreamRunner {
       else 0L
     } catch { case _: java.io.IOException => 0L }
   }
+
+  /** Bytes under the file-source paths of `stream`'s analyzed plan:
+    * one `StreamingRelation` leaf per source (a union has one per
+    * side, a source opened twice counts twice); a source without a
+    * path, such as a memory stream, counts 0.
+    */
+  private[graft] def sourceBytes(stream: DataFrame): Long =
+    stream.queryExecution.analyzed
+      .collect { case r: StreamingRelation => r.dataSource.options.get("path") }
+      .flatten.map(dirBytes).sum
 
   /** Shuffle-partition count for the streaming query whose sources
     * total `bytes` (see the sizing note above).
@@ -75,24 +86,6 @@ object StreamRunner {
       math.max(math.min(8L, hi), math.min(hi, target)).toInt
     }
 
-  /** Run `f` (which must construct AND fully execute a streaming
-    * query) with `spark.sql.shuffle.partitions` sized from the stream
-    * sources registered via [[parquetStream]] since the previous query,
-    * restoring the session's configured value afterwards so batch
-    * queries keep their own sizing.
-    */
-  def withSizedStatePartitions[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val bytes = pendingSourceBytes.getAndSet(0L)
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, sizedStatePartitions(spark, bytes).toString)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** Parquet file stream over a driver-generated table. The file
     * source is the sandbox stand-in for the reference's Kafka source
     * (S1/S2; no Kafka connector jar ships here) — rate limiting via
@@ -102,10 +95,7 @@ object StreamRunner {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val r = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    val dir = streamableDir(path)
-    // feed the scale-adaptive state-partition sizing (see above)
-    pendingSourceBytes.addAndGet(dirBytes(dir))
-    r.parquet(dir)
+    r.parquet(streamableDir(path))
   }
 
   /** `path|size|mtime` fingerprint of a parquet file or directory —
@@ -167,21 +157,22 @@ object StreamRunner {
     }
   }
 
-  /** Stage `events.parquet` as `n` parquet files split by
-    * `event_id % n`, with strictly increasing mtimes, so a
+  /** Stage `events.parquet` as `n` parquet files split by batch
+    * class, with strictly increasing mtimes, so a
     * `maxFilesPerTrigger=1` stream processes them as `n` micro-batches
     * in a deterministic, SQL-reproducible order (FileStreamSource
     * picks oldest-mtime first). This is the incremental-arrival
     * fixture for s11: the batch boundaries, the watermark schedule,
     * and the late-row drops it causes are all derivable in the DuckDB
-    * oracle from `event_id % n`.
-    */
-  /** Batch class of a row: `(event_id % mod) / div`. The default
-    * (`mod = n`, `div = 1`) is a plain modulo split; s12's updates
-    * side uses `(mod = 6n, div = 6)` so transcript updates (which all
-    * have `event_id ≡ 1 (mod 6)` and would otherwise collapse into one
-    * batch class) spread across every batch — that is what forces
-    * matches whose two sides arrive in DIFFERENT micro-batches.
+    * oracle from the batch class.
+    *
+    * The batch class of a row is `(event_id % mod) / div`. The default
+    * (`mod = n`, `div = 1`) is a plain `event_id % n` split; s12's
+    * updates side uses `(mod = 6n, div = 6)` so transcript updates
+    * (which all have `event_id ≡ 1 (mod 6)` and would otherwise
+    * collapse into one batch class) spread across every batch — that
+    * is what forces matches whose two sides arrive in DIFFERENT
+    * micro-batches.
     */
   def eventsBatchesDir(spark: SparkSession, path: String, n: Int,
       mod: Int = 0, div: Int = 1): String =
@@ -268,6 +259,14 @@ object StreamRunner {
   def runToMemory(stream: DataFrame, mode: String): DataFrame =
     runToMemoryCounted(stream, mode)._1
 
+  /** [[runToMemory]] + the number of micro-batches that actually
+    * consumed input rows — callers whose oracle encodes a specific
+    * batch schedule (s11's 2-batch arrival) assert on it instead of
+    * silently passing on a schedule the oracle doesn't model.
+    */
+  def runToMemoryCounted(stream: DataFrame, mode: String): (DataFrame, Int) =
+    runMemory(Seq(stream -> mode)).head
+
   /** Run several INDEPENDENT streaming DataFrames to completion
     * concurrently (each Trigger.AvailableNow into its own memory sink)
     * and return their batch results in order. Optimization guide §2.6
@@ -279,25 +278,61 @@ object StreamRunner {
     * non-blocking, so starting both and awaiting both overlaps those
     * costs while the per-query results (independent sources, sinks,
     * checkpoints, state) are byte-identical to the sequential run.
-    * All queries share one sized-partition scope (sized from every
-    * pending registered source).
+    * The queries run in one sized-partition scope, sized from the
+    * sources of all of them.
     */
-  def runAllToMemory(streams: Seq[(DataFrame, String)]): Seq[DataFrame] = {
-    require(streams.nonEmpty, "runAllToMemory needs at least one query")
+  def runAllToMemory(streams: Seq[(DataFrame, String)]): Seq[DataFrame] =
+    runMemory(streams).map(_._1)
+
+  /** Drain `stream` once (Trigger.AvailableNow) through the
+    * foreachBatch function `write`, checkpointing at `checkpoint` —
+    * the exactly-once and upsert sink queries' runner.
+    */
+  def runToSink(stream: DataFrame, checkpoint: String)(
+      write: (DataFrame, Long) => Unit): Unit =
+    drainAll(Seq(stream -> stream.writeStream
+      .foreachBatch(write)
+      .option("checkpointLocation", checkpoint)))
+
+  /** The memory-sink runs: each result is read off its `graft_mem_*`
+    * view with the count of micro-batches that consumed input, and the
+    * view is dropped once the frame is taken (the frame stays readable;
+    * the session catalog no longer pins the sink).
+    */
+  private def runMemory(streams: Seq[(DataFrame, String)]): Seq[(DataFrame, Int)] = {
+    require(streams.nonEmpty, "a memory-sink run needs at least one query")
     val spark = streams.head._1.sparkSession
-    withSizedStatePartitions(spark) {
-      val started = streams.map { case (df, mode) =>
-        val name = s"graft_mem_${counter.incrementAndGet()}"
-        val q = df.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        (name, q)
-      }
-      awaitAll(started.map(_._2))
-      started.map { case (name, _) => spark.table(name) }
+    val named = streams.map { case (df, mode) =>
+      (s"graft_mem_${counter.incrementAndGet()}", df, mode)
+    }
+    try
+      drainAll(named.map { case (name, df, mode) =>
+        df -> df.writeStream.format("memory").queryName(name).outputMode(mode)
+      }).map(q => (spark.table(q.name), q.recentProgress.count(_.numInputRows > 0)))
+    finally named.foreach { case (name, _, _) => spark.catalog.dropTempView(name) }
+  }
+
+  /** Start every writer with Trigger.AvailableNow and wait for all of
+    * them ([[awaitAll]]), with `spark.sql.shuffle.partitions` sized
+    * from the sources of the streams they write (see the sizing note
+    * above). The session's value is restored only after the queries
+    * end: each query clones the session's conf on its own thread, after
+    * `start()` returns. Batch queries keep their own sizing.
+    */
+  private def drainAll(
+      writers: Seq[(DataFrame, DataStreamWriter[Row])]): Seq[StreamingQuery] = {
+    val spark = writers.head._1.sparkSession
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      sizedStatePartitions(spark, writers.map(w => sourceBytes(w._1)).sum).toString)
+    try {
+      val queries = writers.map(_._2.trigger(Trigger.AvailableNow()).start())
+      awaitAll(queries)
+      queries
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
     }
   }
 
@@ -309,7 +344,7 @@ object StreamRunner {
     * behind, or being masked by, a sibling that happened to be awaited
     * first.
     */
-  private def awaitAll(queries: Seq[StreamingQuery]): Unit = {
+  private[graft] def awaitAll(queries: Seq[StreamingQuery]): Unit = {
     def stopQuietly(q: StreamingQuery): Unit =
       try q.stop() catch { case _: Throwable => () }
     val failures = scala.collection.mutable.ArrayBuffer.empty[Throwable]
@@ -331,27 +366,5 @@ object StreamRunner {
       failures.tail.foreach(first.addSuppressed)
       throw first
     }
-  }
-
-  /** [[runToMemory]] + the number of micro-batches that actually
-    * consumed input rows — callers whose oracle encodes a specific
-    * batch schedule (s11's 2-batch arrival) assert on it instead of
-    * silently passing on a schedule the oracle doesn't model.
-    */
-  def runToMemoryCounted(stream: DataFrame, mode: String): (DataFrame, Int) = {
-    val spark = stream.sparkSession
-    val name = s"graft_mem_${counter.incrementAndGet()}"
-    val q = withSizedStatePartitions(spark) {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-    val inputBatches = q.recentProgress.count(_.numInputRows > 0)
-    (spark.table(name), inputBatches)
   }
 }

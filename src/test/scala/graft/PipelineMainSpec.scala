@@ -205,4 +205,25 @@ class PipelineMainSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"unknown option ${a.head}"))
     }
   }
+
+  test("a failing query surfaces its own error, stops its siblings and detaches the listener") {
+    val spark = TestSpark.spark
+    val out = java.nio.file.Files.createTempDirectory("pipe_fail_").toString
+    graft.synth.ClipGen.stagedClips(spark, "/root/testdata/sf0.001").head(1)
+    val input = graft.synth.ClipGen.clipsTablePath("/root/testdata/sf0.001")
+    // the staged input holds unknown-codec clips: mapped fails on its
+    // first micro-batch while dedup, under --interval, would run forever
+    val opt = PipelineMain.parseArgs(Array("--interval", "1 second",
+      "--pipelines", "mapped,dedup", "--strict-max-failures", "0",
+      "--input", input, "--output", out))
+    val listenersBefore = spark.streams.listListeners().length
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      PipelineMain.run(spark, opt, PipelineMain.selectPipelines(opt))
+    }
+    assert(e.getMessage.contains("strict mode") || Option(e.getCause)
+      .exists(_.toString.contains("strict mode")), s"got: ${e.getMessage}")
+    assert(!spark.streams.active.exists(q => Option(q.name).exists(_.startsWith("graft_"))),
+      s"left running: ${spark.streams.active.map(_.name).mkString(", ")}")
+    assert(spark.streams.listListeners().length == listenersBefore)
+  }
 }
