@@ -287,25 +287,17 @@ object ScalingBench {
     try {
       val schema = graft.model.Schemas.events
       // events staged as 16 files, 1 per trigger: Kafka-partition-sized
-      // micro-batches instead of one monolith. Marker carries the same
-      // path|size|mtime fingerprint as ClipGen.stagedClips so a
-      // regenerated events.parquet re-stages instead of silently
-      // streaming stale rows.
+      // micro-batches instead of one monolith; a regenerated
+      // events.parquet re-stages instead of silently streaming stale
+      // rows
       val streamDir = java.nio.file.Paths
         .get(sys.props("java.io.tmpdir"), "graft_stream_events",
           java.nio.file.Paths.get(sfDir).getFileName.toString).toString
-      val marker = java.nio.file.Paths.get(streamDir + ".ok")
-      val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-      val fingerprint = graft.streaming.StreamRunner.sourceFingerprint(src)
-      graft.sink.FsUtil.withStagingLock(
-        java.nio.file.Paths.get(streamDir + ".lock")) {
-        val fresh = java.nio.file.Files.exists(marker) &&
-          new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fingerprint
-        if (!fresh) {
-          spark.read.parquet(s"$sfDir/events.parquet")
-            .repartition(16).write.mode("overwrite").parquet(streamDir)
-          java.nio.file.Files.write(marker, fingerprint.getBytes("UTF-8"))
-        }
+      graft.sink.FsUtil.staged(java.nio.file.Paths.get(streamDir),
+          graft.sink.FsUtil.sourceFingerprint(
+            java.nio.file.Paths.get(s"$sfDir/events.parquet"))) {
+        spark.read.parquet(s"$sfDir/events.parquet")
+          .repartition(16).write.mode("overwrite").parquet(streamDir)
       }
       import spark.implicits._
       val clips = ClipGen

@@ -166,7 +166,8 @@ object AudioCurationQueries {
     // emitted on event-time timeout. Shares q67's oracle verbatim (the
     // s21≡s22 twin discipline): the stateful fold is order-independent
     // (count + min), so the only schedule dependence is the row-level
-    // late filter — excluded by the single-data-batch assert.
+    // late filter — excluded by the runner's data-batch count (one:
+    // the source is read uncapped).
     QueryDef(
       "s28_stream_audio_curation",
       (s, d) => {
@@ -178,11 +179,7 @@ object AudioCurationQueries {
         val profiled = AudioCuration.profileStage(stream)
           .filter(AudioCuration.gate _)
           .withWatermark("event_time", "10 minutes")
-        val (out, nb) = StreamRunner.runToMemoryCounted(
-          AudioCuration.keepStage(profiled).toDF(), "append")
-        require(nb == 1,
-          s"s28 oracle parity assumes ONE data micro-batch; saw $nb")
-        out
+        StreamRunner.runToMemory(AudioCuration.keepStage(profiled).toDF(), "append")
           .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
           .orderBy(col("fp_f1"), col("fp_f2"))
       },

@@ -215,8 +215,6 @@ object CurationQueries {
     QueryDef(
       "s31_stream_embed_neardup",
       (s, d) => {
-        graft.streaming.StreamRunner
-          .assertSingleBatchInput(s"$d/embeddings.parquet")
         graft.streaming.TwsDedup.withRocksDB(s) {
           val stream = graft.streaming.StreamRunner.parquetStream(
             s, s"$d/embeddings.parquet", graft.model.Schemas.embeddings)
@@ -244,18 +242,12 @@ object CurationQueries {
       "s32_stream_embed_neardup_multibatch",
       (s, d) => {
         graft.streaming.TwsDedup.withRocksDB(s) {
-          val dir = graft.streaming.StreamRunner.batchesDir(
-            s, s"$d/embeddings.parquet", "vec_id", 3)
           val stream = graft.streaming.StreamRunner.parquetStream(
-            s, dir, graft.model.Schemas.embeddings,
-            maxFilesPerTrigger = Some(1))
+            s, s"$d/embeddings.parquet", graft.model.Schemas.embeddings,
+            batches = 3, splitBy = "vec_id")
           val flags = graft.streaming.StreamEmbedNearDup.stage(
             graft.streaming.StreamEmbedNearDup.bandedVecs(stream))
-          val (table, batches) = graft.streaming.StreamRunner
-            .runToMemoryCounted(flags.toDF(), "append")
-          require(batches == 3,
-            s"s32 oracle models exactly 3 input micro-batches, got $batches")
-          table
+          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
             .groupBy(col("vec_id"))
             .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
             .select(col("vec_id"), col("n_hit_bands"),

@@ -268,8 +268,6 @@ object DedupQueries {
     QueryDef(
       "s29_stream_neardup",
       (s, d) => {
-        graft.streaming.StreamRunner
-          .assertSingleBatchInput(s"$d/documents.parquet")
         graft.streaming.TwsDedup.withRocksDB(s) {
           val stream = graft.streaming.StreamRunner.parquetStream(
             s, s"$d/documents.parquet", graft.model.Schemas.documents)
@@ -317,18 +315,12 @@ object DedupQueries {
       "s30_stream_neardup_multibatch",
       (s, d) => {
         graft.streaming.TwsDedup.withRocksDB(s) {
-          val dir = graft.streaming.StreamRunner.batchesDir(
-            s, s"$d/documents.parquet", "doc_id", 3)
           val stream = graft.streaming.StreamRunner.parquetStream(
-            s, dir, graft.model.Schemas.documents,
-            maxFilesPerTrigger = Some(1))
+            s, s"$d/documents.parquet", graft.model.Schemas.documents,
+            batches = 3, splitBy = "doc_id")
           val flags = graft.streaming.StreamNearDup.stage(
             graft.streaming.StreamNearDup.bandedDocs(stream))
-          val (table, batches) = graft.streaming.StreamRunner
-            .runToMemoryCounted(flags.toDF(), "append")
-          require(batches == 3,
-            s"s30 oracle models exactly 3 input micro-batches, got $batches")
-          table
+          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
             .groupBy(col("doc_id"))
             .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
             .select(col("doc_id"), col("n_hit_bands"),

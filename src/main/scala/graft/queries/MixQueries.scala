@@ -407,8 +407,6 @@ object MixQueries {
     QueryDef(
       "s33_stream_decontam",
       (s, d) => {
-        graft.streaming.StreamRunner
-          .assertSingleBatchInput(s"$d/documents.parquet")
         val isBench =
           substring(md5(concat(lit("bm:"), col("doc_id").cast("string"))), 1, 1) === "0"
         // same staged-toks discipline as q73 (split evaluated once per
@@ -445,8 +443,6 @@ object MixQueries {
     QueryDef(
       "s34_stream_token_budget",
       (s, d) => {
-        graft.streaming.StreamRunner
-          .assertSingleBatchInput(s"$d/documents.parquet")
         graft.streaming.TwsDedup.withRocksDB(s) {
           val stream = graft.streaming.StreamRunner.parquetStream(
             s, s"$d/documents.parquet", graft.model.Schemas.documents)
@@ -471,18 +467,12 @@ object MixQueries {
       "s35_stream_token_budget_multibatch",
       (s, d) => {
         graft.streaming.TwsDedup.withRocksDB(s) {
-          val dir = graft.streaming.StreamRunner.batchesDir(
-            s, s"$d/documents.parquet", "doc_id", 3)
           val stream = graft.streaming.StreamRunner.parquetStream(
-            s, dir, graft.model.Schemas.documents,
-            maxFilesPerTrigger = Some(1))
+            s, s"$d/documents.parquet", graft.model.Schemas.documents,
+            batches = 3, splitBy = "doc_id")
           val admits = graft.streaming.StreamTokenBudget.stage(
             graft.streaming.StreamTokenBudget.docTokens(stream), TokenBudget)
-          val (table, batches) = graft.streaming.StreamRunner
-            .runToMemoryCounted(admits.toDF(), "append")
-          require(batches == 3,
-            s"s35 oracle models exactly 3 input micro-batches, got $batches")
-          table
+          graft.streaming.StreamRunner.runToMemory(admits.toDF(), "append")
             .select(col("doc_id"), col("source"), col("n_tok"),
               col("cum_tokens"), col("admitted"))
             .orderBy(col("doc_id"))
@@ -526,8 +516,6 @@ object MixQueries {
     QueryDef(
       "s36_stream_seq_pack",
       (s, d) => {
-        graft.streaming.StreamRunner
-          .assertSingleBatchInput(s"$d/documents.parquet")
         graft.streaming.TwsDedup.withRocksDB(s) {
           val stream = graft.streaming.StreamRunner.parquetStream(
             s, s"$d/documents.parquet", graft.model.Schemas.documents)
@@ -548,18 +536,12 @@ object MixQueries {
       "s37_stream_seq_pack_multibatch",
       (s, d) => {
         graft.streaming.TwsDedup.withRocksDB(s) {
-          val dir = graft.streaming.StreamRunner.batchesDir(
-            s, s"$d/documents.parquet", "doc_id", 3)
           val stream = graft.streaming.StreamRunner.parquetStream(
-            s, dir, graft.model.Schemas.documents,
-            maxFilesPerTrigger = Some(1))
+            s, s"$d/documents.parquet", graft.model.Schemas.documents,
+            batches = 3, splitBy = "doc_id")
           val pos = graft.streaming.StreamTokenBudget.positions(
             graft.streaming.StreamTokenBudget.docTokens(stream))
-          val (table, batches) = graft.streaming.StreamRunner
-            .runToMemoryCounted(pos, "append")
-          require(batches == 3,
-            s"s37 oracle models exactly 3 input micro-batches, got $batches")
-          packSpans(table)
+          packSpans(graft.streaming.StreamRunner.runToMemory(pos, "append"))
         }
       },
       Some("WITH " + docsBaseCte + ",\n" + packSqlFrom("doc_id % 3, doc_id"))),
@@ -576,8 +558,6 @@ object MixQueries {
     QueryDef(
       "s38_stream_topk",
       (s, d) => {
-        graft.streaming.StreamRunner
-          .assertSingleBatchInput(s"$d/documents.parquet")
         graft.streaming.TwsDedup.withRocksDB(s) {
           val stream = graft.streaming.StreamRunner.parquetStream(
             s, s"$d/documents.parquet", graft.model.Schemas.documents)
@@ -601,18 +581,12 @@ object MixQueries {
       "s39_stream_topk_multibatch",
       (s, d) => {
         graft.streaming.TwsDedup.withRocksDB(s) {
-          val dir = graft.streaming.StreamRunner.batchesDir(
-            s, s"$d/documents.parquet", "doc_id", 3)
           val stream = graft.streaming.StreamRunner.parquetStream(
-            s, dir, graft.model.Schemas.documents,
-            maxFilesPerTrigger = Some(1))
+            s, s"$d/documents.parquet", graft.model.Schemas.documents,
+            batches = 3, splitBy = "doc_id")
           val flags = graft.streaming.StreamTopK.stage(
             graft.streaming.StreamTopK.rankedDocs(stream))
-          val (table, batches) = graft.streaming.StreamRunner
-            .runToMemoryCounted(flags.toDF(), "append")
-          require(batches == 3,
-            s"s39 oracle models exactly 3 input micro-batches, got $batches")
-          table
+          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
             .select(col("doc_id"), col("source"), col("key"), col("in_topk"))
             .orderBy(col("doc_id"))
         }
@@ -631,8 +605,6 @@ object MixQueries {
     QueryDef(
       "s40_stream_sample_hash",
       (s, d) => {
-        graft.streaming.StreamRunner
-          .assertSingleBatchInput(s"$d/documents.parquet")
         val stream = graft.streaming.StreamRunner.parquetStream(
           s, s"$d/documents.parquet", graft.model.Schemas.documents)
         val kept = stream

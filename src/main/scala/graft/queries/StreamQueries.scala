@@ -229,7 +229,8 @@ object StreamQueries {
               |FROM clips GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin)),
 
     // ---------------------------------- s02 keyed stateful dedup (D1)
-    // Oracle parity assumes ONE AvailableNow batch (asserted below):
+    // Oracle parity assumes ONE AvailableNow batch (the default
+    // schedule, checked by parquetStream and the runner):
     // dedupFn numbers occurrences in event-time order WITHIN a batch
     // but in arrival order ACROSS batches (see Model.scala's
     // cross-batch semantics note), while the oracle numbers by global
@@ -238,7 +239,6 @@ object StreamQueries {
       "s02_stream_dedup",
       (s, d) => {
         import s.implicits._
-        StreamRunner.assertSingleBatchInput(s"$d/events.parquet")
         val clips = metaProjection(
           StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
           .withColumn("event_time", col("event_time").cast("timestamp"))
@@ -259,7 +259,6 @@ object StreamQueries {
       "s10_stream_dedup_tws",
       (s, d) => {
         import s.implicits._
-        StreamRunner.assertSingleBatchInput(s"$d/events.parquet")
         graft.streaming.TwsDedup.withRocksDB(s) {
           val clips = metaProjection(
             StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
@@ -282,7 +281,6 @@ object StreamQueries {
       "s21_session_merge",
       (s, d) => {
         import s.implicits._
-        StreamRunner.assertSingleBatchInput(s"$d/events.parquet")
         val clips = metaProjection(
           StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
           .withColumn("event_time", col("event_time").cast("timestamp"))
@@ -305,7 +303,6 @@ object StreamQueries {
       "s22_session_merge_tws",
       (s, d) => {
         import s.implicits._
-        StreamRunner.assertSingleBatchInput(s"$d/events.parquet")
         graft.streaming.TwsDedup.withRocksDB(s) {
           val clips = metaProjection(
             StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
@@ -334,19 +331,14 @@ object StreamQueries {
       "s25_session_merge_multibatch",
       (s, d) => {
         import s.implicits._
-        val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, dir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
           .withColumn("event_time", col("event_time").cast("timestamp"))
           .withWatermark("event_time", "12 hours")
           .as[ClipMeta]
         val merged = ClipPipeline.sessionMergeStage(clips)
-        val (table, batches) =
-          StreamRunner.runToMemoryCounted(merged.toDF(), "append")
-        require(batches == 3,
-          s"s25 oracle models exactly 3 input micro-batches, got $batches")
-        table
+        StreamRunner.runToMemory(merged.toDF(), "append")
           .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
           .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
           .orderBy(col("clip_id"), col("session_start"))
@@ -362,20 +354,15 @@ object StreamQueries {
       "s26_session_merge_tws_multibatch",
       (s, d) => {
         import s.implicits._
-        val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
         graft.streaming.TwsDedup.withRocksDB(s) {
           val clips = metaProjection(
-            StreamRunner.parquetStream(s, dir, eventsSchema,
-              maxFilesPerTrigger = Some(1)))
+            StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+              batches = 3))
             .withColumn("event_time", col("event_time").cast("timestamp"))
             .withWatermark("event_time", "12 hours")
             .as[ClipMeta]
           val merged = graft.streaming.TwsSessionMerge.sessionMergeStageTws(clips)
-          val (table, batches) =
-            StreamRunner.runToMemoryCounted(merged.toDF(), "append")
-          require(batches == 3,
-            s"s26 oracle models exactly 3 input micro-batches, got $batches")
-          table
+          StreamRunner.runToMemory(merged.toDF(), "append")
             .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
             .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
             .orderBy(col("clip_id"), col("session_start"))
@@ -386,7 +373,7 @@ object StreamQueries {
     // ---------------- s11 keyed dedup across THREE micro-batches (D1)
     // The incremental-arrival case the single-batch queries can't
     // exercise: event_id % 3 splits events into three files processed
-    // as three micro-batches (StreamRunner.eventsBatchesDir; the query
+    // as three micro-batches (parquetStream's `batches = 3`; the runner
     // REQUIRES exactly 3 input batches). The oracle reproduces the
     // full schedule in SQL, including Spark's one-batch watermark LAG:
     // the late filter of batch N uses the watermark recorded in batch
@@ -407,20 +394,15 @@ object StreamQueries {
       "s11_stream_dedup_multibatch",
       (s, d) => {
         import s.implicits._
-        val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, dir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
           .withColumn("event_time", col("event_time").cast("timestamp"))
           .withWatermark("event_time", "12 hours")
           .as[ClipMeta]
         val decided = ClipPipeline.dedupStage(clips,
           stateTtlMs = 1000L * 86400 * 365)
-        val (table, batches) =
-          StreamRunner.runToMemoryCounted(decided.toDF(), "append")
-        require(batches == 3,
-          s"s11 oracle models exactly 3 input micro-batches, got $batches")
-        table
+        StreamRunner.runToMemory(decided.toDF(), "append")
           .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
           .orderBy(col("clip_id"), col("occurrence"))
       },
@@ -439,19 +421,14 @@ object StreamQueries {
       (s, d) => {
         import s.implicits._
         graft.streaming.TwsDedup.withRocksDB(s) {
-          val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
           val clips = metaProjection(
-            StreamRunner.parquetStream(s, dir, eventsSchema,
-              maxFilesPerTrigger = Some(1)))
+            StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+              batches = 3))
             .withColumn("event_time", col("event_time").cast("timestamp"))
             .withWatermark("event_time", "12 hours")
             .as[ClipMeta]
           val decided = graft.streaming.TwsDedup.dedupStageTws(clips)
-          val (table, batches) =
-            StreamRunner.runToMemoryCounted(decided.toDF(), "append")
-          require(batches == 3,
-            s"s18 oracle models exactly 3 input micro-batches, got $batches")
-          table
+          StreamRunner.runToMemory(decided.toDF(), "append")
             .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
             .orderBy(col("clip_id"), col("occurrence"))
         }
@@ -476,26 +453,20 @@ object StreamQueries {
     QueryDef(
       "s12_stream_join_multibatch",
       (s, d) => {
-        val clipsDir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
-        val updDir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3,
-          mod = 18, div = 6)
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, clipsDir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
           .withColumn("event_time", col("event_time").cast("timestamp"))
           .drop("sr_hz", "dur_ms", "codec")
         val updates = ClipGen.updatesProjection(
-          StreamRunner.parquetStream(s, updDir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3, mod = 18, div = 6))
           .withColumn("u_event_time", col("u_event_time").cast("timestamp"))
         val joined = ClipPipeline
           .transcriptUpdateJoin(clips, updates, "40 days", "10 MINUTES")
           .select(col("clip_id"), col("event_id"), col("event_time"),
             col("u_transcript"), col("u_event_time"))
-        val (table, batches) = StreamRunner.runToMemoryCounted(joined, "append")
-        require(batches >= 3,
-          s"s12 expects >=3 input micro-batches (2 sources x 3 files), got $batches")
-        table
+        StreamRunner.runToMemory(joined, "append")
           .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
           .withColumn("u_event_time", col("u_event_time").cast("timestamp_ntz"))
           .orderBy(col("clip_id"), col("event_id"), col("u_event_time"))
@@ -529,9 +500,6 @@ object StreamQueries {
     QueryDef(
       "s19_stream_left_join_multibatch",
       (s, d) => {
-        val clipsDir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
-        val updDir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3,
-          mod = 18, div = 6)
         // the oracle models exactly 3 PAIRED micro-batches with every
         // class populated on both sides — refuse anything else loudly
         val ev = s.read.parquet(s"$d/events.parquet")
@@ -542,22 +510,19 @@ object StreamQueries {
         require(classes.getLong(0) == 3 && classes.getLong(1) == 3,
           s"s19 needs all 3 batch classes non-empty on both sides, got $classes")
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, clipsDir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
           .withColumn("event_time", col("event_time").cast("timestamp"))
           .drop("sr_hz", "dur_ms", "codec")
         val updates = ClipGen.updatesProjection(
-          StreamRunner.parquetStream(s, updDir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3, mod = 18, div = 6))
           .withColumn("u_event_time", col("u_event_time").cast("timestamp"))
         val joined = ClipPipeline
           .transcriptUpdateLeftJoin(clips, updates, "5 days", "10 MINUTES")
           .select(col("clip_id"), col("event_id"), col("event_time"),
             col("u_transcript"), col("u_event_time"))
-        val (table, batches) = StreamRunner.runToMemoryCounted(joined, "append")
-        require(batches == 3,
-          s"s19 oracle models exactly 3 paired micro-batches, got $batches")
-        table
+        StreamRunner.runToMemory(joined, "append")
           .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
           .withColumn("u_event_time", col("u_event_time").cast("timestamp_ntz"))
           .orderBy(col("clip_id"), col("event_id"),
@@ -651,17 +616,13 @@ object StreamQueries {
     QueryDef(
       "s14_stream_tumbling_multibatch",
       (s, d) => {
-        val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, dir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
           .withColumn("event_time", col("event_time").cast("timestamp"))
           .withWatermark("event_time", "12 hours")
         val rolled = ClipPipeline.tumblingRollup(clips, "1 day")
-        val (table, batches) = StreamRunner.runToMemoryCounted(rolled, "append")
-        require(batches == 3,
-          s"s14 oracle models exactly 3 input micro-batches, got $batches")
-        table
+        StreamRunner.runToMemory(rolled, "append")
           .withColumn("window_start", col("window_start").cast("timestamp_ntz"))
           .withColumn("window_end", col("window_end").cast("timestamp_ntz"))
           .orderBy(col("window_start"), col("codec"))
@@ -697,17 +658,13 @@ object StreamQueries {
     QueryDef(
       "s16_stream_tumbling_update",
       (s, d) => {
-        val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, dir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
           .withColumn("event_time", col("event_time").cast("timestamp"))
           .withWatermark("event_time", "12 hours")
         val rolled = ClipPipeline.tumblingRollup(clips, "1 day")
-        val (table, batches) = StreamRunner.runToMemoryCounted(rolled, "update")
-        require(batches == 3,
-          s"s16 oracle models exactly 3 input micro-batches, got $batches")
-        table
+        StreamRunner.runToMemory(rolled, "update")
           .withColumn("window_start", col("window_start").cast("timestamp_ntz"))
           .withColumn("window_end", col("window_end").cast("timestamp_ntz"))
           .orderBy(col("window_start"), col("codec"), col("n_clips"))
@@ -749,16 +706,12 @@ object StreamQueries {
     QueryDef(
       "s15_stream_session_multibatch",
       (s, d) => {
-        val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
-        val ev = StreamRunner.parquetStream(s, dir, eventsSchema,
-            maxFilesPerTrigger = Some(1))
+        val ev = StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3)
           .withColumn("ts", col("ts").cast("timestamp"))
           .withWatermark("ts", "12 hours")
         val sessions = ClipPipeline.sessionRollup(ev, "ts", "user_id", "30 minutes")
-        val (table, batches) = StreamRunner.runToMemoryCounted(sessions, "append")
-        require(batches == 3,
-          s"s15 oracle models exactly 3 input micro-batches, got $batches")
-        table
+        StreamRunner.runToMemory(sessions, "append")
           .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
           .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
           .orderBy(col("user_id"), col("session_start"))
@@ -843,7 +796,6 @@ object StreamQueries {
     QueryDef(
       "s09_stream_left_join",
       (s, d) => {
-        StreamRunner.assertSingleBatchInput(s"$d/events.parquet")
         val evB = s.read.parquet(s"$d/events.parquet")
         val m = evB.agg(
           max(col("ts")).as("m_all"),
@@ -900,7 +852,6 @@ object StreamQueries {
     QueryDef(
       "s24_stream_full_join",
       (s, d) => {
-        StreamRunner.assertSingleBatchInput(s"$d/events.parquet")
         val evB = s.read.parquet(s"$d/events.parquet")
         // the clip-side watermark advances from the THINNED stream
         // (event_id % 5 ≠ 0, see below), so the cutoff must use that
@@ -959,7 +910,6 @@ object StreamQueries {
     QueryDef(
       "s27_stream_full_join_bucketed",
       (s, d) => {
-        StreamRunner.assertSingleBatchInput(s"$d/events.parquet")
         val evB = s.read.parquet(s"$d/events.parquet")
         val m = evB.agg(
           max(when(col("event_id") % 5 =!= 0, col("ts"))).as("m_clip"),
@@ -1043,15 +993,14 @@ object StreamQueries {
     QueryDef(
       "s17_sink_multibatch",
       (s, d) => {
-        val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
         // process-scoped sink work dir: no leak per pass (own dir is
         // wiped, dead-pid siblings reaped) and no cross-JVM race (a
         // FIXED shared dir wiped here would delete a concurrent
         // Verify/Bench run's live checkpoint mid-query)
         val outDir = graft.sink.FsUtil.processScopedWorkDir("graft_sink_mb", d)
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, dir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
         val sink = new ExactlyOnceSink(outDir, Seq("event_id"))
         StreamRunner.runToSink(clips, s"$outDir/_checkpoint")(sink.write)
         require(sink.committedBatchIds.size == 3,
@@ -1083,18 +1032,15 @@ object StreamQueries {
     QueryDef(
       "s20_stream_union_sink",
       (s, d) => {
-        val clipsDir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
-        val updDir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3,
-          mod = 18, div = 6)
         val outDir = graft.sink.FsUtil.processScopedWorkDir("graft_sink_union", d)
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, clipsDir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
           .select(col("clip_id"), lit("clip").as("kind"),
             col("transcript").as("payload"), col("event_time"))
         val updates = ClipGen.updatesProjection(
-          StreamRunner.parquetStream(s, updDir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3, mod = 18, div = 6))
           .select(col("clip_id"), lit("update").as("kind"),
             col("u_transcript").as("payload"),
             col("u_event_time").as("event_time"))
@@ -1132,11 +1078,10 @@ object StreamQueries {
     QueryDef(
       "s23_stream_upsert",
       (s, d) => {
-        val dir = StreamRunner.eventsBatchesDir(s, s"$d/events.parquet", 3)
         val outDir = graft.sink.FsUtil.processScopedWorkDir("graft_sink_upsert", d)
         val clips = metaProjection(
-          StreamRunner.parquetStream(s, dir, eventsSchema,
-            maxFilesPerTrigger = Some(1)))
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
         val sink = new graft.sink.UpsertSink(outDir, Seq("clip_id"), "event_id")
         StreamRunner.runToSink(clips, s"$outDir/_checkpoint")(sink.write)
         val commitCount = {

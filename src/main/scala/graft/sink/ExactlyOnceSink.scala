@@ -201,89 +201,3 @@ object ExactlyOnceSink {
       case e: Exception => Left(s"$file: ${e.getMessage}")
     }
 }
-
-/** Shared filesystem helpers for the sink commit protocols. */
-object FsUtil {
-  def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val stream = Files.list(p)
-      try stream.iterator.asScala.toSeq.foreach(deleteRecursively)
-      finally stream.close()
-    }
-    Files.deleteIfExists(p)
-  }
-
-  private val jvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Per-SF sink WORK dir for a query family, scoped to THIS process:
-    * `<tmp>/<family>/<sf>-pid<pid>`. A fixed shared dir wiped at query
-    * start leaks nothing but races concurrent JVMs (one Verify wipes
-    * the other's live `_checkpoint` mid-query — no lock can fix that,
-    * the wipe itself is the conflict); a fresh temp dir per invocation
-    * is concurrency-safe but leaks one sink copy per pass. The
-    * process-scoped dir is both: the caller's own dir is wiped on
-    * every invocation (one process runs its queries sequentially), and
-    * sibling dirs whose owning pid is DEAD are reaped here, so disk
-    * holds at most one copy per LIVE process.
-    */
-  def processScopedWorkDir(family: String, sfDir: String): String = {
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val parent = Paths.get(sys.props("java.io.tmpdir"), family)
-    val pid = ProcessHandle.current().pid()
-    val mine = parent.resolve(s"$sfName-pid$pid")
-    Files.createDirectories(parent)
-    // reap siblings owned by dead processes (any SF — the pid suffix
-    // is authoritative); never touch a live process's dir
-    // Each reap is best-effort: two live JVMs may race to reap the same
-    // dead sibling, and the loser's Files.list/delete hits paths the
-    // winner already removed (NoSuchFileException). An all-digit pid
-    // suffix beyond Long range would also throw in toLong. Neither
-    // failure is ours to surface — the dir is either gone or someone
-    // else's problem next pass.
-    val stream = Files.list(parent)
-    try stream.iterator.asScala.foreach { p =>
-      try {
-        val name = p.getFileName.toString
-        val idx = name.lastIndexOf("-pid")
-        if (idx >= 0) {
-          val owner = name.substring(idx + 4)
-          val alive = owner.forall(_.isDigit) && owner.nonEmpty &&
-            ProcessHandle.of(owner.toLong).map[java.lang.Boolean](h => h.isAlive)
-              .orElse(java.lang.Boolean.FALSE)
-          if (!alive) FsUtil.deleteRecursively(p)
-        }
-      } catch {
-        case _: java.nio.file.NoSuchFileException | _: NumberFormatException
-            | _: java.io.UncheckedIOException => ()
-      }
-    } finally stream.close()
-    FsUtil.deleteRecursively(mine) // own previous pass (same pid, sequential)
-    mine.toString
-  }
-
-  /** Cross-PROCESS exclusive section for the shared /tmp staging dirs
-    * (clip table, binary-file fixtures, events batches): two JVMs
-    * staging the same SF concurrently — e.g. Verify and Bench — could
-    * otherwise interleave deleteRecursively/write under the
-    * marker-only guard and one would read a partially staged dir. A
-    * JVM-wide monitor per lock path wraps the OS FileLock because a
-    * second lock attempt on the same file from the SAME JVM throws
-    * OverlappingFileLockException rather than blocking. Callers must
-    * re-run their stale check INSIDE the lock (the winner may have
-    * staged while we waited).
-    */
-  def withStagingLock[T](lockFile: Path)(f: => T): T = {
-    val mon = jvmLocks.computeIfAbsent(lockFile.toString, _ => new Object)
-    mon.synchronized {
-      if (lockFile.getParent != null) Files.createDirectories(lockFile.getParent)
-      val ch = java.nio.channels.FileChannel.open(lockFile,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val l = ch.lock()
-        try f finally l.release()
-      } finally ch.close()
-    }
-  }
-}

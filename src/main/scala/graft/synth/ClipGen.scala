@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.audio.Codecs
 import graft.model.{Clip, TranscriptUpdate}
+import graft.sink.FsUtil
 
 /** Deterministic synthetic clip tables (seed-free pure arithmetic so the
   * same rows appear on every machine / JVM / partition layout).
@@ -137,38 +138,30 @@ object ClipGen {
         java.nio.file.Paths.get(sfDir).getFileName.toString)
       .toString
 
-  /** The clip table materialized as parquet — THE engine input table
-    * per BASELINE.json `input_hint` (clip_id, bytes, sr_hz, dur_ms,
-    * codec, transcript [, event_time]). Synthesized once per scale
-    * factor (markers make concurrent/repeat calls idempotent); all
-    * decode-pipeline queries and benches read binary payloads from
-    * here, so decode throughput measures decode, not synthesis.
-    */
-  /** Fingerprint of the source table a staged copy was derived from —
-    * a stale cache (source regenerated, or a different dataset sharing
-    * the basename) must re-stage, not silently serve old rows.
-    */
-  /** Bump when the synthesis/encode/expected-stat derivation changes:
-    * the fingerprint only watches the SOURCE table, so without a code
-    * version a staged copy built by older synth code would be served
-    * as "fresh" forever.
-    */
   /** Fixed staged-table fan-out (see the comment at the staging
     * write): the layout serves every consumer, not the stager.
     */
   private val StagedParts = 64
 
+  /** Bump when the synthesis/encode/expected-stat derivation changes:
+    * the fingerprint only watches the SOURCE table, so without a code
+    * version a staged copy built by older synth code would be served
+    * as "fresh" forever.
+    */
   private val SynthVersion = s"synth-v6b-p$StagedParts" // v6: audio-fingerprint ground truth in the expected table (b: full-grid scan)
 
-  def sourceFingerprint(sfDir: String): String = {
-    val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
+  /** Fingerprint of the source table a staged copy was derived from —
+    * a stale cache (source regenerated, or a different dataset sharing
+    * the basename) must re-stage, not silently serve old rows.
+    */
+  def sourceFingerprint(sfDir: String): String =
     // java.version is part of the fingerprint because the expected-stat
     // side table holds transcendental-math ground truth (tonePower's
     // cos/sin accumulation): a JVM/libm change between staging and an
     // engine run could move a value across a round(3) midpoint, so the
     // ground truth must be re-derived on the runtime that checks it
-    s"${sfDir}|${java.nio.file.Files.size(src)}|${java.nio.file.Files.getLastModifiedTime(src).toMillis}|$SynthVersion|jvm=${System.getProperty("java.version")}"
-  }
+    FsUtil.sourceFingerprint(java.nio.file.Paths.get(s"$sfDir/events.parquet")) +
+      s"|$SynthVersion|jvm=${System.getProperty("java.version")}"
 
   /** Side table written at staging time next to the clip table:
     * per-clip EXPECTED decode statistics computed by the independent
@@ -182,19 +175,18 @@ object ClipGen {
   def clipsExpectedPath(sfDir: String): String =
     clipsTablePath(sfDir) + "_expected"
 
+  /** The clip table materialized as parquet — THE engine input table
+    * per BASELINE.json `input_hint` (clip_id, bytes, sr_hz, dur_ms,
+    * codec, transcript [, event_time]). Synthesized once per scale
+    * factor ([[FsUtil.staged]] makes concurrent/repeat calls
+    * idempotent); all decode-pipeline queries and benches read binary
+    * payloads from here, so decode throughput measures decode, not
+    * synthesis.
+    */
   def stagedClips(spark: SparkSession, sfDir: String): Dataset[Clip] = {
     import spark.implicits._
     val dir = clipsTablePath(sfDir)
-    val marker = java.nio.file.Paths.get(dir + ".ok")
-    // cross-process staging lock: the stale check runs INSIDE it, so a
-    // second JVM (Verify vs Bench) blocks until the winner finishes and
-    // then sees the fresh marker instead of a half-written dir
-    graft.sink.FsUtil.withStagingLock(java.nio.file.Paths.get(dir + ".lock")) {
-    val fp = sourceFingerprint(sfDir)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fp
-    if (!fresh) {
-      java.nio.file.Files.deleteIfExists(marker)
+    FsUtil.staged(java.nio.file.Paths.get(dir), sourceFingerprint(sfDir)) {
       clips(spark, sfDir)
         // FIXED fan-out, not the stager's defaultParallelism: the
         // staged layout is shared by every consumer, and whoever
@@ -285,8 +277,6 @@ object ClipGen {
           col("tone_detected"), col("fp_f1"), col("fp_f2"))
         .repartition(StagedParts)
         .write.mode("overwrite").parquet(clipsExpectedPath(sfDir))
-      java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
-    }
     }
     spark.read.parquet(dir).as[Clip]
   }
@@ -309,15 +299,7 @@ object ClipGen {
     import java.nio.file.{Files, Paths}
     val dir = Paths.get(sys.props("java.io.tmpdir"), "graft_binfiles",
       Paths.get(sfDir).getFileName.toString)
-    val marker = Paths.get(dir.toString + ".ok")
-    graft.sink.FsUtil.withStagingLock(Paths.get(dir.toString + ".lock")) {
-    val fp = sourceFingerprint(sfDir) + "|binfiles-v2"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == fp
-    if (!fresh) {
-      Files.deleteIfExists(marker)
-      graft.sink.FsUtil.deleteRecursively(dir)
-      Files.createDirectories(dir)
+    FsUtil.staged(dir, sourceFingerprint(sfDir) + "|binfiles-v2") {
       val target = dir.toString
       import spark.implicits._
       clipsMeta(spark, sfDir)
@@ -331,8 +313,6 @@ object ClipGen {
             Files.write(Paths.get(target, s"${us}_${codec}_$clipId.bin"), bytes)
           }
         }
-      Files.write(marker, fp.getBytes("UTF-8"))
-    }
     }
     dir.toString
   }

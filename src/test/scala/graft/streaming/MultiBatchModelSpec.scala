@@ -85,7 +85,7 @@ class MultiBatchModelSpec extends AnyFunSuite {
 
   /** One batch-per-file staging dir with ordered mtimes (shared by
     * the single-source and join runners; streams closed like
-    * StreamRunner.eventsBatchesDir does).
+    * StreamRunner.parquetStream's n-batch staging does).
     */
   private def stageBatchFiles(batchDfs: Seq[DataFrame]): String = {
     import java.nio.file.{Files, Paths}

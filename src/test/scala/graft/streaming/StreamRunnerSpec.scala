@@ -49,8 +49,7 @@ class StreamRunnerSpec extends AnyFunSuite {
     spark.range(10).write.parquet(s"$base/in")
     def source = spark.readStream.schema("id LONG").parquet(s"$base/in")
     val one = StreamRunner.runToMemory(source, "append")
-    val (doubled, batches) =
-      StreamRunner.runToMemoryCounted(source.select((col("id") * 2).as("id")), "append")
+    val doubled = StreamRunner.runToMemory(source.select((col("id") * 2).as("id")), "append")
     val all = StreamRunner.runAllToMemory(Seq(
       source -> "append",
       source.agg(sum(col("id")).as("total")) -> "complete"))
@@ -59,15 +58,17 @@ class StreamRunnerSpec extends AnyFunSuite {
     assert(left.isEmpty, s"memory-sink views left behind: ${left.mkString(", ")}")
     assert(one.as[Long].collect().sorted.toSeq == (0L until 10L))
     assert(doubled.as[Long].collect().sorted.toSeq == (0L until 10L).map(_ * 2))
-    assert(batches == 1)
     assert(all(0).orderBy(col("id")).as[Long].collect().toSeq == (0L until 10L))
     assert(all(1).as[Long].collect().toSeq == Seq(45L))
   }
 
   test("a query's source bytes are the bytes of its own source dirs, however it was opened") {
     val base = Files.createTempDirectory("srcbytes_").toString
-    Seq("built" -> 50, "sized" -> 400, "plain" -> 3000)
-      .foreach { case (d, n) => spark.range(n).write.parquet(s"$base/$d") }
+    // parquetStream's default (one-batch) schedule takes one-file inputs
+    Seq("built" -> 50, "sized" -> 400).foreach { case (d, n) =>
+      spark.range(n).coalesce(1).write.parquet(s"$base/$d")
+    }
+    spark.range(3000).write.parquet(s"$base/plain")
     def dirBytes(d: String): Long = {
       val files = Files.list(Paths.get(base, d))
       try files.iterator.asScala.filter(Files.isRegularFile(_))
@@ -98,5 +99,97 @@ class StreamRunnerSpec extends AnyFunSuite {
     assert(counts.keySet.subsetOf(allowed),
       s"streaming queries started outside StreamRunner: ${(counts -- allowed).mkString(", ")}")
     assert(counts.get("PipelineMain.scala").contains(1), s"PipelineMain: $counts")
+  }
+
+  /** `rows(i)` rows of `id` in file `f<i>.parquet` under `dir`, with
+    * increasing mtimes (the order a capped file stream reads them in).
+    */
+  private def fileLayout(dir: Path, rows: Seq[Int]): Unit = {
+    Files.createDirectories(dir)
+    rows.zipWithIndex.foreach { case (n, i) =>
+      val stage = dir.resolveSibling(s"${dir.getFileName}_stage$i")
+      spark.range(n).coalesce(1).write.parquet(stage.toString)
+      val parts = Files.list(stage)
+      val part = try parts.iterator.asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get finally parts.close()
+      val target = dir.resolve(s"f$i.parquet")
+      Files.move(part, target)
+      Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 5000L))
+    }
+  }
+
+  test("the runner derives a query's data micro-batches from its sources' files and caps") {
+    val base = Files.createTempDirectory("expected_batches_")
+    fileLayout(base.resolve("three"), Seq(5, 5, 5))
+    Files.write(base.resolve("three").resolve("_SUCCESS"), Array.emptyByteArray)
+    Files.write(base.resolve("three").resolve(".hidden"), Array.emptyByteArray)
+    fileLayout(base.resolve("one"), Seq(5))
+    def open(d: String, cap: Option[(String, Int)]) = {
+      val r = spark.readStream.schema("id LONG")
+      cap.foreach { case (k, v) => r.option(k, v) }
+      r.parquet(base.resolve(d).toString)
+    }
+    val capped = open("three", Some("maxfilespertrigger" -> 1))
+    assert(StreamRunner.expectedDataBatches(capped).contains(3))
+    assert(StreamRunner.expectedDataBatches(open("three", Some("maxFilesPerTrigger" -> 2)))
+      .contains(2))
+    assert(StreamRunner.expectedDataBatches(open("three", None)).contains(1))
+    assert(StreamRunner.expectedDataBatches(capped.unionByName(open("one", None))).contains(3))
+  }
+
+  test("a run whose data micro-batches differ from what its sources imply fails naming both counts") {
+    val dir = Files.createTempDirectory("short_schedule_").resolve("in")
+    // three files read one per trigger imply 3 data batches, but the
+    // middle file holds no rows, so only 2 batches carry input
+    fileLayout(dir, Seq(4, 0, 4))
+    val stream = spark.readStream.schema("id LONG")
+      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+    val e = intercept[IllegalStateException](StreamRunner.runToMemory(stream, "append"))
+    assert(e.getMessage.contains("ran 2 data micro-batches"), e.getMessage)
+    assert(e.getMessage.contains("imply 3"), e.getMessage)
+    assert(e.getMessage.contains("graft_mem_"), e.getMessage)
+  }
+
+  test("a staged copy is rebuilt only when its fingerprint changes or its last build failed") {
+    import graft.sink.FsUtil
+    val dir = Files.createTempDirectory("staged_").resolve("copy")
+    var builds = 0
+    def stage(fp: String): Unit = FsUtil.staged(dir, fp) {
+      builds += 1
+      Files.write(dir.resolve(s"data$builds"), Array[Byte](1))
+    }
+    stage("v1")
+    stage("v1")
+    assert(builds == 1, "an unchanged fingerprint re-ran the build")
+    stage("v2")
+    assert(builds == 2, "a changed fingerprint did not re-run the build")
+    val left = Files.list(dir)
+    try assert(left.iterator.asScala.map(_.getFileName.toString).toSeq == Seq("data2"),
+      "the rebuild did not start from an empty dir")
+    finally left.close()
+    intercept[IllegalStateException](FsUtil.staged(dir, "v3") {
+      throw new IllegalStateException("build failed")
+    })
+    assert(!Files.exists(Paths.get(s"$dir.ok")), "a failed build left a marker")
+    stage("v3")
+    assert(builds == 3, "the build after a failed one did not run")
+    stage("v3")
+    assert(builds == 3)
+  }
+
+  test("maxFilesPerTrigger under src/main appears only in StreamRunner and ScalingBench; withStagingLock( only beside staged") {
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
+    def filesWith(text: String): Set[String] =
+      sources.collect { case (name, src) if src.contains(text) => name }.toSet
+    val capped = filesWith("maxFilesPerTrigger")
+    assert(capped.subsetOf(Set("StreamRunner.scala", "ScalingBench.scala")),
+      s"input schedules declared outside StreamRunner: ${capped.mkString(", ")}")
+    val helper = filesWith("def staged(")
+    assert(helper.size == 1, s"staged is defined in: ${helper.mkString(", ")}")
+    assert(filesWith("withStagingLock(") == helper,
+      s"staging locks taken outside the staged helper: ${filesWith("withStagingLock(").mkString(", ")}")
   }
 }
