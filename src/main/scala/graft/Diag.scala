@@ -17,7 +17,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    progress JSON — the durationMs breakdown (addBatch / getBatch /
   *    queryPlanning / walCommit / commitOffsets / triggerExecution) and
   *    state-store metrics the noop-sink wall number alone cannot
-  *    attribute. `SPARK_GRAFT_SF_DIR` (default sf0.1) and
+  *    attribute, then the pass's post-GC heap (`heap_after_gc_mb=`),
+  *    which shows whether finished queries left memory or state
+  *    behind. `SPARK_GRAFT_SF_DIR` (default sf0.1) and
   *    `SPARK_GRAFT_REPS` (default 2) select scale and passes.
   *  - `explain [query...]` prints `explain("formatted")` for the named
   *    queries (or a default set of plan-sensitive ones) at local[4] on
@@ -93,11 +95,14 @@ object Diag {
           progress.clear()
           println(f"pass $i: ${noopPass(spark, name, sfDir)}%.3f s")
           // progress events arrive on the async listener bus
-          if (!org.apache.spark.graftbridge.ListenerBridge
+          if (!org.apache.spark.sql.graftbridge.SparkBridge
               .drainListenerBus(spark.sparkContext, 30000L))
             System.err.println("[diag] listener bus not drained in 30s")
           import scala.jdk.CollectionConverters._
           progress.asScala.foreach(j => println(s"  progress: $j"))
+          System.gc()
+          val rt = Runtime.getRuntime
+          println(s"heap_after_gc_mb=${(rt.totalMemory - rt.freeMemory) >> 20}")
         }
       }
     }

@@ -208,7 +208,7 @@ object PipelineMain {
   private[graft] def run(spark: SparkSession, opt: Map[String, String],
       enabled: Seq[String]): PipelineRun =
     if (opt.contains("rocksdb"))
-      graft.streaming.TwsDedup.withRocksDB(spark)(drain(spark, opt, enabled))
+      StreamRunner.withConf(spark, StreamRunner.RocksDB)(drain(spark, opt, enabled))
     else drain(spark, opt, enabled)
 
   private def drain(spark: SparkSession, opt: Map[String, String],
@@ -353,7 +353,7 @@ object PipelineMain {
       StreamRunner.awaitAll(started.toSeq)
       // progress events arrive on the async listener bus — drain it
       // before detaching, or the summary can miss the final micro-batch
-      if (!org.apache.spark.graftbridge.ListenerBridge
+      if (!org.apache.spark.sql.graftbridge.SparkBridge
           .drainListenerBus(spark.sparkContext, 30000L))
         System.err.println(
           "[pipeline] WARN listener bus not drained in 30s; metrics summary may undercount")

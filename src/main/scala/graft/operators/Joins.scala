@@ -84,7 +84,7 @@ object Joins {
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =
       p.output.find(_.name == n)
         .getOrElse(throw new IllegalArgumentException(s"no column $n"))
-    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark,
+    org.apache.spark.sql.graftbridge.SparkBridge.ofRows(spark,
       graft.plans.AsofJoin(lPlan, rPlan,
         attr(lPlan, leftKey), attr(rPlan, rightKey),
         attr(lPlan, leftTime), attr(rPlan, rightTime), attr(rPlan, rightOrd)))

@@ -215,18 +215,16 @@ object CurationQueries {
     QueryDef(
       "s31_stream_embed_neardup",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/embeddings.parquet", graft.model.Schemas.embeddings)
-          val flags = graft.streaming.StreamEmbedNearDup.stage(
-            graft.streaming.StreamEmbedNearDup.bandedVecs(stream))
-          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
-            .groupBy(col("vec_id"))
-            .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
-            .select(col("vec_id"), col("n_hit_bands"),
-              (col("n_hit_bands") > 0).as("is_near_dup"))
-            .orderBy(col("vec_id"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/embeddings.parquet", graft.model.Schemas.embeddings)
+        val flags = graft.streaming.StreamEmbedNearDup.stage(
+          graft.streaming.StreamEmbedNearDup.bandedVecs(stream))
+        graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
+          .groupBy(col("vec_id"))
+          .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
+          .select(col("vec_id"), col("n_hit_bands"),
+            (col("n_hit_bands") > 0).as("is_near_dup"))
+          .orderBy(col("vec_id"))
       },
       Some(streamEmbedNearDupOracle(singleBatch = true))),
 
@@ -241,19 +239,17 @@ object CurationQueries {
     QueryDef(
       "s32_stream_embed_neardup_multibatch",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/embeddings.parquet", graft.model.Schemas.embeddings,
-            batches = 3, splitBy = "vec_id")
-          val flags = graft.streaming.StreamEmbedNearDup.stage(
-            graft.streaming.StreamEmbedNearDup.bandedVecs(stream))
-          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
-            .groupBy(col("vec_id"))
-            .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
-            .select(col("vec_id"), col("n_hit_bands"),
-              (col("n_hit_bands") > 0).as("is_near_dup"))
-            .orderBy(col("vec_id"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/embeddings.parquet", graft.model.Schemas.embeddings,
+          batches = 3, splitBy = "vec_id")
+        val flags = graft.streaming.StreamEmbedNearDup.stage(
+          graft.streaming.StreamEmbedNearDup.bandedVecs(stream))
+        graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
+          .groupBy(col("vec_id"))
+          .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
+          .select(col("vec_id"), col("n_hit_bands"),
+            (col("n_hit_bands") > 0).as("is_near_dup"))
+          .orderBy(col("vec_id"))
       },
       Some(streamEmbedNearDupOracle(singleBatch = false))))
 

@@ -268,18 +268,16 @@ object DedupQueries {
     QueryDef(
       "s29_stream_neardup",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/documents.parquet", graft.model.Schemas.documents)
-          val flags = graft.streaming.StreamNearDup.stage(
-            graft.streaming.StreamNearDup.bandedDocs(stream))
-          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
-            .groupBy(col("doc_id"))
-            .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
-            .select(col("doc_id"), col("n_hit_bands"),
-              (col("n_hit_bands") > 0).as("is_near_dup"))
-            .orderBy(col("doc_id"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/documents.parquet", graft.model.Schemas.documents)
+        val flags = graft.streaming.StreamNearDup.stage(
+          graft.streaming.StreamNearDup.bandedDocs(stream))
+        graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
+          .groupBy(col("doc_id"))
+          .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
+          .select(col("doc_id"), col("n_hit_bands"),
+            (col("n_hit_bands") > 0).as("is_near_dup"))
+          .orderBy(col("doc_id"))
       },
       Some(s"""WITH ${minhashExCtes("nd_", "documents")},
               |nd_vs AS (SELECT * FROM nd_ex WHERE sig[1] IS NOT NULL),
@@ -314,19 +312,17 @@ object DedupQueries {
     QueryDef(
       "s30_stream_neardup_multibatch",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/documents.parquet", graft.model.Schemas.documents,
-            batches = 3, splitBy = "doc_id")
-          val flags = graft.streaming.StreamNearDup.stage(
-            graft.streaming.StreamNearDup.bandedDocs(stream))
-          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
-            .groupBy(col("doc_id"))
-            .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
-            .select(col("doc_id"), col("n_hit_bands"),
-              (col("n_hit_bands") > 0).as("is_near_dup"))
-            .orderBy(col("doc_id"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/documents.parquet", graft.model.Schemas.documents,
+          batches = 3, splitBy = "doc_id")
+        val flags = graft.streaming.StreamNearDup.stage(
+          graft.streaming.StreamNearDup.bandedDocs(stream))
+        graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
+          .groupBy(col("doc_id"))
+          .agg(sum(col("hit").cast("int")).as("n_hit_bands"))
+          .select(col("doc_id"), col("n_hit_bands"),
+            (col("n_hit_bands") > 0).as("is_near_dup"))
+          .orderBy(col("doc_id"))
       },
       Some(s"""WITH ${minhashExCtes("nd_", "documents")},
               |nd_vs AS (SELECT * FROM nd_ex WHERE sig[1] IS NOT NULL),

@@ -443,16 +443,14 @@ object MixQueries {
     QueryDef(
       "s34_stream_token_budget",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/documents.parquet", graft.model.Schemas.documents)
-          val admits = graft.streaming.StreamTokenBudget.stage(
-            graft.streaming.StreamTokenBudget.docTokens(stream), TokenBudget)
-          graft.streaming.StreamRunner.runToMemory(admits.toDF(), "append")
-            .select(col("doc_id"), col("source"), col("n_tok"),
-              col("cum_tokens"), col("admitted"))
-            .orderBy(col("doc_id"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/documents.parquet", graft.model.Schemas.documents)
+        val admits = graft.streaming.StreamTokenBudget.stage(
+          graft.streaming.StreamTokenBudget.docTokens(stream), TokenBudget)
+        graft.streaming.StreamRunner.runToMemory(admits.toDF(), "append")
+          .select(col("doc_id"), col("source"), col("n_tok"),
+            col("cum_tokens"), col("admitted"))
+          .orderBy(col("doc_id"))
       },
       Some(tokenBudgetSql("doc_id"))),
 
@@ -466,17 +464,15 @@ object MixQueries {
     QueryDef(
       "s35_stream_token_budget_multibatch",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/documents.parquet", graft.model.Schemas.documents,
-            batches = 3, splitBy = "doc_id")
-          val admits = graft.streaming.StreamTokenBudget.stage(
-            graft.streaming.StreamTokenBudget.docTokens(stream), TokenBudget)
-          graft.streaming.StreamRunner.runToMemory(admits.toDF(), "append")
-            .select(col("doc_id"), col("source"), col("n_tok"),
-              col("cum_tokens"), col("admitted"))
-            .orderBy(col("doc_id"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/documents.parquet", graft.model.Schemas.documents,
+          batches = 3, splitBy = "doc_id")
+        val admits = graft.streaming.StreamTokenBudget.stage(
+          graft.streaming.StreamTokenBudget.docTokens(stream), TokenBudget)
+        graft.streaming.StreamRunner.runToMemory(admits.toDF(), "append")
+          .select(col("doc_id"), col("source"), col("n_tok"),
+            col("cum_tokens"), col("admitted"))
+          .orderBy(col("doc_id"))
       },
       Some(tokenBudgetSql("doc_id % 3, doc_id"))),
 
@@ -516,13 +512,11 @@ object MixQueries {
     QueryDef(
       "s36_stream_seq_pack",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/documents.parquet", graft.model.Schemas.documents)
-          val pos = graft.streaming.StreamTokenBudget.positions(
-            graft.streaming.StreamTokenBudget.docTokens(stream))
-          packSpans(graft.streaming.StreamRunner.runToMemory(pos, "append"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/documents.parquet", graft.model.Schemas.documents)
+        val pos = graft.streaming.StreamTokenBudget.positions(
+          graft.streaming.StreamTokenBudget.docTokens(stream))
+        packSpans(graft.streaming.StreamRunner.runToMemory(pos, "append"))
       },
       Some(seqPackSql)),
 
@@ -535,14 +529,12 @@ object MixQueries {
     QueryDef(
       "s37_stream_seq_pack_multibatch",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/documents.parquet", graft.model.Schemas.documents,
-            batches = 3, splitBy = "doc_id")
-          val pos = graft.streaming.StreamTokenBudget.positions(
-            graft.streaming.StreamTokenBudget.docTokens(stream))
-          packSpans(graft.streaming.StreamRunner.runToMemory(pos, "append"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/documents.parquet", graft.model.Schemas.documents,
+          batches = 3, splitBy = "doc_id")
+        val pos = graft.streaming.StreamTokenBudget.positions(
+          graft.streaming.StreamTokenBudget.docTokens(stream))
+        packSpans(graft.streaming.StreamRunner.runToMemory(pos, "append"))
       },
       Some("WITH " + docsBaseCte + ",\n" + packSqlFrom("doc_id % 3, doc_id"))),
 
@@ -558,15 +550,13 @@ object MixQueries {
     QueryDef(
       "s38_stream_topk",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/documents.parquet", graft.model.Schemas.documents)
-          val flags = graft.streaming.StreamTopK.stage(
-            graft.streaming.StreamTopK.rankedDocs(stream))
-          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
-            .select(col("doc_id"), col("source"), col("key"), col("in_topk"))
-            .orderBy(col("doc_id"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/documents.parquet", graft.model.Schemas.documents)
+        val flags = graft.streaming.StreamTopK.stage(
+          graft.streaming.StreamTopK.rankedDocs(stream))
+        graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
+          .select(col("doc_id"), col("source"), col("key"), col("in_topk"))
+          .orderBy(col("doc_id"))
       },
       Some(topkSql("b.doc_id < a.doc_id"))),
 
@@ -580,16 +570,14 @@ object MixQueries {
     QueryDef(
       "s39_stream_topk_multibatch",
       (s, d) => {
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val stream = graft.streaming.StreamRunner.parquetStream(
-            s, s"$d/documents.parquet", graft.model.Schemas.documents,
-            batches = 3, splitBy = "doc_id")
-          val flags = graft.streaming.StreamTopK.stage(
-            graft.streaming.StreamTopK.rankedDocs(stream))
-          graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
-            .select(col("doc_id"), col("source"), col("key"), col("in_topk"))
-            .orderBy(col("doc_id"))
-        }
+        val stream = graft.streaming.StreamRunner.parquetStream(
+          s, s"$d/documents.parquet", graft.model.Schemas.documents,
+          batches = 3, splitBy = "doc_id")
+        val flags = graft.streaming.StreamTopK.stage(
+          graft.streaming.StreamTopK.rankedDocs(stream))
+        graft.streaming.StreamRunner.runToMemory(flags.toDF(), "append")
+          .select(col("doc_id"), col("source"), col("key"), col("in_topk"))
+          .orderBy(col("doc_id"))
       },
       Some(topkSql(
         "(b.doc_id % 3 < a.doc_id % 3 OR (b.doc_id % 3 = a.doc_id % 3 AND b.doc_id < a.doc_id))"))),

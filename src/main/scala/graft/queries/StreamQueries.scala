@@ -259,17 +259,15 @@ object StreamQueries {
       "s10_stream_dedup_tws",
       (s, d) => {
         import s.implicits._
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val clips = metaProjection(
-            StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
-            .withColumn("event_time", col("event_time").cast("timestamp"))
-            .withWatermark("event_time", "10 minutes")
-            .as[ClipMeta]
-          val decided = graft.streaming.TwsDedup.dedupStageTws(clips)
-          StreamRunner.runToMemory(decided.toDF(), "append")
-            .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
-            .orderBy(col("clip_id"), col("occurrence"))
-        }
+        val clips = metaProjection(
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
+          .withColumn("event_time", col("event_time").cast("timestamp"))
+          .withWatermark("event_time", "10 minutes")
+          .as[ClipMeta]
+        val decided = graft.streaming.TwsDedup.dedupStageTws(clips)
+        StreamRunner.runToMemory(decided.toDF(), "append")
+          .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
+          .orderBy(col("clip_id"), col("occurrence"))
       },
       Some(dedupOracleSql)),
 
@@ -303,18 +301,16 @@ object StreamQueries {
       "s22_session_merge_tws",
       (s, d) => {
         import s.implicits._
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val clips = metaProjection(
-            StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
-            .withColumn("event_time", col("event_time").cast("timestamp"))
-            .withWatermark("event_time", "12 hours")
-            .as[ClipMeta]
-          val merged = graft.streaming.TwsSessionMerge.sessionMergeStageTws(clips)
-          StreamRunner.runToMemory(merged.toDF(), "append")
-            .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
-            .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
-            .orderBy(col("clip_id"), col("session_start"))
-        }
+        val clips = metaProjection(
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema))
+          .withColumn("event_time", col("event_time").cast("timestamp"))
+          .withWatermark("event_time", "12 hours")
+          .as[ClipMeta]
+        val merged = graft.streaming.TwsSessionMerge.sessionMergeStageTws(clips)
+        StreamRunner.runToMemory(merged.toDF(), "append")
+          .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
+          .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
+          .orderBy(col("clip_id"), col("session_start"))
       },
       sessionMergeOracleSql),
 
@@ -354,19 +350,17 @@ object StreamQueries {
       "s26_session_merge_tws_multibatch",
       (s, d) => {
         import s.implicits._
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val clips = metaProjection(
-            StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
-              batches = 3))
-            .withColumn("event_time", col("event_time").cast("timestamp"))
-            .withWatermark("event_time", "12 hours")
-            .as[ClipMeta]
-          val merged = graft.streaming.TwsSessionMerge.sessionMergeStageTws(clips)
-          StreamRunner.runToMemory(merged.toDF(), "append")
-            .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
-            .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
-            .orderBy(col("clip_id"), col("session_start"))
-        }
+        val clips = metaProjection(
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
+          .withColumn("event_time", col("event_time").cast("timestamp"))
+          .withWatermark("event_time", "12 hours")
+          .as[ClipMeta]
+        val merged = graft.streaming.TwsSessionMerge.sessionMergeStageTws(clips)
+        StreamRunner.runToMemory(merged.toDF(), "append")
+          .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
+          .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
+          .orderBy(col("clip_id"), col("session_start"))
       },
       multiBatchSessionMergeOracleSql),
 
@@ -420,18 +414,16 @@ object StreamQueries {
       "s18_stream_dedup_tws_multibatch",
       (s, d) => {
         import s.implicits._
-        graft.streaming.TwsDedup.withRocksDB(s) {
-          val clips = metaProjection(
-            StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
-              batches = 3))
-            .withColumn("event_time", col("event_time").cast("timestamp"))
-            .withWatermark("event_time", "12 hours")
-            .as[ClipMeta]
-          val decided = graft.streaming.TwsDedup.dedupStageTws(clips)
-          StreamRunner.runToMemory(decided.toDF(), "append")
-            .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
-            .orderBy(col("clip_id"), col("occurrence"))
-        }
+        val clips = metaProjection(
+          StreamRunner.parquetStream(s, s"$d/events.parquet", eventsSchema,
+            batches = 3))
+          .withColumn("event_time", col("event_time").cast("timestamp"))
+          .withWatermark("event_time", "12 hours")
+          .as[ClipMeta]
+        val decided = graft.streaming.TwsDedup.dedupStageTws(clips)
+        StreamRunner.runToMemory(decided.toDF(), "append")
+          .withColumn("event_time", col("event_time").cast("timestamp_ntz"))
+          .orderBy(col("clip_id"), col("occurrence"))
       },
       multiBatchDedupOracleSql),
 

@@ -6,8 +6,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -16,12 +18,20 @@ import graft.sink.FsUtil
 /** Helpers for driving streaming plans to a deterministic batch result
   * (the engine's TopologyTestDriver analogue, SURVEY.md §5) and for
   * reading the file-backed input streams. Every query run here is
-  * started, sized from its own sources, awaited, checked against the
-  * arrival schedule of its sources and released in one place.
+  * started, sized from its own sources, given the state store its plan
+  * needs, awaited, checked against the arrival schedule of its sources
+  * and released, state stores included, in one place.
   */
 object StreamRunner {
 
   private val counter = new AtomicInteger(0)
+
+  /** The RocksDB state store provider setting, which `transformWithState`
+    * requires.
+    */
+  private[graft] val RocksDB: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   // ---------------------------------------------------------------------
   // Scale-adaptive state partitioning (optimization guide §2.2/§2.5):
@@ -244,8 +254,8 @@ object StreamRunner {
     * non-blocking, so starting both and awaiting both overlaps those
     * costs while the per-query results (independent sources, sinks,
     * checkpoints, state) are byte-identical to the sequential run.
-    * The queries run in one sized-partition scope, sized from the
-    * sources of all of them.
+    * The queries run in one conf scope, sized from the sources of all
+    * of them, on RocksDB if any of them needs it.
     */
   def runAllToMemory(streams: Seq[(DataFrame, String)]): Seq[DataFrame] =
     runMemory(streams)
@@ -253,6 +263,8 @@ object StreamRunner {
   /** Drain `stream` once (Trigger.AvailableNow) through the
     * foreachBatch function `write`, checkpointing at `checkpoint` —
     * the exactly-once and upsert sink queries' runner.
+    * The batch-count check assumes a fresh checkpoint: on a resumed one,
+    * [[expectedDataBatches]] still counts the files already processed.
     */
   def runToSink(stream: DataFrame, checkpoint: String)(
       write: (DataFrame, Long) => Unit): Unit =
@@ -279,27 +291,29 @@ object StreamRunner {
   }
 
   /** Start every writer with Trigger.AvailableNow and wait for all of
-    * them ([[awaitAll]]), with `spark.sql.shuffle.partitions` sized
-    * from the sources of the streams they write (see the sizing note
-    * above). The session's value is restored only after the queries
-    * end: each query clones the session's conf on its own thread, after
-    * `start()` returns. Batch queries keep their own sizing. Each query
-    * must then have run exactly the data micro-batches its sources
-    * imply ([[expectedDataBatches]], taken before the start), or the run
-    * fails naming the query and both counts: an oracle that models a
-    * batch schedule must not silently pass on another one. (The count
-    * reads `recentProgress`, which keeps the last
-    * `spark.sql.streaming.numRecentProgressUpdates` = 100 entries.)
+    * them ([[awaitAll]]) in one conf scope ([[withConf]]):
+    * `spark.sql.shuffle.partitions` sized from the sources of the
+    * streams they write (see the sizing note above), and the RocksDB
+    * state store provider when any of their plans holds a
+    * `transformWithState` operator (the API is RocksDB-only; every other
+    * query keeps the session's provider). Batch queries keep their own
+    * settings. Each query must then have run exactly the data
+    * micro-batches its sources imply ([[expectedDataBatches]], taken
+    * before the start), or the run fails naming the query and both
+    * counts: an oracle that models a batch schedule must not silently
+    * pass on another one. (The count reads `recentProgress`, which
+    * keeps the last `spark.sql.streaming.numRecentProgressUpdates` =
+    * 100 entries.)
     */
   private def drainAll(
       writers: Seq[(DataFrame, DataStreamWriter[Row])]): Seq[StreamingQuery] = {
     val spark = writers.head._1.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
     val expected = writers.map(w => expectedDataBatches(w._1))
-    spark.conf.set(key,
-      sizedStatePartitions(spark, writers.map(w => sourceBytes(w._1)).sum).toString)
-    try {
+    val partitions = "spark.sql.shuffle.partitions" ->
+      sizedStatePartitions(spark, writers.map(w => sourceBytes(w._1)).sum).toString
+    val tws = writers.exists(
+      _._1.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+    withConf(spark, Seq(partitions) ++ Option.when(tws)(RocksDB): _*) {
       val queries = writers.map(_._2.trigger(Trigger.AvailableNow()).start())
       awaitAll(queries)
       queries.zip(expected).foreach { case (q, want) =>
@@ -310,9 +324,23 @@ object StreamRunner {
         }
       }
       queries
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** Runs `f` with each of `settings` set on the session's conf, then
+    * restores each key's previous value (or unsets it). A streaming
+    * query clones the session's conf on its own thread after `start()`
+    * returns, so `f` must not return before its queries end. The
+    * engine's one save/set/restore of session conf.
+    */
+  private[graft] def withConf[T](spark: SparkSession, settings: (String, String)*)(f: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      f
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -322,7 +350,11 @@ object StreamRunner {
     * siblings (none is left running against a half-torn session), so a
     * failing query surfaces its own error at once instead of waiting
     * behind, or being masked by, a sibling that happened to be awaited
-    * first.
+    * first. Once they have all ended, and no other query of the session
+    * is running, every loaded state store provider is unloaded: the
+    * store cache is JVM-global and would otherwise keep the finished
+    * queries' providers, and their native RocksDB stores, until its
+    * maintenance task runs.
     */
   private[graft] def awaitAll(queries: Seq[StreamingQuery]): Unit = {
     def stopQuietly(q: StreamingQuery): Unit =
@@ -341,6 +373,8 @@ object StreamRunner {
       case e: Throwable =>
         queries.foreach(stopQuietly)
         throw e
+    } finally queries.headOption.foreach { q =>
+      if (q.sparkSession.streams.active.isEmpty) SparkBridge.unloadStateStores()
     }
     failures.headOption.foreach { first =>
       failures.tail.foreach(first.addSuppressed)

@@ -19,9 +19,8 @@ import graft.model.DedupDecision
   *  - timers decoupled from data arrival (`handleExpiredTimer`).
   *
   * Requires the RocksDB state store provider (the API is
-  * RocksDB-only); callers set
-  * `spark.sql.streaming.stateStore.providerClass` before starting the
-  * query.
+  * RocksDB-only); [[StreamRunner]] selects it for any query whose plan
+  * holds a `transformWithState` operator.
   */
 class DedupProcessor(ttl: java.time.Duration)
     extends StatefulProcessor[String, ClipMeta, DedupDecision] {
@@ -54,23 +53,6 @@ class DedupProcessor(ttl: java.time.Duration)
 }
 
 object TwsDedup {
-
-  /** Run `f` with the RocksDB state store provider set on the session
-    * (transformWithState is RocksDB-only), restoring the previous
-    * provider afterwards — one save/set/restore implementation for the
-    * query registry and every test.
-    */
-  def withRocksDB[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   /** Streaming keyed dedup via `transformWithState` (RocksDB-backed).
     * `ttl = null` keeps state forever (event-time mode); a Duration

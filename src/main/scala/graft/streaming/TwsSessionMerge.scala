@@ -78,7 +78,8 @@ class SessionMergeProcessor(gapMs: Long)
 object TwsSessionMerge {
 
   /** Streaming session merge via `transformWithState` (RocksDB-backed,
-    * event-time timers). Callers wrap in [[TwsDedup.withRocksDB]].
+    * event-time timers); [[StreamRunner]] selects RocksDB from the
+    * query's plan.
     */
   def sessionMergeStageTws(clips: Dataset[ClipMeta],
       gapMs: Long = 30L * 60 * 1000): Dataset[SessionMerge] = {

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,7 +33,7 @@ class FileListingSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       f
-      assert(ListenerBridge.drainListenerBus(spark.sparkContext, 30000))
+      assert(SparkBridge.drainListenerBus(spark.sparkContext, 30000))
     } finally spark.sparkContext.removeSparkListener(listener)
     descriptions.asScala.toSeq
   }

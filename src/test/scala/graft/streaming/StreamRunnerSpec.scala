@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.graftbridge.{SparkBridge, StateStoreBridge}
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -191,5 +193,86 @@ class StreamRunnerSpec extends AnyFunSuite {
     assert(helper.size == 1, s"staged is defined in: ${helper.mkString(", ")}")
     assert(filesWith("withStagingLock(") == helper,
       s"staging locks taken outside the staged helper: ${filesWith("withStagingLock(").mkString(", ")}")
+  }
+
+  /** A one-file stream of clips `a`, `a`, `b` (a minute apart), keyed
+    * and deduplicated through `transformWithState`.
+    */
+  private def twsDedup(): Dataset[graft.model.DedupDecision] = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tws_run_").resolve("in").toString
+    Seq("a" -> 1L, "a" -> 2L, "b" -> 3L).map { case (id, n) =>
+      ClipMeta(id, 8000, 100, "pcm16le", s"t$n", new java.sql.Timestamp(n * 60000L), n)
+    }.toDS().coalesce(1).write.parquet(dir)
+    val clips = spark.readStream.schema(implicitly[org.apache.spark.sql.Encoder[ClipMeta]].schema)
+      .parquet(dir)
+      .withColumn("event_time", col("event_time").cast("timestamp"))
+      .withWatermark("event_time", "10 minutes")
+      .as[ClipMeta]
+    TwsDedup.dedupStageTws(clips)
+  }
+
+  test("a transformWithState query runs on RocksDB without a wrapper; the session's provider is left as found") {
+    import spark.implicits._
+    val provider = StreamRunner.RocksDB._1
+    val before = spark.conf.getOption(provider)
+    val rows = StreamRunner.runToMemory(twsDedup().toDF(), "append")
+      .select("clip_id", "occurrence", "out_id").as[(String, Int, String)].collect().toSet
+    assert(rows == Set(("a", 1, "a"), ("a", 2, "a_1"), ("b", 1, "b")))
+    assert(spark.conf.getOption(provider) == before)
+  }
+
+  test("a finished runToSink query's state store providers are unloaded") {
+    val ckpt = Files.createTempDirectory("tws_unload_").resolve("ckpt").toString
+    val stateRoot = {
+      val p = new org.apache.hadoop.fs.Path(ckpt)
+      new org.apache.hadoop.fs.Path(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p),
+        "state").toString
+    }
+    // query-started events reach the session's listeners synchronously
+    val runIds = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        runIds.add(e.runId)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    var partitions = 0
+    var loadedInRun = 0
+    var rows = 0L
+    spark.streams.addListener(listener)
+    try StreamRunner.runToSink(twsDedup().toDF(), ckpt) { (df: DataFrame, _: Long) =>
+      rows += df.count()
+      partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      loadedInRun = (0 until partitions)
+        .count(StateStoreBridge.isLoaded(stateRoot, _, runIds.peek()))
+    } finally {
+      assert(SparkBridge.drainListenerBus(spark.sparkContext, 30000))
+      spark.streams.removeListener(listener)
+    }
+    assert(rows == 3)
+    assert(runIds.size == 1)
+    // the ids name the run's stores: they were loaded while it ran
+    assert(loadedInRun > 0, s"none of $partitions state partitions found loaded in the run")
+    val left = (0 until partitions).filter(StateStoreBridge.isLoaded(stateRoot, _, runIds.peek()))
+    assert(left.isEmpty, s"state partitions still loaded after the run: ${left.mkString(", ")}")
+  }
+
+  test("no provider wrapper under src; under src/main only StreamRunner names the provider and writes session conf, beside GraftExtensions' defaults") {
+    def sources(root: String) = Files.walk(Paths.get(root)).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
+    def filesWith(root: String, text: String): Set[String] =
+      sources(root).collect { case (name, src) if src.contains(text) => name }.toSet
+    // spelled in two parts so this file does not name it
+    val wrapper = "with" + "RocksDB"
+    assert(filesWith("src", wrapper).isEmpty,
+      s"provider wrappers left: ${filesWith("src", wrapper).mkString(", ")}")
+    assert(filesWith("src/main", "stateStore.providerClass") == Set("StreamRunner.scala"),
+      s"state store provider named in: ${filesWith("src/main", "stateStore.providerClass").mkString(", ")}")
+    val writers = filesWith("src/main", "conf.set(") ++ filesWith("src/main", "conf.unset(")
+    assert(writers.subsetOf(Set("StreamRunner.scala", "GraftExtensions.scala")),
+      s"session conf written outside StreamRunner: ${writers.mkString(", ")}")
   }
 }
