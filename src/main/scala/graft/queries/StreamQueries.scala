@@ -1076,13 +1076,9 @@ object StreamQueries {
             batches = 3))
         val sink = new graft.sink.UpsertSink(outDir, Seq("clip_id"), "event_id")
         StreamRunner.runToSink(clips, s"$outDir/_checkpoint")(sink.write)
-        val commitCount = {
-          val stream = java.nio.file.Files.list(
-            java.nio.file.Paths.get(outDir, "_commits"))
-          try stream.count() finally stream.close()
-        }
-        require(sink.latestCommitted.isDefined && commitCount == 3,
-          "s23 expects 3 committed MERGE batches")
+        require(sink.committedBatchIds.size == 3 &&
+          sink.latestCommitted == sink.committedBatchIds.lastOption,
+          s"s23 expects 3 committed MERGE batches, got ${sink.committedBatchIds}")
         sink.readLatest(s)
           .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
             col("transcript"), col("event_time"), col("event_id"))

@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   * Iceberg-MERGE-style commit protocol (no Iceberg runtime in the
   * sandbox):
   *
-  *  1. write the batch to `_staging/batch-<id>` (re-runnable),
-  *  2. gather per-partition lineage + metrics,
-  *  3. atomically move staging → `data/batch=<id>`,
-  *  4. atomically create the commit marker `_commits/<id>`.
+  *  1. `stage`: write the batch to `_staging/batch-<id>` (re-runnable),
+  *  2. `lineage`: gather per-partition lineage + metrics,
+  *  3. `publish`: atomically move staging → `data/batch=<id>`,
+  *  4. `mark`: atomically create the commit marker `_commits/<id>`
+  *     ([[BatchCommit]]).
   *
   * A replayed batchId short-circuits at the marker check, so restarts
   * from checkpoint produce byte-identical output (rows inside each file
@@ -32,72 +33,56 @@ import org.apache.spark.sql.functions._
   */
 class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends Serializable {
 
+  private val commit = new BatchCommit(outDir)
   private def dataDir(batchId: Long): Path = Paths.get(outDir, "data", s"batch=$batchId")
   private def stagingDir(batchId: Long): Path = Paths.get(outDir, "_staging", s"batch-$batchId")
-  private def commitMarker(batchId: Long): Path = Paths.get(outDir, "_commits", batchId.toString)
   private def lineageFile(batchId: Long): Path = Paths.get(outDir, "_lineage", s"$batchId.json")
 
-  def committedBatchIds: Seq[Long] = {
-    val dir = Paths.get(outDir, "_commits")
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val stream = Files.list(dir)
-      try stream.iterator.asScala.map(_.getFileName.toString.toLong).toSeq.sorted
-      finally stream.close()
-    }
-  }
-
-  def isCommitted(batchId: Long): Boolean = Files.exists(commitMarker(batchId))
+  def committedBatchIds: Seq[Long] = commit.committedBatchIds
+  def isCommitted(batchId: Long): Boolean = commit.isCommitted(batchId)
 
   /** The foreachBatch function. Safe to call repeatedly with the same
     * batchId (idempotent); safe to re-run after a crash at any step.
     */
-  def write(df: DataFrame, batchId: Long): Unit = {
-    if (isCommitted(batchId)) return // replay after restart — already durable
+  def write(df: DataFrame, batchId: Long): Unit = steps(df, batchId).foreach(_.run())
 
-    val spark = df.sparkSession
-    Files.createDirectories(Paths.get(outDir, "_commits"))
-    Files.createDirectories(Paths.get(outDir, "_lineage"))
-    Files.createDirectories(Paths.get(outDir, "data"))
-
-    // Deterministic file contents: hash-partition on the leading order
-    // column, then sort within partitions. (A global orderBy would use
-    // sampled range partitioning — file BOUNDARIES would then vary run
-    // to run, breaking the byte-identical-replay guarantee.)
-    val ordered =
-      if (orderCols.nonEmpty)
-        df.repartition(col(orderCols.head))
-          .sortWithinPartitions(orderCols.map(col): _*)
-      else df
-
-    // Single-pass lineage (D7/D8): row count + event-time bounds ride
-    // the staging write itself via observe() (one Spark job per batch,
-    // not four — this is micro-batch p99 latency); per-partition counts
-    // come from the staged parquet footers, driver-side metadata only.
-    val hasTs = ordered.columns.contains("event_time")
-    val obs = org.apache.spark.sql.Observation(s"sink-lineage-$batchId-${System.nanoTime()}")
-    val metrics =
-      count(lit(1)).as("rows") +: (
-        if (hasTs)
-          Seq(min(col("event_time")).cast("string").as("mn"),
-            max(col("event_time")).cast("string").as("mx"))
-        else Seq.empty)
-    ordered.observe(obs, metrics.head, metrics.tail: _*)
-      .write.mode("overwrite").parquet(stagingDir(batchId).toString)
-    val m = obs.get
-    val total = m("rows").asInstanceOf[Long]
-    val tsBounds =
-      if (hasTs && total > 0)
+  /** Steps `stage, lineage, publish, mark` of batch `batchId`. */
+  private[sink] def steps(df: DataFrame, batchId: Long): Seq[BatchCommit.Step] = {
+    lazy val staged = {
+      // Deterministic file contents: hash-partition on the leading order
+      // column, then sort within partitions. (A global orderBy would use
+      // sampled range partitioning — file BOUNDARIES would then vary run
+      // to run, breaking the byte-identical-replay guarantee.)
+      val ordered =
+        if (orderCols.nonEmpty)
+          df.repartition(col(orderCols.head))
+            .sortWithinPartitions(orderCols.map(col): _*)
+        else df
+      // Single-pass lineage (D7/D8): row count + event-time bounds ride
+      // the staging write itself via observe() (one Spark job per batch,
+      // not four — this is micro-batch p99 latency); per-partition counts
+      // come from the staged parquet footers, driver-side metadata only.
+      val hasTs = ordered.columns.contains("event_time")
+      val obs = org.apache.spark.sql.Observation(s"sink-lineage-$batchId-${System.nanoTime()}")
+      val metrics =
+        count(lit(1)).as("rows") +: (
+          if (hasTs)
+            Seq(min(col("event_time")).cast("string").as("mn"),
+              max(col("event_time")).cast("string").as("mx"))
+          else Seq.empty)
+      ordered.observe(obs, metrics.head, metrics.tail: _*)
+        .write.mode("overwrite").parquet(stagingDir(batchId).toString)
+      val m = obs.get
+      val total = m("rows").asInstanceOf[Long]
+      (total, if (hasTs && total > 0)
         s""","event_time_min":"${m("mn")}","event_time_max":"${m("mx")}""""
-      else ""
-    val partCounts = {
-      val stream = Files.list(stagingDir(batchId))
-      val files =
-        try stream.iterator.asScala.toSeq
-          .filter(_.getFileName.toString.startsWith("part-"))
-        finally stream.close()
-      val conf = spark.sessionState.newHadoopConf()
-      files.sortBy(_.getFileName.toString).zipWithIndex.map { case (f, seq) =>
+      else "")
+    }
+    lazy val lineageJson = {
+      val (total, tsBounds) = staged
+      val conf = df.sparkSession.sessionState.newHadoopConf()
+      val partCounts = FsUtil.list(stagingDir(batchId)).filter(_.getFileName.toString.startsWith("part-"))
+        .sortBy(_.getFileName.toString).zipWithIndex.map { case (f, seq) =>
         // part-%05d-… but ≥100000 partitions widens the field: take digits.
         // A committer emitting a non-standard name (e.g. part-r-00000)
         // yields no digits — fall back to the sorted sequence index
@@ -111,17 +96,13 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends Serializab
         val n = try reader.getRecordCount finally reader.close()
         s"""{"partition_id":$pid,"rows":$n}"""
       }.sorted.mkString("[", ",", "]")
-    }
-    val lineageJson =
       s"""{"batch_id":$batchId,"rows":$total,"partitions":$partCounts$tsBounds}"""
-    Files.writeString(lineageFile(batchId), lineageJson)
-
-    // commit: atomic dir move, then atomic marker create
-    val target = dataDir(batchId)
-    if (Files.exists(target)) FsUtil.deleteRecursively(target) // crashed pre-marker
-    Files.move(stagingDir(batchId), target, StandardCopyOption.ATOMIC_MOVE)
-    Files.write(commitMarker(batchId), lineageJson.getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    }
+    commit.steps(batchId, df, Seq(
+      BatchCommit.Step("stage", () => staged),
+      BatchCommit.Step("lineage", () => FsUtil.replace(lineageFile(batchId), lineageJson.getBytes("UTF-8"))),
+      BatchCommit.Step("publish", () => FsUtil.publish(stagingDir(batchId), dataDir(batchId)))),
+      lineageJson, Nil)
   }
 
   /** Lineage records for every committed batch (D7 evidence). Parsed
@@ -135,7 +116,7 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends Serializab
     ExactlyOnceSink.parseLineage(lineageFile(id), id) match {
       case Right(l) => l
       case Left(err1) =>
-        ExactlyOnceSink.parseLineage(commitMarker(id), id) match {
+        ExactlyOnceSink.parseLineage(commit.marker(id), id) match {
           case Right(l) => l
           case Left(err2) => throw new IllegalStateException(
             s"batch $id lineage unreadable: $err1; commit-marker fallback: $err2")
@@ -155,12 +136,8 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends Serializab
     * themselves.
     */
   def readCommitted(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val dirs = committedBatchIds.map(dataDir).filter { d =>
-      val stream = Files.list(d)
-      try stream.iterator.asScala
-        .exists(_.getFileName.toString.endsWith(".parquet"))
-      finally stream.close()
-    }
+    val dirs = committedBatchIds.map(dataDir)
+      .filter(d => FsUtil.list(d).exists(_.getFileName.toString.endsWith(".parquet")))
     if (dirs.isEmpty)
       spark.emptyDataFrame
     else

@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -8,13 +8,30 @@ import scala.jdk.CollectionConverters._
   * staged input caches.
   */
 object FsUtil {
+  /** The entries directly in `dir`, with the listing stream closed. */
+  def list(dir: Path): Seq[Path] = {
+    val stream = Files.list(dir)
+    try stream.iterator.asScala.toVector finally stream.close()
+  }
+
   def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val stream = Files.list(p)
-      try stream.iterator.asScala.toSeq.foreach(deleteRecursively)
-      finally stream.close()
-    }
+    if (Files.isDirectory(p)) list(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
+  }
+
+  /** Atomically renames `staged` to `target`, replacing a stale one. */
+  def publish(staged: Path, target: Path): Unit = {
+    deleteRecursively(target)
+    Files.createDirectories(target.getParent)
+    Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Writes `path` through a tmp file and a rename: never torn. */
+  def replace(path: Path, bytes: Array[Byte]): Unit = {
+    val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
+    Files.createDirectories(path.getParent)
+    Files.write(tmp, bytes)
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   private val jvmLocks =
@@ -45,8 +62,7 @@ object FsUtil {
     // suffix beyond Long range would also throw in toLong. Neither
     // failure is ours to surface — the dir is either gone or someone
     // else's problem next pass.
-    val stream = Files.list(parent)
-    try stream.iterator.asScala.foreach { p =>
+    list(parent).foreach { p =>
       try {
         val name = p.getFileName.toString
         val idx = name.lastIndexOf("-pid")
@@ -61,7 +77,7 @@ object FsUtil {
         case _: java.nio.file.NoSuchFileException | _: NumberFormatException
             | _: java.io.UncheckedIOException => ()
       }
-    } finally stream.close()
+    }
     FsUtil.deleteRecursively(mine) // own previous pass (same pid, sequential)
     mine.toString
   }
@@ -73,8 +89,7 @@ object FsUtil {
   def sourceFingerprint(p: Path): String = {
     val (sz, mt) =
       if (Files.isDirectory(p)) {
-        val stream = Files.list(p)
-        val parts = try stream.iterator.asScala.toSeq finally stream.close()
+        val parts = list(p)
         (parts.map(Files.size).sum,
           parts.map(x => Files.getLastModifiedTime(x).toMillis).foldLeft(0L)(math.max))
       } else (Files.size(p), Files.getLastModifiedTime(p).toMillis)

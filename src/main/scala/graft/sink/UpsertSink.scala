@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -24,11 +24,10 @@ import org.apache.spark.sql.functions._
   * bucket-partitioned job. Untouched buckets are carried forward BY
   * REFERENCE in the new snapshot's manifest — their files are never
   * read, shuffled, or rewritten. Per-batch cost is therefore
-  * O(touched-bucket data + batch), not O(accumulated table): at 10⁹
-  * accumulated keys across B buckets a 10⁴-row micro-batch rewrites at
-  * most min(B, 10⁴) buckets ≈ touched fraction of the table, and with
-  * B sized so a bucket fits an executor (e.g. B = table_bytes /
-  * 256 MB) the merge window never sees more than the touched slice.
+  * O(touched buckets): a batch rewrites min(B, batch keys) buckets at
+  * most. With hashed random keys that approaches the whole table once
+  * a batch holds about B keys: 13–16 of 16 buckets were rewritten per
+  * 40-clip batch of the deployable pipeline (ROADMAP).
   *
   * Snapshot layout (a miniature of Iceberg's snapshot chain):
   *
@@ -41,9 +40,10 @@ import org.apache.spark.sql.functions._
   *   _buckets                         pinned bucket count (first write
   *                                    wins; a reopened sink adopts it)
   *
-  * A replayed batchId is a no-op; a crash between snapshot write and
-  * marker leaves dangling uncommitted data/manifest dirs that the
-  * replay overwrites. Readers resolve `_latest` → manifest → bucket
+  * Each step of a write is idempotent ([[BatchCommit]]): a crash before
+  * the marker leaves uncommitted data/manifest dirs that the replay
+  * overwrites, and a replayed committed batchId only finishes the
+  * pointer swing. Readers resolve `_latest` → manifest → bucket
   * dirs, so they never observe a half-written state (same
   * read-isolation idea as Iceberg's metadata pointer swap). Older v=
   * data dirs stay referenced by older manifests (time travel); nothing
@@ -62,10 +62,9 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
   require(keyCols.nonEmpty)
   require(numBuckets > 0)
 
+  private val commit = new BatchCommit(outDir)
   private def manifestPath(batchId: Long): Path =
     Paths.get(outDir, "snapshots", s"v=$batchId", "manifest")
-  private def commitMarker(batchId: Long): Path =
-    Paths.get(outDir, "_commits", batchId.toString)
   private def latestPtr: Path = Paths.get(outDir, "_latest")
   private def bucketsPin: Path = Paths.get(outDir, "_buckets")
 
@@ -81,7 +80,8 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
   private def bucketCol(b: Int) =
     pmod(xxhash64(keyCols.map(col): _*), lit(b.toLong)).cast("int")
 
-  def isCommitted(batchId: Long): Boolean = Files.exists(commitMarker(batchId))
+  def committedBatchIds: Seq[Long] = commit.committedBatchIds
+  def isCommitted(batchId: Long): Boolean = commit.isCommitted(batchId)
 
   def latestCommitted: Option[Long] =
     if (!Files.exists(latestPtr)) None
@@ -109,45 +109,29 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
   /** foreachBatch entrypoint: MERGE `df` into the latest snapshot,
     * rewriting only the buckets the batch touches.
     */
-  def write(df: DataFrame, batchId: Long): Unit = {
-    if (isCommitted(batchId)) {
-      // crash window repair: marker exists but the pointer swing never
-      // happened — finish the commit instead of dropping the batch
-      if (latestCommitted.forall(_ < batchId)) {
-        val tmpPtr = Paths.get(outDir, s"_latest.tmp.$batchId")
-        Files.write(tmpPtr, s"$batchId".getBytes("UTF-8"))
-        Files.move(tmpPtr, latestPtr, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-      return
-    }
-    val spark = df.sparkSession
-    Files.createDirectories(Paths.get(outDir, "_commits"))
-    Files.createDirectories(Paths.get(outDir, "snapshots"))
-    if (!Files.exists(bucketsPin))
-      Files.write(bucketsPin, numBuckets.toString.getBytes("UTF-8"))
-    val b = effectiveBuckets()
+  def write(df: DataFrame, batchId: Long): Unit = steps(df, batchId).foreach(_.run())
 
-    val prev = latestManifest
-
-    // touched-bucket set: ≤ B small ints — manifest-scale metadata (the
-    // Iceberg planner does the same partition-pruning collect); NOT a
-    // data-sized driver collect
-    val batch = df.withColumn("__bucket", bucketCol(b))
-    val touched = batch.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-
+  /** Steps `pin, stage, publish, snapshot, mark, swing`; a replayed
+    * committed batch's `swing` finishes a crash before the pointer. */
+  private[sink] def steps(df: DataFrame, batchId: Long): Seq[BatchCommit.Step] = {
     val dataDir = Paths.get(outDir, "data", s"v=$batchId")
     val stagedData = Paths.get(outDir, "data", s"_staging-v=$batchId")
-    val newManifest: Map[Int, String] =
-      if (touched.isEmpty) prev
-      else {
+    lazy val staged: (Map[Int, String], Set[Int]) = { // (previous manifest, touched)
+      val b = effectiveBuckets()
+      val prev = latestManifest
+      // touched-bucket set: ≤ B small ints — manifest-scale metadata (the
+      // Iceberg planner does the same partition-pruning collect); NOT a
+      // data-sized driver collect
+      val batch = df.withColumn("__bucket", bucketCol(b))
+      val touched = batch.select("__bucket").distinct()
+        .collect().map(_.getInt(0)).toSet
+      if (touched.nonEmpty) {
         // base slice: ONLY the touched buckets' files of the previous
         // snapshot — untouched buckets are never read
         val baseDirs = touched.toSeq.flatMap(prev.get).distinct.sorted
         val base =
           if (baseDirs.isEmpty) batch.limit(0)
-          else spark.read.parquet(baseDirs: _*)
+          else df.sparkSession.read.parquet(baseDirs: _*)
             .withColumn("__bucket", bucketCol(b))
             // a carried dir can only hold its own bucket's keys, but a
             // prev dir shared by several buckets (never the case under
@@ -174,49 +158,46 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
           .filter(col("__rn") === 1)
           .drop("__rn")
 
-        if (Files.exists(stagedData)) FsUtil.deleteRecursively(stagedData)
+        FsUtil.deleteRecursively(stagedData)
         merged
           .repartition(col("__bucket"), col(keyCols.head))
           .sortWithinPartitions((keyCols :+ versionCol).map(col): _*)
           .write.mode("overwrite")
           .partitionBy("__bucket")
           .parquet(stagedData.toString)
-
-        if (Files.exists(dataDir)) FsUtil.deleteRecursively(dataDir)
-        Files.createDirectories(dataDir.getParent)
-        Files.move(stagedData, dataDir, StandardCopyOption.ATOMIC_MOVE)
-
-        // an all-dup touched bucket still re-elects its keepers, so every
-        // touched bucket with ≥1 surviving key has a dir; a touched
-        // bucket whose dir is absent (possible only if the merge emitted
-        // zero rows for it — cannot happen under keep-max semantics, but
-        // cheap to honor) falls back to its previous reference
-        val written = touched.filter(k =>
-          Files.isDirectory(dataDir.resolve(s"__bucket=$k")))
-        prev ++ written.map(k => k -> dataDir.resolve(s"__bucket=$k").toString)
       }
-
-    // snapshot manifest: full bucket→dir map, untouched entries carried
-    // forward by reference (the files themselves are not touched)
-    val snapDir = manifestPath(batchId).getParent
-    val stagedSnap = Paths.get(outDir, "snapshots", s"_staging-v=$batchId")
-    if (Files.exists(stagedSnap)) FsUtil.deleteRecursively(stagedSnap)
-    Files.createDirectories(stagedSnap)
-    Files.write(stagedSnap.resolve("manifest"),
-      newManifest.toSeq.sortBy(_._1)
-        .map { case (k, d) => s"$k\t$d" }.mkString("\n").getBytes("UTF-8"))
-    if (Files.exists(snapDir)) FsUtil.deleteRecursively(snapDir)
-    Files.move(stagedSnap, snapDir, StandardCopyOption.ATOMIC_MOVE)
-
-    // commit: marker first, then swing the latest pointer (a reader
-    // between the two still sees the previous consistent snapshot)
-    Files.write(commitMarker(batchId),
-      s"$batchId".getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-    val tmpPtr = Paths.get(outDir, s"_latest.tmp.$batchId")
-    Files.write(tmpPtr, s"$batchId".getBytes("UTF-8"))
-    Files.move(tmpPtr, latestPtr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+      (prev, touched)
+    }
+    def snapshot(): Unit = {
+      val (prev, touched) = staged
+      // an all-dup touched bucket still re-elects its keepers, so every
+      // touched bucket with ≥1 surviving key has a dir; a touched
+      // bucket whose dir is absent (possible only if the merge emitted
+      // zero rows for it — cannot happen under keep-max semantics, but
+      // cheap to honor) falls back to its previous reference
+      val written = touched.filter(k => Files.isDirectory(dataDir.resolve(s"__bucket=$k")))
+      val manifest = prev ++ written.map(k => k -> dataDir.resolve(s"__bucket=$k").toString)
+      val stagedSnap = Paths.get(outDir, "snapshots", s"_staging-v=$batchId")
+      FsUtil.deleteRecursively(stagedSnap)
+      Files.createDirectories(stagedSnap)
+      Files.write(stagedSnap.resolve("manifest"),
+        manifest.toSeq.sortBy(_._1)
+          .map { case (k, d) => s"$k\t$d" }.mkString("\n").getBytes("UTF-8"))
+      FsUtil.publish(stagedSnap, manifestPath(batchId).getParent)
+    }
+    // the marker comes before the pointer: a reader between the two
+    // still sees the previous consistent snapshot
+    commit.steps(batchId, df, Seq(
+      BatchCommit.Step("pin", () =>
+        if (!Files.exists(bucketsPin)) FsUtil.replace(bucketsPin, numBuckets.toString.getBytes("UTF-8"))),
+      BatchCommit.Step("stage", () => staged),
+      BatchCommit.Step("publish", () =>
+        if (staged._2.nonEmpty) FsUtil.publish(stagedData, dataDir)),
+      BatchCommit.Step("snapshot", () => snapshot())),
+      s"$batchId",
+      Seq(BatchCommit.Step("swing", () =>
+        if (latestCommitted.forall(_ < batchId))
+          FsUtil.replace(latestPtr, s"$batchId".getBytes("UTF-8")))))
   }
 
 }

@@ -3,8 +3,6 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
@@ -56,11 +54,9 @@ object StreamRunner {
   private def dirBytes(path: String): Long = {
     val p = Paths.get(path)
     try {
-      if (Files.isDirectory(p)) {
-        val stream = Files.list(p)
-        try stream.iterator.asScala.filter(f => Files.isRegularFile(f)).map(Files.size).sum
-        finally stream.close()
-      } else if (Files.isRegularFile(p)) Files.size(p)
+      if (Files.isDirectory(p))
+        FsUtil.list(p).filter(f => Files.isRegularFile(f)).map(Files.size).sum
+      else if (Files.isRegularFile(p)) Files.size(p)
       else 0L
     } catch { case _: java.io.IOException => 0L }
   }
@@ -191,11 +187,7 @@ object StreamRunner {
           .filter((org.apache.spark.sql.functions.col(idCol) % m)
             .divide(div).cast("int") === i)
           .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val stream = Files.list(stage)
-        val part =
-          try stream.iterator.asScala
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          finally stream.close()
+        val part = FsUtil.list(stage).find(_.getFileName.toString.endsWith(".parquet")).get
         Files.move(part, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
         FsUtil.deleteRecursively(stage)
         Files.setLastModifiedTime(dir.resolve(name),
@@ -212,12 +204,9 @@ object StreamRunner {
   private def dataFiles(path: java.nio.file.Path): Int =
     if (Files.isRegularFile(path)) 1
     else if (!Files.isDirectory(path)) 0
-    else {
-      val stream = Files.list(path)
-      try stream.iterator.asScala.count { f =>
-        val name = f.getFileName.toString
-        Files.isRegularFile(f) && !name.startsWith("_") && !name.startsWith(".")
-      } finally stream.close()
+    else FsUtil.list(path).count { f =>
+      val name = f.getFileName.toString
+      Files.isRegularFile(f) && !name.startsWith("_") && !name.startsWith(".")
     }
 
   /** The number of data micro-batches (progress entries with input
