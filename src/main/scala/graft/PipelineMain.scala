@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.sink.{ExactlyOnceSink, UpsertSink}
-import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics, StreamRunner}
+import graft.sink.{CommittedSink, ExactlyOnceSink, UpsertSink}
+import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, StreamRunner}
 
 /** The deployable engine application — `spark-submit --class
   * graft.PipelineMain <jar> [options]` runs the full reference
@@ -25,8 +25,8 @@ import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics, Str
   *   [optional] token-budget admission → sink     (ingestion-time mix
   *                                                 control; --rocksdb)
   *
-  * Every sink is the exactly-once batchId-committed MERGE protocol
-  * with per-partition lineage (D2/D7); restart with the same
+  * Every sink commits each batchId once (D2); the upsert sink MERGEs,
+  * the others append with per-partition lineage (D7); restart with the same
   * checkpoint dir resumes with no dup/dropped rows. The master comes
   * from `spark-submit --master` or `-Dspark.master`; without either the
   * app runs at `local[SPARK_GRAFT_CPUS]` (unset: the host's cores, at
@@ -43,7 +43,8 @@ import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics, Str
   *   --state-ttl-ms <n>  dedup state TTL (default 1800000)
   *   --once              Trigger.AvailableNow (drain + exit); default
   *   --interval <dur>    Trigger.ProcessingTime instead of --once
-  *   --rocksdb           use the RocksDB state store provider
+  *   --rocksdb           RocksDB state store for every enabled pipeline;
+  *                       sessions runs its TWS variant; budget needs it
   *   --pipelines <csv>   enable only the named pipelines out of
   *                       mapped,dedup,rollup,sessions,join,upsert,budget
   *                       (default: the first four, plus join when
@@ -119,14 +120,13 @@ object PipelineMain {
     loop(args.toList, Map.empty)
   }
 
-  /** Handle on one completed [[run]]: the exactly-once sink per
-    * enabled pipeline (lineage + committed data) and the metrics
+  /** Handle on one completed [[run]]: the sink of each enabled
+    * pipeline in [[AllPipelines]] order, and the metrics
     * listener — what main prints and what the reconciliation spec
     * asserts over.
     */
   final case class PipelineRun(
-      sinks: Map[String, ExactlyOnceSink],
-      upserts: Map[String, UpsertSink],
+      sinks: scala.collection.immutable.ListMap[String, CommittedSink],
       listener: GraftQueryListener)
 
   def main(args: Array[String]): Unit = {
@@ -152,33 +152,15 @@ object PipelineMain {
     val summary = AllPipelines.map(p => s"graft_$p")
       .map(n => s""""$n":{"rows":${r.listener.totalInputRows(n)},"batches":${r.listener.batches(n)},"late_dropped":${r.listener.droppedByWatermark(n)}}""")
       .mkString("{", ",", "}")
-    // lineage reconciliation (D7): every committed batch's partition
-    // counts must sum to its observed total, and the totals must equal
-    // what a reader of the committed data sees — surfaced in the run
-    // summary so an unreconciled run is visible, not silent
-    val reconcile = (r.sinks.map { case (name, sink) =>
-      val lin = sink.lineage
-      val partsOk = lin.forall(b => b.partitionRows.sum == b.rows)
-      val total = lin.map(_.rows).sum
-      val committed = sink.readCommitted(spark).count()
-      s""""$name":{"lineage_rows":$total,"committed_rows":$committed,"partitions_consistent":$partsOk,"reconciled":${partsOk && total == committed}}"""
-    } ++ r.upserts.map { case (name, sink) =>
-      // upsert conservation: the merged snapshot holds exactly one row
-      // per key (the version-guarded winner), so merged rows must
-      // equal distinct keys — and the input rows the listener observed
-      // must be ≥ merged rows (merge only ever collapses)
-      val merged = sink.readLatest(spark)
-      val rows = merged.count()
-      val keys =
-        if (rows == 0) 0L else merged.select(col("clip_id")).distinct().count()
-      val observed = r.listener.totalInputRows("graft_upsert")
-      s""""$name":{"merged_rows":$rows,"distinct_keys":$keys,"input_rows":$observed,"reconciled":${rows == keys && observed >= rows}}"""
-    }).mkString("{", ",", "}")
+    // each sink's reconciliation: an unreconciled run is visible, not silent
+    val reconcile = r.sinks.map { case (name, sink) =>
+      s""""$name":${sink.reconciliation(spark, r.listener.totalInputRows(s"graft_$name"))}"""
+    }.mkString("{", ",", "}")
     // budget conservation: the prefix sum is only correct if the
     // per-source running total survived every batch boundary — then
     // max(cum_tokens) over committed rows equals the source's total
     // token count (admitted AND rejected audit rows both count)
-    val budgetJson = r.sinks.get("budget").map { sink =>
+    val budgetJson = r.sinks.get("budget").collect { case sink: ExactlyOnceSink =>
       // one aggregation over the committed table: per-source rollup is
       // tiny (strata are few), so fold conservation + totals into a
       // single job and finish driver-side. coalesce: SUM over zero
@@ -206,12 +188,6 @@ object PipelineMain {
     * query to fail stops the others and its own error is rethrown.
     */
   private[graft] def run(spark: SparkSession, opt: Map[String, String],
-      enabled: Seq[String]): PipelineRun =
-    if (opt.contains("rocksdb"))
-      StreamRunner.withConf(spark, StreamRunner.RocksDB)(drain(spark, opt, enabled))
-    else drain(spark, opt, enabled)
-
-  private def drain(spark: SparkSession, opt: Map[String, String],
       enabled: Seq[String]): PipelineRun = {
     val input = opt.getOrElse("input", {
       graft.synth.ClipGen.stagedClips(spark, "/root/testdata/sf0.001").head(1)
@@ -239,11 +215,11 @@ object PipelineMain {
       .as[ClipMeta]
 
     def exactlyOnce(dir: String, orderCols: String*) =
-      Left(new ExactlyOnceSink(s"$output/$dir", orderCols))
+      new ExactlyOnceSink(s"$output/$dir", orderCols)
 
     // one entry per enabled pipeline: its sink and its output frame.
     // The checkpoint is <ckpt>/<name>, the query name graft_<name>.
-    val pipelines: Seq[(String, Either[ExactlyOnceSink, UpsertSink], DataFrame)] =
+    val pipelines: Seq[(String, CommittedSink, DataFrame)] =
       AllPipelines.filter(enabled.contains).map { name =>
         val (sink, out) = name match {
           // decode map → mapped-record sink (the reference's core
@@ -257,7 +233,7 @@ object PipelineMain {
             }
             val mapped = decoded.toDF()
               .withColumn("event_time", col("event_time").cast("timestamp"))
-            (exactlyOnce("mapped", "out_id"), Metrics.observed(mapped, "mapped_out"))
+            (exactlyOnce("mapped", "out_id"), mapped)
           // keyed stateful dedup decisions (D1)
           case "dedup" =>
             (exactlyOnce("dedup", "clip_id", "occurrence"),
@@ -307,8 +283,7 @@ object PipelineMain {
                 col("transcript"),
                 col("event_time").cast("timestamp").as("event_time"))
               .withColumn("ver", unix_micros(col("event_time")))
-            (Right(new UpsertSink(s"$output/upsert", Seq("clip_id"), "ver")),
-              Metrics.observed(keyed, "upsert_in"))
+            (new UpsertSink(s"$output/upsert", Seq("clip_id"), "ver"), keyed)
           // per-source token-budget admission (the ingestion-time mixing
           // control — s34's stateful operator as a deployable stage):
           // each codec stratum admits clips in processing order until its
@@ -335,35 +310,11 @@ object PipelineMain {
         (name, sink, out)
       }
 
-    def start(name: String, sink: Either[ExactlyOnceSink, UpsertSink],
-        out: DataFrame): StreamingQuery =
-      out.writeStream
-        .queryName(s"graft_$name")
-        .foreachBatch(sink.fold(s => s.write _, s => s.write _))
-        .option("checkpointLocation", s"$ckpt/$name")
-        .trigger(trigger)
-        .start()
-
-    val listener = new GraftQueryListener
-    spark.streams.addListener(listener)
-    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
-    try {
-      pipelines.foreach { case (name, sink, out) => started += start(name, sink, out) }
-      // the first query to fail stops its siblings and is rethrown
-      StreamRunner.awaitAll(started.toSeq)
-      // progress events arrive on the async listener bus — drain it
-      // before detaching, or the summary can miss the final micro-batch
-      if (!org.apache.spark.sql.graftbridge.SparkBridge
-          .drainListenerBus(spark.sparkContext, 30000L))
-        System.err.println(
-          "[pipeline] WARN listener bus not drained in 30s; metrics summary may undercount")
-    } finally {
-      started.foreach(_.stop())
-      spark.streams.removeListener(listener)
-    }
-    PipelineRun(
-      pipelines.collect { case (name, Left(sink), _) => name -> sink }.toMap,
-      pipelines.collect { case (name, Right(sink), _) => name -> sink }.toMap,
-      listener)
+    val (_, listener) = StreamRunner.run(pipelines.map { case (name, sink, out) =>
+      StreamRunner.Query(s"graft_$name", out, StreamRunner.Sink.Batches(sink.write),
+        Some(s"$ckpt/$name"))
+    }, trigger, if (opt.contains("rocksdb")) Seq(StreamRunner.RocksDB) else Nil)
+    PipelineRun(scala.collection.immutable.ListMap(
+      pipelines.map { case (name, sink, _) => name -> sink }: _*), listener)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.ClipPipeline
+import graft.streaming.{ClipPipeline, StreamRunner}
 import graft.synth.ClipGen
 
 /** Scaling-efficiency evidence (BASELINE.json `north_rule`): the same
@@ -306,12 +306,9 @@ object ScalingBench {
         .withColumn("event_time", col("event_time").cast("timestamp"))
         .withWatermark("event_time", "10 minutes")
         .as[graft.streaming.ClipMeta]
-      val q = ClipPipeline.dedupStage(clips).toDF()
-        .writeStream.format("noop")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.toSeq
+      StreamRunner.run(Seq(StreamRunner.Query("graft_p99_probe",
+        ClipPipeline.dedupStage(clips).toDF(), StreamRunner.Sink.Noop)))._1.head
+        .recentProgress.toSeq
         .filter(_.numInputRows > 0)
         .map(_.durationMs.get("triggerExecution").toDouble)
     } finally spark.stop()

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * At cluster scale steps 3-4 map onto a metastore/Iceberg snapshot
   * commit; the protocol (idempotence keyed on batchId) is unchanged.
   */
-class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends Serializable {
+class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends CommittedSink {
 
   private val commit = new BatchCommit(outDir)
   private def dataDir(batchId: Long): Path = Paths.get(outDir, "data", s"batch=$batchId")
@@ -39,7 +39,6 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends Serializab
   private def lineageFile(batchId: Long): Path = Paths.get(outDir, "_lineage", s"$batchId.json")
 
   def committedBatchIds: Seq[Long] = commit.committedBatchIds
-  def isCommitted(batchId: Long): Boolean = commit.isCommitted(batchId)
 
   /** The foreachBatch function. Safe to call repeatedly with the same
     * batchId (idempotent); safe to re-run after a crash at any step.
@@ -142,6 +141,14 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends Serializab
       spark.emptyDataFrame
     else
       spark.read.parquet(dirs.map(_.toString): _*)
+  }
+
+  /** Lineage (D7): Σ partition rows = each batch's total; Σ totals = committed rows. */
+  def reconciliation(spark: org.apache.spark.sql.SparkSession, inputRows: Long): String = {
+    val lin = lineage
+    val partsOk = lin.forall(b => b.partitionRows.sum == b.rows)
+    val (total, committed) = (lin.map(_.rows).sum, readCommitted(spark).count())
+    s"""{"lineage_rows":$total,"committed_rows":$committed,"partitions_consistent":$partsOk,"reconciled":${partsOk && total == committed}}"""
   }
 
 }

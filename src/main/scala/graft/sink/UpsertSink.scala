@@ -57,7 +57,7 @@ import org.apache.spark.sql.functions._
   */
 class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
     numBuckets: Int = 16)
-    extends Serializable {
+    extends CommittedSink {
 
   require(keyCols.nonEmpty)
   require(numBuckets > 0)
@@ -81,7 +81,6 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
     pmod(xxhash64(keyCols.map(col): _*), lit(b.toLong)).cast("int")
 
   def committedBatchIds: Seq[Long] = commit.committedBatchIds
-  def isCommitted(batchId: Long): Boolean = commit.isCommitted(batchId)
 
   def latestCommitted: Option[Long] =
     if (!Files.exists(latestPtr)) None
@@ -104,6 +103,14 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
     val dirs = latestManifest.values.toSeq.sorted
     if (dirs.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(dirs: _*)
+  }
+
+  /** One merged row per key, and no more merged rows than input rows. */
+  def reconciliation(spark: SparkSession, inputRows: Long): String = {
+    val merged = readLatest(spark)
+    val rows = merged.count()
+    val keys = if (rows == 0) 0L else merged.select(keyCols.map(col): _*).distinct().count()
+    s"""{"merged_rows":$rows,"distinct_keys":$keys,"input_rows":$inputRows,"reconciled":${rows == keys && inputRows >= rows}}"""
   }
 
   /** foreachBatch entrypoint: MERGE `df` into the latest snapshot,

@@ -23,17 +23,9 @@ object Metrics {
 
   val DefaultName = "graft_metrics"
 
-  /** Attach row/error counters to a stage. `errorCol` (boolean) counts
-    * quarantined records — the reference's per-record error-log
-    * analogue.
-    */
-  def observed(df: DataFrame, name: String = DefaultName,
-      errorCol: Option[String] = None): DataFrame = {
-    val counters = Seq(
-      count(lit(1)).as("rows_total")) ++
-      errorCol.map(c => count(when(col(c), 1)).as("rows_error")).toSeq
-    df.observe(name, counters.head, counters.tail: _*)
-  }
+  /** Attach a row counter to a stage. */
+  def observed(df: DataFrame, name: String = DefaultName): DataFrame =
+    df.observe(name, count(lit(1)).as("rows_total"))
 }
 
 /** Collects streaming progress per query name. Thread-safe; events

@@ -3,12 +3,12 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.graftbridge.SparkBridge
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.sink.FsUtil
@@ -16,8 +16,8 @@ import graft.sink.FsUtil
 /** Helpers for driving streaming plans to a deterministic batch result
   * (the engine's TopologyTestDriver analogue, SURVEY.md §5) and for
   * reading the file-backed input streams. Every query run here is
-  * started, sized from its own sources, given the state store its plan
-  * needs, awaited, checked against the arrival schedule of its sources
+  * started ([[run]]), given the state store its plan needs, awaited
+  * (a suite query is also sized and checked against its schedule)
   * and released, state stores included, in one place.
   */
 object StreamRunner {
@@ -257,10 +257,8 @@ object StreamRunner {
     */
   def runToSink(stream: DataFrame, checkpoint: String)(
       write: (DataFrame, Long) => Unit): Unit =
-    drainAll(Seq(stream -> stream.writeStream
-      .foreachBatch(write)
-      .queryName(s"graft_sink_${counter.incrementAndGet()}")
-      .option("checkpointLocation", checkpoint)))
+    drainAll(Seq(Query(s"graft_sink_${counter.incrementAndGet()}", stream,
+      Sink.Batches(write), Some(checkpoint))))
 
   /** The memory-sink runs: each result is read off its `graft_mem_*`
     * view, and the view is dropped once the frame is taken (the frame
@@ -270,23 +268,15 @@ object StreamRunner {
     require(streams.nonEmpty, "a memory-sink run needs at least one query")
     val spark = streams.head._1.sparkSession
     val named = streams.map { case (df, mode) =>
-      (s"graft_mem_${counter.incrementAndGet()}", df, mode)
+      Query(s"graft_mem_${counter.incrementAndGet()}", df, Sink.Memory(mode))
     }
-    try
-      drainAll(named.map { case (name, df, mode) =>
-        df -> df.writeStream.format("memory").queryName(name).outputMode(mode)
-      }).map(q => spark.table(q.name))
-    finally named.foreach { case (name, _, _) => spark.catalog.dropTempView(name) }
+    try drainAll(named).map(q => spark.table(q.name))
+    finally named.foreach(q => spark.catalog.dropTempView(q.name))
   }
 
-  /** Start every writer with Trigger.AvailableNow and wait for all of
-    * them ([[awaitAll]]) in one conf scope ([[withConf]]):
-    * `spark.sql.shuffle.partitions` sized from the sources of the
-    * streams they write (see the sizing note above), and the RocksDB
-    * state store provider when any of their plans holds a
-    * `transformWithState` operator (the API is RocksDB-only; every other
-    * query keeps the session's provider). Batch queries keep their own
-    * settings. Each query must then have run exactly the data
+  /** [[run]] under the suite's policy: `spark.sql.shuffle.partitions`
+    * sized from the sources of the streams they write (see the sizing
+    * note above). Each query must then have run exactly the data
     * micro-batches its sources imply ([[expectedDataBatches]], taken
     * before the start), or the run fails naming the query and both
     * counts: an oracle that models a batch schedule must not silently
@@ -294,80 +284,98 @@ object StreamRunner {
     * keeps the last `spark.sql.streaming.numRecentProgressUpdates` =
     * 100 entries.)
     */
-  private def drainAll(
-      writers: Seq[(DataFrame, DataStreamWriter[Row])]): Seq[StreamingQuery] = {
-    val spark = writers.head._1.sparkSession
-    val expected = writers.map(w => expectedDataBatches(w._1))
+  private def drainAll(queries: Seq[Query]): Seq[StreamingQuery] = {
+    val spark = queries.head.frame.sparkSession
+    val expected = queries.map(q => expectedDataBatches(q.frame))
     val partitions = "spark.sql.shuffle.partitions" ->
-      sizedStatePartitions(spark, writers.map(w => sourceBytes(w._1)).sum).toString
-    val tws = writers.exists(
-      _._1.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
-    withConf(spark, Seq(partitions) ++ Option.when(tws)(RocksDB): _*) {
-      val queries = writers.map(_._2.trigger(Trigger.AvailableNow()).start())
-      awaitAll(queries)
-      queries.zip(expected).foreach { case (q, want) =>
-        val got = q.recentProgress.count(_.numInputRows > 0)
-        want.filter(_ != got).foreach { n =>
-          throw new IllegalStateException(
-            s"streaming query ${q.name} ran $got data micro-batches; its sources imply $n")
-        }
+      sizedStatePartitions(spark, queries.map(q => sourceBytes(q.frame)).sum).toString
+    val started = run(queries, settings = Seq(partitions))._1
+    started.zip(expected).foreach { case (q, want) =>
+      val got = q.recentProgress.count(_.numInputRows > 0)
+      want.filter(_ != got).foreach { n =>
+        throw new IllegalStateException(
+          s"streaming query ${q.name} ran $got data micro-batches; its sources imply $n")
       }
-      queries
     }
+    started
   }
 
-  /** Runs `f` with each of `settings` set on the session's conf, then
-    * restores each key's previous value (or unsets it). A streaming
-    * query clones the session's conf on its own thread after `start()`
-    * returns, so `f` must not return before its queries end. The
-    * engine's one save/set/restore of session conf.
+  private[graft] sealed trait Sink
+  private[graft] object Sink {
+    final case class Memory(mode: String) extends Sink
+    case object Noop extends Sink
+    final case class Batches(write: (DataFrame, Long) => Unit) extends Sink
+  }
+
+  /** One query of a [[run]]; memory and noop sinks need no checkpoint. */
+  private[graft] final case class Query(name: String, frame: DataFrame, sink: Sink,
+      checkpoint: Option[String] = None)
+
+  /** Starts every query with `trigger` under `settings`, plus RocksDB
+    * when a plan holds `transformWithState`: the engine's one save, set
+    * and restore of session conf. One listener watches them; whatever
+    * happens, every started query is stopped, the bus drained, the
+    * listener detached, the state stores unloaded once the session
+    * streams nothing, and the conf restored. `PipelineMain` and the p99
+    * probe keep the session's shuffle partitions (sizing would override a
+    * deployment's `--conf`) and get no batch count check (it serves
+    * oracle parity): both are the suite's ([[drainAll]]).
     */
-  private[graft] def withConf[T](spark: SparkSession, settings: (String, String)*)(f: => T): T = {
-    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+  private[graft] def run(queries: Seq[Query], trigger: Trigger = Trigger.AvailableNow(),
+      settings: Seq[(String, String)] = Nil): (Seq[StreamingQuery], GraftQueryListener) = {
+    val spark = queries.head.frame.sparkSession
+    val tws = queries.exists(
+      _.frame.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+    val conf = (settings ++ Option.when(tws)(RocksDB)).distinct
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val listener = new GraftQueryListener
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
     try {
-      settings.foreach { case (k, v) => spark.conf.set(k, v) }
-      f
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.streams.addListener(listener)
+      queries.foreach { q =>
+        val w = q.frame.writeStream.queryName(q.name).trigger(trigger)
+        q.checkpoint.foreach(w.option("checkpointLocation", _))
+        started += (q.sink match {
+          case Sink.Memory(mode)   => w.format("memory").outputMode(mode)
+          case Sink.Noop           => w.format("noop")
+          case Sink.Batches(write) => w.foreachBatch(write)
+        }).start()
+      }
+      awaitAll(started.toSeq)
+    } finally {
+      started.foreach(stopQuietly)
+      if (!SparkBridge.drainListenerBus(spark.sparkContext, 30000L))
+        System.err.println("[stream] WARN listener bus not drained in 30s; counts may be short")
+      spark.streams.removeListener(listener)
+      if (spark.streams.active.isEmpty) SparkBridge.unloadStateStores()
+      // a query clones the conf on its own thread after start(): restore
+      // it only once every query has stopped
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
     }
+    (started.toSeq, listener)
   }
 
-  /** Waits until every query has ended, polling each `isActive`, and
-    * rethrows the earliest failure with the later ones attached as
-    * suppressed. The first failure seen stops the still-running
+  /** Waits until every query has ended or one has failed, polling each,
+    * and rethrows the failures, the first with the later ones attached
+    * as suppressed. [[run]] then stops the still-running
     * siblings (none is left running against a half-torn session), so a
     * failing query surfaces its own error at once instead of waiting
     * behind, or being masked by, a sibling that happened to be awaited
-    * first. Once they have all ended, and no other query of the session
-    * is running, every loaded state store provider is unloaded: the
-    * store cache is JVM-global and would otherwise keep the finished
-    * queries' providers, and their native RocksDB stores, until its
-    * maintenance task runs.
+    * first.
     */
-  private[graft] def awaitAll(queries: Seq[StreamingQuery]): Unit = {
-    def stopQuietly(q: StreamingQuery): Unit =
-      try q.stop() catch { case _: Throwable => () }
-    val failures = scala.collection.mutable.ArrayBuffer.empty[Throwable]
-    var running = queries
-    try {
-      while (running.nonEmpty) {
-        val (ended, active) = running.partition(!_.isActive)
-        failures ++= ended.flatMap(_.exception)
-        if (failures.nonEmpty) active.foreach(stopQuietly)
-        running = active
-        if (running.nonEmpty) Thread.sleep(10)
-      }
-    } catch {
-      case e: Throwable =>
-        queries.foreach(stopQuietly)
-        throw e
-    } finally queries.headOption.foreach { q =>
-      if (q.sparkSession.streams.active.isEmpty) SparkBridge.unloadStateStores()
-    }
+  private def awaitAll(queries: Seq[StreamingQuery]): Unit = {
+    while (queries.exists(_.isActive) && queries.forall(_.exception.isEmpty)) Thread.sleep(10)
+    val failures = queries.flatMap(_.exception)
     failures.headOption.foreach { first =>
       failures.tail.foreach(first.addSuppressed)
       throw first
     }
   }
+
+  private def stopQuietly(q: StreamingQuery): Unit =
+    try q.stop() catch { case _: Throwable => () }
 }

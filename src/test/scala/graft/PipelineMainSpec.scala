@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sink.{ExactlyOnceSink, UpsertSink}
 
 /** Boot-time configuration guards of the deployable app — the
   * reference refuses to start with zero enabled mappers
@@ -46,23 +52,43 @@ class PipelineMainSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("--updates"))
   }
 
+  /** One run of five pipelines (both sink kinds) over the staged
+    * sf0.001 clips, shared by the end-to-end and the resume test.
+    */
+  private lazy val e2e = {
+    val spark = TestSpark.spark
+    val out = Files.createTempDirectory("pipe_e2e_").toString
+    graft.synth.ClipGen.stagedClips(spark, "/root/testdata/sf0.001").head(1)
+    val input = graft.synth.ClipGen.clipsTablePath("/root/testdata/sf0.001")
+    val opt = Map("input" -> input, "output" -> out, "checkpoint" -> s"$out/_ckpt")
+    (opt, PipelineMain.run(spark, opt, Seq("mapped", "dedup", "rollup", "sessions", "upsert")))
+  }
+
+  private def exactlyOnce(r: PipelineMain.PipelineRun, name: String): ExactlyOnceSink =
+    r.sinks(name) match { case s: ExactlyOnceSink => s }
+
+  /** The `reconciled` field of a sink's JSON reconciliation record. */
+  private def reconciled(record: String): Boolean =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(record)
+      .path("reconciled").asBoolean(false)
+
   test("end-to-end run reconciles: Σ lineage = committed rows; mapped = input − quarantined") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("pipe_e2e_").toString
-    graft.synth.ClipGen.stagedClips(spark, "/root/testdata/sf0.001").head(1)
-    val input = graft.synth.ClipGen.clipsTablePath("/root/testdata/sf0.001")
-
-    val r = PipelineMain.run(spark,
-      Map("input" -> input, "output" -> out, "checkpoint" -> s"$out/_ckpt"),
-      Seq("mapped", "dedup", "rollup", "sessions", "upsert"))
-    assert(r.sinks.keySet == Set("mapped", "dedup", "rollup", "sessions"))
-    assert(r.upserts.keySet == Set("upsert"))
+    val (opt, r) = e2e
+    val input = opt("input")
+    // one sinks table, in pipeline order
+    assert(r.sinks.keys.toSeq == Seq("mapped", "dedup", "rollup", "sessions", "upsert"))
+    assert(r.sinks("upsert").isInstanceOf[UpsertSink])
+    r.sinks.foreach { case (name, sink) =>
+      val rec = sink.reconciliation(spark, r.listener.totalInputRows(s"graft_$name"))
+      assert(reconciled(rec), s"$name: $rec")
+    }
 
     // lineage conservation per sink: each committed batch's partition
     // counts sum to its observed total, and the totals equal what a
     // reader of the committed data sees (D7)
-    r.sinks.foreach { case (name, sink) =>
+    r.sinks.collect { case (name, sink: ExactlyOnceSink) => name -> sink }.foreach { case (name, sink) =>
       val lin = sink.lineage
       assert(lin.nonEmpty, s"$name committed no batches")
       lin.foreach(b => assert(b.partitionRows.sum == b.rows,
@@ -76,13 +102,13 @@ class PipelineMainSpec extends AnyFunSuite {
     val clips = spark.read.parquet(input).as[graft.model.Clip]
     val inputRows = clips.count()
     val quarantined = graft.streaming.ClipPipeline.quarantineStage(clips).count()
-    val mappedRows = r.sinks("mapped").readCommitted(spark).count()
+    val mappedRows = exactlyOnce(r, "mapped").readCommitted(spark).count()
     assert(quarantined > 0, "fixture must exercise the quarantine path")
     assert(mappedRows == inputRows - quarantined,
       s"mapped $mappedRows != input $inputRows - quarantined $quarantined")
 
     // dedup decisions: single-batch AvailableNow drains every input row
-    assert(r.sinks("dedup").readCommitted(spark).count() == inputRows)
+    assert(exactlyOnce(r, "dedup").readCommitted(spark).count() == inputRows)
 
     // sessions: the committed closed-session set must equal the
     // single-batch model (per key: event-time order, split at the
@@ -119,7 +145,7 @@ class PipelineMainSpec extends AnyFunSuite {
       if (timerMs < wmMs) expectedClosed += 1
       else withheldRows += open.size
     }
-    val committedSessions = r.sinks("sessions").readCommitted(spark)
+    val committedSessions = exactlyOnce(r, "sessions").readCommitted(spark)
     assert(committedSessions.count() == expectedClosed,
       s"sessions: committed ${committedSessions.count()} != model $expectedClosed")
     val committedRecords = committedSessions
@@ -130,7 +156,7 @@ class PipelineMainSpec extends AnyFunSuite {
     // upsert: the merged snapshot is exactly the latest-event-time row
     // per clip_id of the input (version-guarded MERGE conservation:
     // one row per distinct key, each the argmax of its key)
-    val merged = r.upserts("upsert").readLatest(spark)
+    val merged = r.sinks("upsert").asInstanceOf[UpsertSink].readLatest(spark)
       .select("clip_id", "transcript", "ver")
     val expectedKeys = spark.read.parquet(input)
       .select("clip_id").distinct().count()
@@ -149,6 +175,39 @@ class PipelineMainSpec extends AnyFunSuite {
     assert(merged.exceptAll(expectedWinners).isEmpty &&
       expectedWinners.exceptAll(merged).isEmpty,
       "upsert: merged snapshot differs from per-key latest-version winners")
+  }
+
+  test("a second --once run with no new input commits nothing and changes no sink file") {
+    val spark = TestSpark.spark
+    val (opt, first) = e2e
+    val out = Paths.get(opt("output"))
+    // every sink file, keyed by its path under the output root; the
+    // checkpoint (Spark's own logs) is left out
+    def files(): Map[String, String] = {
+      val walk = Files.walk(out)
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && !p.startsWith(out.resolve("_ckpt")))
+        .map((p: Path) => out.relativize(p).toString ->
+          java.security.MessageDigest.getInstance("MD5").digest(Files.readAllBytes(p))
+            .map("%02x".format(_)).mkString)
+        .toMap
+      finally walk.close()
+    }
+    val before = files()
+    val commitsBefore = first.sinks.map { case (n, s) => n -> s.committedBatchIds }
+    val again = PipelineMain.run(spark, opt + ("once" -> "true"), first.sinks.keys.toSeq)
+    assert(again.sinks.map { case (n, s) => n -> s.committedBatchIds } == commitsBefore)
+    val after = files()
+    val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+    assert(changed.isEmpty, s"sink files changed by the resumed run: ${changed.toSeq.sorted.mkString(", ")}")
+    // the upsert record's input rows are one run's listener count: a
+    // resumed sink reconciles against the rows its query read in both
+    again.sinks.foreach { case (name, sink) =>
+      val q = s"graft_$name"
+      val rec = sink.reconciliation(spark,
+        first.listener.totalInputRows(q) + again.listener.totalInputRows(q))
+      assert(reconciled(rec), s"$name after the resumed run: $rec")
+    }
   }
 
   test("budget pipeline: per-source prefix conservation; boot guard without --rocksdb") {
@@ -170,7 +229,7 @@ class PipelineMainSpec extends AnyFunSuite {
         "rocksdb" -> "true", "token-budget" -> "200"),
       Seq("budget"))
     assert(spark.conf.getOption(provider) == providerBefore)
-    val per = r.sinks("budget").readCommitted(spark)
+    val per = exactlyOnce(r, "budget").readCommitted(spark)
       .groupBy(col("source"))
       .agg(max(col("cum_tokens")).as("max_cum"), sum(col("n_tok")).as("tot"),
         sum(when(col("admitted"), 1L).otherwise(0L)).as("adm"),

@@ -14,4 +14,19 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `f` with `settings` set on `spark`'s conf, then restores each
+    * key's previous value (or unsets it): for suites that start their
+    * own queries, outside the engine's one entry.
+    */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(f: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      f
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

@@ -158,7 +158,7 @@ class BatchCommitSpec extends AnyFunSuite {
       .withColumn("event_time", col("event_time").cast("timestamp"))
       .withWatermark("event_time", "10 minutes")
       .as[ClipMeta]).toDF()
-    StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+    TestSpark.withConf(spark, StreamRunner.RocksDB) {
       crashMatrix[ExactlyOnceSink](base, () => stream(),
         new ExactlyOnceSink(_, Seq("clip_id", "occurrence")), _.write, s => s.steps _) { sink =>
         eoCheck(sink)

@@ -338,7 +338,7 @@ class MultiBatchModelSpec extends AnyFunSuite {
         ClipPipeline.sessionMergeStage(st.as[ClipMeta], GapMs).toDF()
       }
       assert(collect(fm) == want, s"fMGWS seed $seed")
-      val tw = StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+      val tw = TestSpark.withConf(spark, StreamRunner.RocksDB) {
         runEngine(batches, "append") { st =>
           graft.streaming.TwsSessionMerge.sessionMergeStageTws(st.as[ClipMeta], GapMs).toDF()
         }
@@ -660,7 +660,7 @@ class MultiBatchModelSpec extends AnyFunSuite {
       val batches = genDocs(seed)
       assert(batches.forall(_.nonEmpty), s"seed $seed: empty batch")
       val dir = stageBatchFiles(batches.map(_.toDF("doc_id", "text")))
-      val got = StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+      val got = TestSpark.withConf(spark, StreamRunner.RocksDB) {
         val stream = spark.readStream
           .schema("doc_id LONG, text STRING")
           .option("maxFilesPerTrigger", 1)

@@ -91,16 +91,30 @@ class StreamRunnerSpec extends AnyFunSuite {
       dirBytes("sized") + dirBytes("plain"))
   }
 
-  test(".writeStream under src/main appears only in StreamRunner, PipelineMain (once) and ScalingBench") {
-    val call = """\.\s*writeStream\b""".r
-    val counts = Files.walk(Paths.get("src/main")).iterator().asScala
+  test("under src/main only StreamRunner starts, awaits or sets the conf of a streaming query") {
+    val calls = Seq("""\.\s*writeStream\b""", """\bawaitTermination\b""", """\bwithConf\(""")
+      .map(_.r)
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .map(p => p.getFileName.toString -> call.findAllIn(Files.readString(p)).size)
-      .filter(_._2 > 0).toMap
-    val allowed = Set("StreamRunner.scala", "PipelineMain.scala", "ScalingBench.scala")
-    assert(counts.keySet.subsetOf(allowed),
-      s"streaming queries started outside StreamRunner: ${(counts -- allowed).mkString(", ")}")
-    assert(counts.get("PipelineMain.scala").contains(1), s"PipelineMain: $counts")
+      .filter(p => calls.exists(_.findFirstIn(Files.readString(p)).isDefined))
+      .map(_.getFileName.toString).toSet
+    assert(files == Set("StreamRunner.scala"),
+      s"streaming queries started or awaited outside StreamRunner: ${(files - "StreamRunner.scala").mkString(", ")}")
+  }
+
+  test("a start that throws stops the queries already started") {
+    val base = Files.createTempDirectory("start_fails_").toString
+    Seq("slow", "plain").foreach(d => spark.range(1).write.parquet(s"$base/$d"))
+    def source(d: String) = spark.readStream.schema("id LONG").parquet(s"$base/$d")
+    val slow = udf { (id: Long) => Thread.sleep(30000); id }
+    // complete mode over a stream without an aggregate: start() throws
+    intercept[org.apache.spark.sql.AnalysisException] {
+      StreamRunner.runAllToMemory(Seq(
+        source("slow").select(slow(col("id")).as("id")) -> "append",
+        source("plain") -> "complete"))
+    }
+    assert(!spark.streams.active.exists(q => Option(q.name).exists(_.startsWith("graft_mem_"))),
+      s"left running: ${spark.streams.active.map(_.name).mkString(", ")}")
   }
 
   /** `rows(i)` rows of `id` in file `f<i>.parquet` under `dir`, with

@@ -222,7 +222,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState dedup state survives checkpoint restart (D7, RocksDB)") {
-    StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+    TestSpark.withConf(spark, StreamRunner.RocksDB) {
       val base = java.nio.file.Files.createTempDirectory("tws_restart_").toString
       val inDir = s"$base/in"
       val ckpt = s"$base/ckpt"
@@ -262,7 +262,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful dedup runs on the RocksDB state store provider (D5)") {
-    StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+    TestSpark.withConf(spark, StreamRunner.RocksDB) {
       val input = MemoryStream[ClipMeta](6, spark, None)
       val q = ClipPipeline
         .dedupStage(input.toDS().withWatermark("event_time", "10 minutes"))
@@ -308,7 +308,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState dedup: numbering continues across batches, matches dedupStage semantics (D1)") {
-    StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+    TestSpark.withConf(spark, StreamRunner.RocksDB) {
       val input = MemoryStream[ClipMeta](30, spark, None)
       val q = graft.streaming.TwsDedup
         .dedupStageTws(input.toDS().withWatermark("event_time", "10 minutes"))
@@ -672,7 +672,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState session-merge state + timer survive checkpoint restart (D7, RocksDB)") {
-    StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+    TestSpark.withConf(spark, StreamRunner.RocksDB) {
       val base = java.nio.file.Files.createTempDirectory("tws_sess_restart_").toString
       val inDir = s"$base/in"
       val ckpt = s"$base/ckpt"
@@ -723,7 +723,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming near-dup ListState + admission cap survive checkpoint restart (D7, RocksDB, s29)") {
-    StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+    TestSpark.withConf(spark, StreamRunner.RocksDB) {
       val base = java.nio.file.Files.createTempDirectory("neardup_restart_").toString
       val inDir = s"$base/in"
       val ckpt = s"$base/ckpt"
@@ -787,7 +787,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("top-k heap survives checkpoint restart: eviction state carries (D7, RocksDB, s39)") {
-    StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+    TestSpark.withConf(spark, StreamRunner.RocksDB) {
       val base = java.nio.file.Files.createTempDirectory("topk_restart_").toString
       val inDir = s"$base/in"
       val ckpt = s"$base/ckpt"
@@ -839,7 +839,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("token-budget ValueState survives checkpoint restart: the total carries (D7, RocksDB, s35)") {
-    StreamRunner.withConf(spark, StreamRunner.RocksDB) {
+    TestSpark.withConf(spark, StreamRunner.RocksDB) {
       val base = java.nio.file.Files.createTempDirectory("tokbudget_restart_").toString
       val inDir = s"$base/in"
       val ckpt = s"$base/ckpt"
