@@ -18,6 +18,27 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+    // scaling-efficiency evidence (north rule), measured FIRST: before
+    // the suite session exists and before 2×121 query executions, so no
+    // suite work shares its host window. SPARK_GRAFT_SKIP_SCALING=1
+    // skips the multi-minute probe for local iteration (e.g. the
+    // data-scaling curve in BENCH.md §4, which times the suite at several
+    // SFs and does not need a fresh core-scaling measurement per SF).
+    // BENCH_r*.json is recorded without the flag, so it always carries
+    // the block.
+    val scalingJson =
+      if (sys.env.get("SPARK_GRAFT_SKIP_SCALING")
+          .exists(v => v == "1" || v.equalsIgnoreCase("true")))
+        """{"skipped":"SPARK_GRAFT_SKIP_SCALING set"}"""
+      else
+        try ScalingBench.scalingEvidence(sfDir)
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] scaling evidence failed: ${e.getMessage}")
+            """{"error":"scaling evidence failed"}"""
+        }
+
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -90,21 +111,15 @@ object Bench {
     val tp =
       f"""{"decode_clips_per_sec":$decodeClipsPerSec%.1f,"stream_dedup_rows_per_sec":$dedupRowsPerSec%.1f,"n_events":$nEvents}"""
 
-    // scaling-efficiency evidence (north rule): delegate to the
-    // dedicated ScalingBench methodology (work_scale=6, reps=3 min,
-    // lo=6/hi=24, two recorded passes; ceiling probes outside
-    // [0.5, 1.25] rejected and re-run; ceiling AND normalized clamped
-    // ≤1.0; headline pass selected by RAW efficiency) so the
-    // driver-collected artifact records the same number the full
-    // harness measures — a previous compact rider ran too little work
-    // per timed pass and recorded an overhead-dominated efficiency
-    // that failed the ≥0.8 gate, and the round-2 recorder let a
-    // corrupted 0.27 ceiling probe inflate the headline to 2.899.
     spark.stop()
 
-    // end-to-end p99 micro-batch latency of the stateful dedup pipeline
+    // p99 micro-batch latency of the stateful dedup pipeline
     // (BASELINE.md engine target: clips/sec + p99) — 16 Kafka-partition-
-    // sized file triggers through decode-metadata → stateful dedup
+    // sized file triggers through decode-metadata → stateful dedup.
+    // Over 16 triggers the nearest-rank p99 is their MAXIMUM, and in the
+    // sf0.001 event logs that maximum was the cold first trigger
+    // (codegen, state store creation), so the field reads first-trigger
+    // latency, not steady-state micro-batch latency.
     System.gc() // suite GC debt must not bleed into the latency probe
     val p99Ms =
       try ScalingBench.p99(ScalingBench.runStreamLatencies(cpus.toInt, sfDir))
@@ -113,23 +128,6 @@ object Bench {
           System.err.println(s"[bench] p99 probe failed: ${e.getMessage}")
           -1.0
       }
-
-    // SPARK_GRAFT_SKIP_SCALING=1 skips the multi-minute two-pass
-    // scaling probe for local iteration (e.g. the data-scaling curve
-    // in BENCH.md §4, which times the suite at several SFs and does
-    // not need a fresh core-scaling measurement per SF). The driver
-    // runs without the flag, so BENCH_r*.json always carries the block.
-    val scalingJson =
-      if (sys.env.get("SPARK_GRAFT_SKIP_SCALING")
-          .exists(v => v == "1" || v.equalsIgnoreCase("true")))
-        """{"skipped":"SPARK_GRAFT_SKIP_SCALING set"}"""
-      else
-        try ScalingBench.scalingEvidence(sfDir)
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] scaling evidence failed: ${e.getMessage}")
-            """{"error":"scaling evidence failed"}"""
-        }
 
     val line =
       f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"throughput":$tp,"stream_p99_batch_ms":$p99Ms%.0f,"scaling":$scalingJson,"cpus":$cpus,"sf":"$sfDir"}"""

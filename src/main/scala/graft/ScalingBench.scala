@@ -7,18 +7,36 @@ import graft.streaming.{ClipPipeline, StreamRunner}
 import graft.synth.ClipGen
 
 /** Scaling-efficiency evidence (BASELINE.json `north_rule`): the same
-  * job at two parallelism levels on identical input — `local[8]` vs
-  * `local[32]` stands in for N vs 4N executors (no real cluster in
-  * this sandbox). Prints one JSON line with throughput at both levels
-  * and the scaling efficiency  eff = (t_low / t_high) / (cpus_high /
-  * cpus_low); target ≥ 0.8.
+  * job at two parallelism levels on identical input — `local[6]` vs
+  * `local[24]` on one host stands in for N vs 4N executors.
+  * [[scalingEvidence]] returns one JSON block with throughput at both
+  * levels and the scaling efficiency
+  * eff = (t_low / t_high) / (cpus_high / cpus_low); target ≥ 0.8.
+  * Bench embeds the block; `runMain graft.ScalingBench evidence`
+  * prints it alone.
   *
   * Workload = the engine's hot path: staged clip table scan → fused
   * decode map → per-codec rollup (scan + narrow map + one partial-agg
-  * exchange), plus the streaming dedup micro-batch pipeline for p99
-  * batch latency.
+  * exchange). Bench's streaming dedup micro-batch latency probe
+  * ([[runStreamLatencies]], [[p99]]) also lives here.
   */
 object ScalingBench {
+
+  /** lo=6 / hi=24 (not 7/28): the 32-core VM needs headroom for GC and
+    * Spark daemon threads; at hi=28 the high-parallelism run is
+    * partially self-contended and under-reports the engine.
+    */
+  private val Lo = 6
+  private val Hi = 24
+  /** Paired (lo, hi) cycles per pass. */
+  private val Reps = 3
+  /** Self-unions of the staged table per timed run: with less work per
+    * timed run an earlier rider recorded an overhead-dominated 0.587
+    * (see [[decodeWorkload]]).
+    */
+  private val WorkScale = 6
+  /** Mutually consistent valid passes the headline needs. */
+  private val Passes = 2
 
   private def session(cpus: Int): SparkSession = {
     val s = GraftSession.builder(s"local[$cpus]", cpus.toString)
@@ -59,23 +77,23 @@ object ScalingBench {
     * ratio in either direction even when each block's own min-of-reps
     * is clean (observed: lo 22.8 s in a fast window against hi 8.4 s
     * in a mediocre one reads 0.68 on an engine whose same-window
-    * pairs read 0.78–0.83). JIT is process-wide, so after the first
-    * cycle the per-cycle warmup only repopulates the fresh session's
-    * plan caches.
+    * pairs read 0.78–0.83). Runs in a fresh child JVM (`child-pair`),
+    * so each level's untimed work-scale-1 run pays that JVM's JIT and
+    * class loading and its fresh session's plan caches before the
+    * timed run.
     */
-  private def runPair(lo: Int, hi: Int, sfDir: String,
-      workScale: Int): (Double, Double) = {
+  private def runPair(sfDir: String): (Double, Double) = {
     def once(cpus: Int): Double = {
       val spark = session(cpus)
       try {
         decodeWorkload(spark, sfDir, 1).write.format("noop")
           .mode("overwrite").save()
         System.gc()
-        timeIt(decodeWorkload(spark, sfDir, workScale)
+        timeIt(decodeWorkload(spark, sfDir, WorkScale)
           .write.format("noop").mode("overwrite").save())
       } finally spark.stop()
     }
-    (once(lo), once(hi))
+    (once(Lo), once(Hi))
   }
 
   // ---- direct external-load measurement (round-3 verdict #1c) ------------
@@ -127,18 +145,6 @@ object ScalingBench {
       extCpu: Double, valid: Boolean, reason: String,
       sentinel: Boolean = false)
 
-  /** Ratio statistics must run over REAL measurements: a budget-exhausted
-    * sentinel (ratio 0) entering the median would drag it toward 0 and
-    * could be selected as the mid pair, fabricating sec_lo/sec_hi/raw of
-    * 0.00/1.00 in the all-invalid fail-open case. Sentinels stay in the
-    * disclosed pair list; they only fall back into the statistics when NO
-    * real pair exists at all.
-    */
-  private[graft] def statPairs(pairs: Seq[PairMeas]): Seq[PairMeas] = {
-    val real = pairs.filterNot(_.sentinel)
-    if (real.nonEmpty) real else pairs
-  }
-
   /** A pair ratio outside this band is a corrupted measurement, not a
     * property of the engine: the decode workload cannot genuinely scale
     * below 0.25 across a 4× core spread (idle-box pairs read 0.70–0.87
@@ -186,63 +192,42 @@ object ScalingBench {
 
   /** Fork one measurement child and parse its single
     * `CHILD_RESULT {"k":v,...}` stdout line (flat numeric JSON). stderr
-    * passes through for progress visibility. Returns None when the fork
-    * fails or emits no result line — callers fall back to the in-process
-    * measurement and record the isolation mode in the artifact.
+    * passes through for progress visibility. Throws, naming the mode
+    * and the exit code, when the child exits non-zero or prints no
+    * result line: a number measured in the debted parent JVM is what
+    * the isolation exists to prevent, so Bench records the block as
+    * `{"error":…}` instead.
     */
-  private[graft] def forkChild(mainArgs: Seq[String]): Option[Map[String, Double]] =
-    try {
-      val pb = new ProcessBuilder(childJvmCmd(mainArgs): _*)
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val p = pb.start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-      val rc = p.waitFor()
-      val line = out.linesIterator
-        .find(_.startsWith("CHILD_RESULT ")).map(_.stripPrefix("CHILD_RESULT "))
-      if (rc != 0 || line.isEmpty) {
-        System.err.println(s"[scaling] child JVM failed (rc=$rc) — falling back in-process")
-        None
-      } else {
-        val kv = """"([a-z_]+)":(-?[0-9.eE+]+)""".r
-        Some(kv.findAllMatchIn(line.get)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
-      }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[scaling] child JVM fork failed: ${e.getMessage} — falling back in-process")
-        None
-    }
+  private[graft] def forkChild(mainArgs: Seq[String]): Map[String, Double] = {
+    val pb = new ProcessBuilder(childJvmCmd(mainArgs): _*)
+    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+    val p = pb.start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    val rc = p.waitFor()
+    val line = out.linesIterator
+      .find(_.startsWith("CHILD_RESULT ")).map(_.stripPrefix("CHILD_RESULT "))
+    if (rc != 0 || line.isEmpty) throw new IllegalStateException(
+      s"scaling child `${mainArgs.headOption.getOrElse("")}` exited with code $rc" +
+        (if (line.isEmpty) " and printed no CHILD_RESULT line" else ""))
+    val kv = """"([a-z_]+)":(-?[0-9.eE+]+)""".r
+    kv.findAllMatchIn(line.get).map(m => m.group(1) -> m.group(2).toDouble).toMap
+  }
 
-  /** True once a fork has failed — fall back to in-process for the rest
-    * of the run (a broken classpath will not heal mid-run) and record it.
-    */
-  @volatile private[graft] var forkUnavailable = false
-
-  private[graft] def measurePair(lo: Int, hi: Int, sfDir: String,
-      workScale: Int): PairMeas = {
+  private[graft] def measurePair(sfDir: String): PairMeas = {
     val (t0, i0) = hostJiffies()
     val s0 = selfJiffies()
-    val forked =
-      if (forkUnavailable) None
-      else forkChild(Seq("child-pair", lo.toString, hi.toString, sfDir,
-        workScale.toString))
-    val (l, h) = forked match {
-      case Some(m) => (m("t_lo"), m("t_hi"))
-      case None =>
-        forkUnavailable = true
-        runPair(lo, hi, sfDir, workScale)
-    }
+    val m = forkChild(Seq("child-pair", sfDir))
+    val (l, h) = (m("t_lo"), m("t_hi"))
     val (t1, i1) = hostJiffies()
     val s1 = selfJiffies()
     val total = math.max(1L, t1 - t0)
     val busy = total - (i1 - i0)
     // external CPU = host busy minus this JVM's own work. selfJiffies
     // includes cutime/cstime, which absorb the reaped measurement
-    // child's CPU after waitFor — so the forked path needs no separate
-    // child term (and adding one would double-subtract).
+    // child's CPU after waitFor — so it needs no separate child term
+    // (and adding one would double-subtract).
     val ext = math.max(0L, busy - (s1 - s0)).toDouble / total
-    val ratio = (l / h) / (hi.toDouble / lo)
+    val ratio = (l / h) / (Hi.toDouble / Lo)
     val reasons = Seq(
       if (!pairPlausible(ratio)) Some(f"ratio $ratio%.3f outside [0.25, 1.1]") else None,
       if (ext > MaxExternalCpu) Some(f"external CPU $ext%.3f > $MaxExternalCpu%.2f") else None
@@ -257,15 +242,15 @@ object ScalingBench {
     * with valid=false. `budget` is a shared counter bounding total pair
     * executions across the whole evidence run.
     */
-  private def measurePairRetry(lo: Int, hi: Int, sfDir: String,
-      workScale: Int, budget: java.util.concurrent.atomic.AtomicInteger,
+  private def measurePairRetry(sfDir: String,
+      budget: java.util.concurrent.atomic.AtomicInteger,
       maxTries: Int = 3): (PairMeas, Seq[PairMeas]) = {
     val rejected = scala.collection.mutable.ArrayBuffer.empty[PairMeas]
     var tries = 0
     var last: PairMeas = null
     while (tries < maxTries && (last == null || !last.valid) &&
         budget.getAndDecrement() > 0) {
-      last = measurePair(lo, hi, sfDir, workScale)
+      last = measurePair(sfDir)
       tries += 1
       if (!last.valid) {
         System.err.println(f"[scaling] pair rejected (${last.reason}) — re-running")
@@ -320,9 +305,10 @@ object ScalingBench {
     * cores at 1.0 — and the ceiling drifts with neighbor load (0.80
     * and 0.70 observed hours apart on this sandbox). The engine's
     * efficiency is reported raw AND normalized against the ceiling
-    * measured back-to-back with it.
+    * measured back-to-back with it. Runs in a child JVM
+    * (`child-ceiling`).
     */
-  private def machineCeiling(lo: Int, hi: Int): Double = {
+  private def machineCeiling(): Double = {
     def run(cpus: Int): Double = {
       val spark = session(cpus)
       try {
@@ -336,8 +322,8 @@ object ScalingBench {
         }.min
       } finally spark.stop()
     }
-    val (tLo, tHi) = (run(lo), run(hi))
-    (tLo / tHi) / (hi.toDouble / lo)
+    val (tLo, tHi) = (run(Lo), run(Hi))
+    (tLo / tHi) / (Hi.toDouble / Lo)
   }
 
   /** A raw ceiling probe outside this band is a corrupted measurement,
@@ -355,29 +341,16 @@ object ScalingBench {
     * with valid=false — callers must then normalize against a neutral
     * 1.0, never against the corrupted value (a 0.27 denominator
     * inflates normalized efficiency, the round-2 artifact failure).
-    * Returns (raw ceiling, tries, valid).
+    * Each probe is [[machineCeiling]] in a fresh child JVM (same
+    * isolation rationale as the pairs: a ceiling probed in a
+    * heap-debted JVM under-reads the machine and inflates the
+    * normalized headline). Returns (raw ceiling, tries, valid).
     */
-  /** [[machineCeiling]] in a fresh child JVM (same isolation rationale
-    * as the pairs: a ceiling probed in a heap-debted JVM under-reads
-    * the machine and inflates the normalized headline).
-    */
-  private def machineCeilingIsolated(lo: Int, hi: Int): Double = {
-    val forked =
-      if (forkUnavailable) None
-      else forkChild(Seq("child-ceiling", lo.toString, hi.toString))
-    forked match {
-      case Some(m) => m("ceiling")
-      case None =>
-        forkUnavailable = true
-        machineCeiling(lo, hi)
-    }
-  }
-
-  private def measureCeiling(lo: Int, hi: Int, maxTries: Int = 3): (Double, Int, Boolean) = {
+  private def measureCeiling(maxTries: Int = 3): (Double, Int, Boolean) = {
     var tries = 0
     val probes = scala.collection.mutable.ArrayBuffer.empty[Double]
     while (tries < maxTries && !probes.lastOption.exists(ceilingPlausible)) {
-      val c = machineCeilingIsolated(lo, hi)
+      val c = forkChild(Seq("child-ceiling"))("ceiling")
       probes += c
       tries += 1
       if (!ceilingPlausible(c)) System.err.println(
@@ -389,46 +362,6 @@ object ScalingBench {
     (best, tries, ceilingPlausible(best))
   }
 
-  /** The scaling-evidence JSON block embedded in the per-round bench
-    * artifact (`Bench` calls this, so `BENCH_r*.json` records the SAME
-    * methodology as this harness — work_scale×reps sized so per-core
-    * work dwarfs fixed stage overhead; a smaller rider previously
-    * recorded an overhead-dominated 0.587 that failed the ≥0.8 gate the
-    * dedicated harness passes).
-    *
-    * Robustness choices, all recorded in the output (hardened after
-    * the round-2 artifact recorded a corrupted 0.27 ceiling probe —
-    * and the normalized 2.899 it implied — as the headline number):
-    *  - lo=6 / hi=24 (not 7/28): the 32-core VM needs headroom for GC
-    *    and Spark daemon threads; at hi=28 the high-parallelism run is
-    *    partially self-contended and under-reports the engine.
-    *  - the machine ceiling is probed PER PAIR, immediately after the
-    *    pair, in the same host window (see [[PairUnit]] — a pass-level
-    *    probe minutes away decouples from its pairs under bursty
-    *    neighbor load and mis-normalizes in either direction); a probe
-    *    outside [0.5, 1.25] is REJECTED and re-run (up to 3 per pair),
-    *    a pair whose every probe is implausible invalidates the pass,
-    *    its normalized value computed against a NEUTRAL ceiling of 1.0
-    *    (a corrupted probe must not become the denominator), and it is
-    *    never reported as the headline while a valid pass exists. The
-    *    reported pass ceiling is the median pair's own-window probe.
-    *  - the ceiling is clamped at ≤1.0 AND `normalized_efficiency` is
-    *    clamped at ≤1.0 — no value in the block can exceed 1.0 (an
-    *    engine cannot scale better than perfectly; anything above is
-    *    measurement noise and must not flatter the gate).
-    *  - each pass measures `reps` PAIRED (lo, hi) cycles — the two
-    *    levels run back-to-back inside a cycle so shared-host drift
-    *    cancels within the ratio — and reports the MEDIAN pair ratio
-    *    (a lo block and a hi block measured minutes apart, as earlier
-    *    revisions did, can land in different host windows and read
-    *    0.68 on an engine whose same-window pairs read 0.78–0.83);
-    *    all pair ratios are recorded under `pair_ratios`.
-    *  - TWO full passes back-to-back, BOTH under `attempts`; the
-    *    headline pass is selected by RAW efficiency (ties → higher
-    *    ceiling), never by normalized — selecting by normalized would
-    *    prefer exactly the passes whose ceiling probe was depressed
-    *    by neighbor load.
-    */
   /** A pass whose surviving pair ratios disperse more than this
     * (max/min) was measured across a shifting host window — per-pair
     * common-mode cancellation holds WITHIN a pair, not across minutes.
@@ -492,14 +425,60 @@ object ScalingBench {
   private final case class PairUnit(pair: PairMeas, ceilRaw: Double,
       ceilTries: Int, ceilValid: Boolean)
 
-  def scalingEvidence(sfDir: String, lo: Int = 6, hi: Int = 24,
-      reps: Int = 3, workScale: Int = 6, passes: Int = 2): String = {
+  /** The scaling-evidence JSON block: Bench embeds it in the per-round
+    * artifact and `runMain graft.ScalingBench evidence` prints it, so
+    * `BENCH_r*.json` records exactly this methodology — work_scale×reps
+    * sized so per-core work dwarfs fixed stage overhead. Stages the clip
+    * table first, outside all timings; `clips_per_sec_lo`/`_hi` are
+    * `n_clips`×work_scale over the headline pass's `sec_lo`/`sec_hi`.
+    *
+    * Robustness choices, all recorded in the output (hardened after
+    * the round-2 artifact recorded a corrupted 0.27 ceiling probe —
+    * and the normalized 2.899 it implied — as the headline number):
+    *  - the machine ceiling is probed PER PAIR, immediately after the
+    *    pair, in the same host window (see [[PairUnit]] — a pass-level
+    *    probe minutes away decouples from its pairs under bursty
+    *    neighbor load and mis-normalizes in either direction); a probe
+    *    outside [0.5, 1.25] is REJECTED and re-run (up to 3 per pair),
+    *    a pair whose every probe is implausible invalidates the pass,
+    *    its normalized value computed against a NEUTRAL ceiling of 1.0
+    *    (a corrupted probe must not become the denominator), and it is
+    *    never reported as the headline while a valid pass exists. The
+    *    reported pass ceiling is the median pair's own-window probe.
+    *  - the ceiling is clamped at ≤1.0 AND `normalized_efficiency` is
+    *    clamped at ≤1.0 — no value in the block can exceed 1.0 (an
+    *    engine cannot scale better than perfectly; anything above is
+    *    measurement noise and must not flatter the gate).
+    *  - each pass measures `reps` PAIRED (lo, hi) cycles — the two
+    *    levels run back-to-back inside a cycle so shared-host drift
+    *    cancels within the ratio — and reports the MEDIAN pair ratio
+    *    (a lo block and a hi block measured minutes apart, as earlier
+    *    revisions did, can land in different host windows and read
+    *    0.68 on an engine whose same-window pairs read 0.78–0.83);
+    *    all pair ratios are recorded under `pair_ratios`.
+    *  - at least TWO full passes, ALL under `attempts`; the headline is
+    *    the median RAW efficiency of the mutually consistent valid
+    *    passes, never selected by normalized — selecting by normalized
+    *    would prefer exactly the passes whose ceiling probe was
+    *    depressed by neighbor load.
+    * Every measured unit runs in a child JVM ([[forkChild]]); a failed
+    * child fails the whole block.
+    */
+  def scalingEvidence(sfDir: String): String = {
+    val pre = session(Hi)
+    val nClips =
+      try ClipGen.stagedClips(pre, sfDir).count()
+      finally pre.stop()
     final case class Pass(units: Seq[PairUnit], rejectedPairs: Seq[PairMeas]) {
       val pairs: Seq[PairMeas] = units.map(_.pair)
       val ratios: Seq[Double] = pairs.map(_.ratio)
       val pairsValid: Boolean = pairs.forall(_.valid)
-      // statistics over real (non-sentinel) pairs only — a ratio-0
-      // budget sentinel must not become the median or the mid pair
+      // Ratio statistics must run over REAL measurements: a
+      // budget-exhausted sentinel (ratio 0) entering the median would
+      // drag it toward 0 and could be selected as the mid pair,
+      // fabricating sec_lo/sec_hi/raw of 0.00/1.00 in the all-invalid
+      // fail-open case. Sentinels stay in the disclosed pair list; they
+      // only fall back into the statistics when NO real pair exists.
       private val statUnits = {
         val real = units.filterNot(_.pair.sentinel)
         if (real.nonEmpty) real else units
@@ -551,9 +530,9 @@ object ScalingBench {
     // The +maxPassRuns term funds roughly one within-pass dispersion-
     // outlier re-measure per pass (see runPass) on top of the
     // plausibility-retry allowance.
-    val maxPassRuns = passes + 2
+    val maxPassRuns = Passes + 2
     val pairBudget = new java.util.concurrent.atomic.AtomicInteger(
-      maxPassRuns * reps + 2 + maxPassRuns)
+      maxPassRuns * Reps + 2 + maxPassRuns)
     def runPass(): Pass = {
       val measured = scala.collection.mutable.ArrayBuffer.empty[PairUnit]
       val rejected = scala.collection.mutable.ArrayBuffer.empty[PairMeas]
@@ -562,13 +541,13 @@ object ScalingBench {
       // sentinel gets no probe — there is nothing to normalize, and
       // the pass is already invalid through pairsValid.
       def measureUnit(): PairUnit = {
-        val (p, rej) = measurePairRetry(lo, hi, sfDir, workScale, pairBudget)
+        val (p, rej) = measurePairRetry(sfDir, pairBudget)
         rejected ++= rej
         val (c, tries, ok) =
-          if (p.sentinel) (1.0, 0, false) else measureCeiling(lo, hi)
+          if (p.sentinel) (1.0, 0, false) else measureCeiling()
         PairUnit(p, c, tries, ok)
       }
-      (1 to reps).foreach(_ => measured += measureUnit())
+      (1 to Reps).foreach(_ => measured += measureUnit())
       // Within-pass outlier re-measure (bounded, symmetric, disclosed):
       // the per-pair plausibility band rejects gross corruption
       // (ratio < 0.25), but a MILDLY contended rep (e.g. 0.33 next to
@@ -582,15 +561,11 @@ object ScalingBench {
       // with its reason, the replacement is a fresh measurement under
       // the same shared budget, and the pass must still clear the
       // UNCHANGED dispersion/ceiling/ext-CPU/cross-pass guards.
-      def dispersionOf(us: Seq[PairUnit]): Double = {
-        val rs = statPairs(us.map(_.pair)).map(_.ratio).filter(_ > 0)
-        if (rs.isEmpty) Double.PositiveInfinity else rs.max / rs.min
-      }
+      def current = Pass(measured.toSeq, rejected.toSeq)
       var outlierRetries = 0
-      while (dispersionOf(measured.toSeq) > MaxPassDispersion &&
-          outlierRetries < reps && pairBudget.get() > 0) {
-        val sp = statPairs(measured.toSeq.map(_.pair))
-        val med = sp.map(_.ratio).sorted.apply((sp.size - 1) / 2)
+      while (current.dispersion > MaxPassDispersion &&
+          outlierRetries < Reps && pairBudget.get() > 0) {
+        val med = current.raw
         val idx = dispersionOutlierIndex(measured.toSeq.map(_.pair.ratio))
         val out = measured(idx).pair
         System.err.println(
@@ -601,7 +576,7 @@ object ScalingBench {
         measured += measureUnit()
         outlierRetries += 1
       }
-      Pass(measured.toSeq, rejected.toSeq)
+      current
     }
     val ps = scala.collection.mutable.ArrayBuffer.empty[Pass]
     // the loop chases `passes` valid passes that are also mutually
@@ -610,16 +585,16 @@ object ScalingBench {
     // re-run instead of entering the median
     def consistentValid: Seq[Pass] =
       consistentSubset(ps.filter(_.valid).toSeq, (p: Pass) => p.raw)
-    while (ps.size < maxPassRuns && consistentValid.size < passes &&
-        pairBudget.get() >= reps) {
+    while (ps.size < maxPassRuns && consistentValid.size < Passes &&
+        pairBudget.get() >= Reps) {
       val p = runPass()
       ps += p
       if (!p.valid) System.err.println(
         f"[scaling] pass ${ps.size} invalid (ceiling=${p.ceilValid}, pairs=${p.pairsValid}, dispersion=${p.dispersion}%.2f≤$MaxPassDispersion) — contended window" +
-          (if (ps.size < maxPassRuns && pairBudget.get() >= reps) ", re-running" else ""))
+          (if (ps.size < maxPassRuns && pairBudget.get() >= Reps) ", re-running" else ""))
       else if (consistentValid.size < ps.count(_.valid)) System.err.println(
         f"[scaling] pass ${ps.size}: valid passes disagree beyond $MaxCrossPassSpread× — degraded pass suspected" +
-          (if (ps.size < maxPassRuns && pairBudget.get() >= reps) ", re-running" else ""))
+          (if (ps.size < maxPassRuns && pairBudget.get() >= Reps) ", re-running" else ""))
     }
     // headline = MEDIAN raw efficiency of the largest mutually consistent
     // subset of valid passes (lower-middle for even counts — with 2
@@ -632,7 +607,7 @@ object ScalingBench {
     // show the gate was not met under trustworthy conditions.
     val validPs = ps.filter(_.valid).toSeq
     val pool = if (validPs.nonEmpty) consistentValid else ps.toSeq
-    val crossOk = consistentValid.size >= passes
+    val crossOk = consistentValid.size >= Passes
     val crossSpread =
       if (validPs.size <= 1) 1.0
       else validPs.map(_.raw).max / math.max(1e-9, validPs.map(_.raw).min)
@@ -648,20 +623,11 @@ object ScalingBench {
       // non-finite — Infinity is not valid JSON and would break the
       // driver's artifact parse; clamp to a visibly-absurd finite value
       val disp = if (java.lang.Double.isFinite(p.dispersion)) p.dispersion else 999.999
-      // since round 6 (per-pair ceiling probes) three ceiling fields keep
-      // their round-5 names but not their round-5 meaning:
-      //  - ceiling_raw: the median pair's own-window probe (round 5: the
-      //    one pass-level probe)
-      //  - ceiling_valid: every surviving non-sentinel pair's probe was
-      //    plausible (round 5: the one pass-level probe was)
-      //  - ceiling_probe_tries: probe attempts summed over the pass's
-      //    surviving pairs; probes spent on dispersion outliers that
-      //    were re-measured are not counted
-      // compare them across rounds with that in mind
-      f"""{"raw":${p.raw}%.3f,"ceiling":${p.ceil}%.3f,"ceiling_raw":${p.ceilRaw}%.3f,"ceiling_probe_tries":${p.ceilTries},"ceiling_valid":${p.ceilValid},"pairs_valid":${p.pairsValid},"dispersion":$disp%.3f,"dispersion_valid":${p.dispersionValid},"valid":${p.valid},"normalized":${p.norm}%.3f,"sec_lo":${p.tLo}%.2f,"sec_hi":${p.tHi}%.2f,"pair_ratios":$prs,"pair_ceilings":$pcs,"pair_ext_cpu":$ext,"rejected_pairs":$rej}"""
+      f"""{"raw":${p.raw}%.3f,"ceiling":${p.ceil}%.3f,"mid_pair_ceiling_raw":${p.ceilRaw}%.3f,"pair_ceiling_probe_tries":${p.ceilTries},"pair_ceilings_valid":${p.ceilValid},"pairs_valid":${p.pairsValid},"dispersion":$disp%.3f,"dispersion_valid":${p.dispersionValid},"valid":${p.valid},"normalized":${p.norm}%.3f,"sec_lo":${p.tLo}%.2f,"sec_hi":${p.tHi}%.2f,"pair_ratios":$prs,"pair_ceilings":$pcs,"pair_ext_cpu":$ext,"rejected_pairs":$rej}"""
     }.mkString("[", ",", "]")
-    val isolation = if (forkUnavailable) "in-process" else "fork"
-    f"""{"cpus_lo":$lo,"cpus_hi":$hi,"work_scale":$workScale,"reps":$reps,"headline_rule":"median_consistent_valid_pass","isolation":"$isolation","sec_lo":${best.tLo}%.2f,"sec_hi":${best.tHi}%.2f,"raw_efficiency":${best.raw}%.3f,"machine_cpu_ceiling":${best.ceil}%.3f,"machine_cpu_ceiling_raw":${best.ceilRaw}%.3f,"normalized_efficiency":${best.norm}%.3f,"cross_pass_spread":$crossSpread%.3f,"cross_pass_consistent":$crossOk,"headline_valid":${best.valid && crossOk},"attempts":$attempts}"""
+    val thLo = nClips.toDouble * WorkScale / best.tLo
+    val thHi = nClips.toDouble * WorkScale / best.tHi
+    f"""{"cpus_lo":$Lo,"cpus_hi":$Hi,"work_scale":$WorkScale,"reps":$Reps,"headline_rule":"median_consistent_valid_pass","isolation":"fork","n_clips":$nClips,"sec_lo":${best.tLo}%.2f,"sec_hi":${best.tHi}%.2f,"clips_per_sec_lo":$thLo%.1f,"clips_per_sec_hi":$thHi%.1f,"raw_efficiency":${best.raw}%.3f,"machine_cpu_ceiling":${best.ceil}%.3f,"machine_cpu_ceiling_raw":${best.ceilRaw}%.3f,"normalized_efficiency":${best.norm}%.3f,"cross_pass_spread":$crossSpread%.3f,"cross_pass_consistent":$crossOk,"headline_valid":${best.valid && crossOk},"attempts":$attempts}"""
   }
 
   /** Nearest-rank p99: index ceil(0.99·n) − 1 ((n·0.99).toInt would
@@ -672,72 +638,21 @@ object ScalingBench {
     else xs.sorted.apply(math.max(0, math.ceil(xs.size * 0.99).toInt - 1))
 
   def main(args: Array[String]): Unit = {
-    // child measurement modes (fresh-JVM isolation): run ONE unit of
-    // measured work in this pristine JVM and print a single
-    // `CHILD_RESULT {...}` line for the orchestrating parent.
-    args.headOption match {
-      case Some("child-pair") =>
-        val Seq(lo, hi, sfDir, workScale) = args.toSeq.slice(1, 5)
-        val (l, h) = runPair(lo.toInt, hi.toInt, sfDir, workScale.toInt)
-        println(f"""CHILD_RESULT {"t_lo":$l%.4f,"t_hi":$h%.4f,"self_jiffies":${selfJiffies()}}""")
-        return
-      case Some("child-ceiling") =>
-        val Seq(lo, hi) = args.toSeq.slice(1, 3)
-        val c = machineCeiling(lo.toInt, hi.toInt)
-        println(f"""CHILD_RESULT {"ceiling":$c%.4f,"self_jiffies":${selfJiffies()}}""")
-        return
-      case _ => ()
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val lo = sys.env.getOrElse("SPARK_GRAFT_CPUS_LO", "6").toInt
-    val hi = sys.env.getOrElse("SPARK_GRAFT_CPUS_HI", "24").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val workScale = sys.env.getOrElse("SPARK_GRAFT_WORK_SCALE", "6").toInt
-
-    // `runMain graft.ScalingBench evidence` prints EXACTLY the block
-    // Bench embeds in the per-round artifact (same code path), without
-    // the p99 stream harness — the way to reproduce/debug the driver's
-    // recorded scaling numbers in isolation
-    if (args.headOption.contains("evidence")) {
-      val pre = session(hi)
-      try ClipGen.stagedClips(pre, sfDir).count()
-      finally pre.stop()
-      println(scalingEvidence(sfDir, lo, hi, reps, workScale))
-      return
+    args.toList match {
+      case "evidence" :: Nil => println(scalingEvidence(sfDir))
+      // child measurement modes (fresh-JVM isolation): run ONE unit of
+      // measured work in this pristine JVM and print a single
+      // `CHILD_RESULT {...}` line for the orchestrating parent.
+      case "child-pair" :: dir :: Nil =>
+        val (l, h) = runPair(dir)
+        println(f"""CHILD_RESULT {"t_lo":$l%.4f,"t_hi":$h%.4f}""")
+      case "child-ceiling" :: Nil =>
+        println(f"""CHILD_RESULT {"ceiling":${machineCeiling()}%.4f}""")
+      case _ =>
+        System.err.println(
+          "usage: ScalingBench evidence | child-pair <sfDir> | child-ceiling")
+        sys.exit(2)
     }
-
-    // stage input once (full parallelism), outside all timings
-    val pre = session(hi)
-    val nClips =
-      try ClipGen.stagedClips(pre, sfDir).count()
-      finally pre.stop()
-
-    // same hardened probe + clamps + PAIRED cycles + pair rejection as
-    // scalingEvidence: reject corrupted ceiling windows AND corrupted /
-    // externally-loaded pairs, median-of-pairs efficiency, nothing in
-    // the output may exceed 1.0
-    val (ceilRaw, _, ceilValid) = measureCeiling(lo, hi)
-    val ceiling = math.min(ceilRaw, 1.0)
-    val budget = new java.util.concurrent.atomic.AtomicInteger(reps + 3)
-    val pairs = (1 to reps).map(_ =>
-      measurePairRetry(lo, hi, sfDir, workScale, budget)._1)
-    val pairsValid = pairs.forall(_.valid)
-    val stats = statPairs(pairs) // sentinels excluded from statistics
-    val ratios = stats.map(_.ratio)
-    val mid = ratios.sorted.apply((ratios.size - 1) / 2) // lower-middle for even counts
-    val midPair = stats.minBy(p => math.abs(p.ratio - mid))
-    val (tLo, tHi) = (midPair.tLo, midPair.tHi)
-    val latLo = runStreamLatencies(lo, sfDir)
-    val latHi = runStreamLatencies(hi, sfDir)
-
-    val p99 = ScalingBench.p99 _
-
-    val thLo = nClips.toDouble * workScale / tLo
-    val thHi = nClips.toDouble * workScale / tHi
-    val eff = mid
-    // invalid ceiling → neutral 1.0 denominator (see measureCeiling)
-    val norm = math.min(eff / (if (ceilValid) ceiling else 1.0), 1.0)
-    println(
-      f"""{"metric":"scaling_efficiency","value":$eff%.3f,"unit":"ratio","machine_cpu_ceiling":$ceiling%.3f,"machine_cpu_ceiling_raw":$ceilRaw%.3f,"ceiling_valid":$ceilValid,"pairs_valid":$pairsValid,"normalized_efficiency":$norm%.3f,"sf":"$sfDir","n_clips":$nClips,"work_scale":$workScale,"cpus_lo":$lo,"cpus_hi":$hi,"sec_lo":$tLo%.2f,"sec_hi":$tHi%.2f,"clips_per_sec_lo":$thLo%.1f,"clips_per_sec_hi":$thHi%.1f,"stream_p99_batch_ms_lo":${p99(latLo)}%.0f,"stream_p99_batch_ms_hi":${p99(latHi)}%.0f}""")
   }
 }

@@ -58,4 +58,14 @@ class ScalingRecorderSpec extends AnyFunSuite {
     // median and is re-measured first
     assert(ScalingBench.dispersionOutlierIndex(Seq(0.68, 0.0, 0.69)) == 1)
   }
+
+  test("a failed measurement child throws, naming its mode and exit code") {
+    // `child-pair` without its sfDir and an unknown mode both make the
+    // child print the usage and exit 2; neither may turn into a number
+    for (mode <- Seq(Seq("child-pair"), Seq("no-such-mode"))) {
+      val e = intercept[IllegalStateException](ScalingBench.forkChild(mode))
+      assert(e.getMessage.contains("exited with code 2"), e.getMessage)
+      assert(e.getMessage.contains(mode.head), e.getMessage)
+    }
+  }
 }
