@@ -462,9 +462,26 @@ object ScalingBench {
     *    would prefer exactly the passes whose ceiling probe was
     *    depressed by neighbor load.
     * Every measured unit runs in a child JVM ([[forkChild]]); a failed
-    * child fails the whole block.
+    * child fails the whole block. On a host with fewer cores than
+    * `cpus_hi` nothing is staged or forked ([[shortHostBlock]]).
     */
-  def scalingEvidence(sfDir: String): String = {
+  def scalingEvidence(sfDir: String): String =
+    shortHostBlock(Runtime.getRuntime.availableProcessors).getOrElse(measure(sfDir))
+
+  /** The block's fixed fields: levels, work size and recording rule. */
+  private val header =
+    s""""cpus_lo":$Lo,"cpus_hi":$Hi,"work_scale":$WorkScale,"reps":$Reps,"headline_rule":"median_consistent_valid_pass","isolation":"fork""""
+
+  /** With fewer than `cpus_hi` cores both levels share the same cores,
+    * so every ceiling probe reads about cores / cpus_hi, below the
+    * [0.5, 1.25] band, and no pass can be valid: the block says so up
+    * front instead of spending its whole child budget to find out.
+    */
+  private[graft] def shortHostBlock(hostCpus: Int): Option[String] =
+    if (hostCpus >= Hi) None
+    else Some(s"""{$header,"host_cpus":$hostCpus,"headline_valid":false,"reason":"host has $hostCpus cores, fewer than cpus_hi"}""")
+
+  private def measure(sfDir: String): String = {
     val pre = session(Hi)
     val nClips =
       try ClipGen.stagedClips(pre, sfDir).count()
@@ -627,7 +644,7 @@ object ScalingBench {
     }.mkString("[", ",", "]")
     val thLo = nClips.toDouble * WorkScale / best.tLo
     val thHi = nClips.toDouble * WorkScale / best.tHi
-    f"""{"cpus_lo":$Lo,"cpus_hi":$Hi,"work_scale":$WorkScale,"reps":$Reps,"headline_rule":"median_consistent_valid_pass","isolation":"fork","n_clips":$nClips,"sec_lo":${best.tLo}%.2f,"sec_hi":${best.tHi}%.2f,"clips_per_sec_lo":$thLo%.1f,"clips_per_sec_hi":$thHi%.1f,"raw_efficiency":${best.raw}%.3f,"machine_cpu_ceiling":${best.ceil}%.3f,"machine_cpu_ceiling_raw":${best.ceilRaw}%.3f,"normalized_efficiency":${best.norm}%.3f,"cross_pass_spread":$crossSpread%.3f,"cross_pass_consistent":$crossOk,"headline_valid":${best.valid && crossOk},"attempts":$attempts}"""
+    f"""{$header,"n_clips":$nClips,"sec_lo":${best.tLo}%.2f,"sec_hi":${best.tHi}%.2f,"clips_per_sec_lo":$thLo%.1f,"clips_per_sec_hi":$thHi%.1f,"raw_efficiency":${best.raw}%.3f,"machine_cpu_ceiling":${best.ceil}%.3f,"machine_cpu_ceiling_raw":${best.ceilRaw}%.3f,"normalized_efficiency":${best.norm}%.3f,"cross_pass_spread":$crossSpread%.3f,"cross_pass_consistent":$crossOk,"headline_valid":${best.valid && crossOk},"attempts":$attempts}"""
   }
 
   /** Nearest-rank p99: index ceil(0.99·n) − 1 ((n·0.99).toInt would

@@ -4,7 +4,7 @@ package graft.audio
   *
   * This is the decode front-end of the per-record map stage — the
   * analogue of the reference's serde layer
-  * (/root/reference/src/main/java/de/unimarburg/diz/labtofhir/serializer/Hl7Deserializer.java:22-34):
+  * (`serializer/Hl7Deserializer.java:22-34` in the reference):
   * opaque bytes in, typed domain value out, malformed input surfaced as
   * `Left(reason)` (the engine quarantines instead of the reference's
   * hard client shutdown, KafkaConfiguration.java:34-41).
@@ -15,7 +15,15 @@ package graft.audio
   *  - `alaw`    — ITU-T G.711 A-law, 8 bits/sample
   *  - `adpcm`   — IMA/DVI ADPCM, 4 bits/sample with a 4-byte state header
   *
-  * All decoders return normalized Float samples in [-1, 1).
+  * Decoding has one path. [[reader]] validates a payload once (null,
+  * unknown codec, odd pcm16le length, ADPCM header) and returns a
+  * [[PcmReader]], or the reason the payload is malformed. The reader
+  * fills a caller-owned `Array[Int]` block with int16 samples through
+  * `read(buf)`, which returns 0 at the end; each codec has one private
+  * fill loop. Every kernel below is a loop over such blocks
+  * ([[drain]]) folding each block into small accumulators, so the
+  * per-sample work stays in plain loops with no per-sample callback.
+  * Decoded floats are `s / 32768` in [-1, 1).
   */
 object Codecs {
 
@@ -29,17 +37,6 @@ object Codecs {
     while (i < pcm.length) {
       out(2 * i) = (pcm(i) & 0xff).toByte
       out(2 * i + 1) = ((pcm(i) >> 8) & 0xff).toByte
-      i += 1
-    }
-    out
-  }
-
-  def pcm16leDecode(bytes: Array[Byte]): Array[Short] = {
-    val n = bytes.length / 2
-    val out = new Array[Short](n)
-    var i = 0
-    while (i < n) {
-      out(i) = (((bytes(2 * i + 1) & 0xff) << 8) | (bytes(2 * i) & 0xff)).toShort
       i += 1
     }
     out
@@ -80,13 +77,6 @@ object Codecs {
     out
   }
 
-  def ulawDecode(bytes: Array[Byte]): Array[Short] = {
-    val out = new Array[Short](bytes.length)
-    var i = 0
-    while (i < bytes.length) { out(i) = ulawDecodeSample(bytes(i)); i += 1 }
-    out
-  }
-
   // ------------------------------------------------------------ G.711 A-law
 
   def alawEncodeSample(pcm: Short): Byte = {
@@ -122,19 +112,12 @@ object Codecs {
     out
   }
 
-  def alawDecode(bytes: Array[Byte]): Array[Short] = {
-    val out = new Array[Short](bytes.length)
-    var i = 0
-    while (i < bytes.length) { out(i) = alawDecodeSample(bytes(i)); i += 1 }
-    out
-  }
-
   // ------------------------------------------------ G.711 decode tables
   // 256-entry lookup twins of the arithmetic decoders, built FROM them
-  // so bit-identity holds by construction: the per-sample hot loops
-  // (summarize, frameEnergies, foreachPcm) replace ~10 bit ops + a call
-  // with one L1 load per byte. The arithmetic forms stay the public
-  // API — q56's oracle and CodecsSpec pin them against independent SQL.
+  // so bit-identity holds by construction: the reader's G.711 fill loop
+  // replaces ~10 bit ops + a call with one L1 load per byte. The
+  // arithmetic forms stay the public API — q56's oracle and CodecsSpec
+  // pin them against independent SQL.
   private final val UlawTable: Array[Short] =
     Array.tabulate(256)(i => ulawDecodeSample(i.toByte))
   private final val AlawTable: Array[Short] =
@@ -191,46 +174,7 @@ object Codecs {
     out
   }
 
-  /** Parse the 4-byte ADPCM header → (initial predictor, initial
-    * index, sample count). ONE implementation shared by the plain
-    * decoder and both fused kernels ([[summarize]], [[frameEnergies]])
-    * — the header is where a malformed payload turns into a negative
-    * sample count (header-only payload with the odd-parity bit set),
-    * and that check must not drift between the three loops.
-    */
-  private def adpcmHeader(bytes: Array[Byte]): (Int, Int, Int) = {
-    require(bytes.length >= 4, s"adpcm payload too short: ${bytes.length}")
-    var predictor = ((bytes(1) & 0xff) << 8) | (bytes(0) & 0xff)
-    if ((predictor & 0x8000) != 0) predictor -= 0x10000
-    val index = clampIndex(bytes(2) & 0xff)
-    val oddTail = (bytes(3) & 0x01) == 1
-    val nPacked = (bytes.length - 4) * 2
-    val n = if (oddTail) nPacked - 1 else nPacked
-    require(n >= 0, s"adpcm truncated payload: parity byte claims a sample beyond ${bytes.length} bytes")
-    (predictor, index, n)
-  }
-
-  def adpcmDecode(bytes: Array[Byte]): Array[Short] = {
-    var (predictor, index, n) = adpcmHeader(bytes)
-    val out = new Array[Short](n)
-    var i = 0
-    while (i < n) {
-      val raw = bytes(4 + (i >> 1)) & 0xff
-      val code = if ((i & 1) == 0) raw & 0x0f else (raw >> 4) & 0x0f
-      val step = StepTable(index)
-      var vpdiff = step >> 3
-      if ((code & 4) != 0) vpdiff += step
-      if ((code & 2) != 0) vpdiff += step >> 1
-      if ((code & 1) != 0) vpdiff += step >> 2
-      predictor = clampPcm(if ((code & 8) != 0) predictor - vpdiff else predictor + vpdiff)
-      index = clampIndex(index + IndexTable(code))
-      out(i) = predictor.toShort
-      i += 1
-    }
-    out
-  }
-
-  // --------------------------------------------------------------- dispatch
+  // ---------------------------------------------------------------- encode
 
   /** Encode float samples in [-1,1) with the named codec. */
   def encode(codec: String, samples: Array[Float]): Array[Byte] = {
@@ -250,35 +194,195 @@ object Codecs {
     }
   }
 
+  // ---------------------------------------------------------------- reader
+
+  /** Samples per block a kernel reads at a time. */
+  private final val Block = 1024
+
+  /** One validated payload's int16 samples, decoded in order:
+    * `read(buf)` fills `buf` from index 0 and returns the number of
+    * samples written, 0 once all [[length]] samples have been read.
+    * Built only by [[reader]], so no fill loop can meet a malformed
+    * payload.
+    */
+  sealed abstract class PcmReader(val length: Int) {
+    private var pos = 0
+
+    def read(buf: Array[Int]): Int = {
+      val m = math.min(buf.length, length - pos)
+      if (m <= 0) return 0
+      fill(buf, pos, m)
+      pos += m
+      m
+    }
+
+    /** Decodes samples `from until from + m` into `buf(0 until m)`. */
+    protected def fill(buf: Array[Int], from: Int, m: Int): Unit
+  }
+
+  private final class Pcm16Reader(bytes: Array[Byte])
+      extends PcmReader(bytes.length / 2) {
+    protected def fill(buf: Array[Int], from: Int, m: Int): Unit = {
+      var i = 0
+      var b = 2 * from
+      while (i < m) {
+        buf(i) = (((bytes(b + 1) & 0xff) << 8) | (bytes(b) & 0xff)).toShort
+        i += 1
+        b += 2
+      }
+    }
+  }
+
+  /** G.711 μ-law and A-law: one table load per byte. */
+  private final class TableReader(bytes: Array[Byte], table: Array[Short])
+      extends PcmReader(bytes.length) {
+    protected def fill(buf: Array[Int], from: Int, m: Int): Unit = {
+      var i = 0
+      while (i < m) { buf(i) = table(bytes(from + i) & 0xff); i += 1 }
+    }
+  }
+
+  /** IMA ADPCM after the header [[adpcmReader]] checked: the predictor
+    * and step index carry from one block to the next.
+    */
+  private final class AdpcmReader(bytes: Array[Byte], n: Int)
+      extends PcmReader(n) {
+    private var predictor = (((bytes(1) & 0xff) << 8) | (bytes(0) & 0xff)).toShort.toInt
+    private var index = clampIndex(bytes(2) & 0xff)
+
+    protected def fill(buf: Array[Int], from: Int, m: Int): Unit = {
+      var p = predictor
+      var ix = index
+      var i = 0
+      while (i < m) {
+        val j = from + i
+        val raw = bytes(4 + (j >> 1)) & 0xff
+        val code = if ((j & 1) == 0) raw & 0x0f else (raw >> 4) & 0x0f
+        val step = StepTable(ix)
+        // the spec's conditional adds as masks (-bit is 0 or all ones):
+        // the code bits are data, and branches on them mispredict
+        val vpdiff = (step >> 3) + (step & -((code >> 2) & 1)) +
+          ((step >> 1) & -((code >> 1) & 1)) + ((step >> 2) & -(code & 1))
+        val neg = -((code >> 3) & 1) // sign bit set: (vpdiff ^ -1) + 1 = -vpdiff
+        p = clampPcm(p + ((vpdiff ^ neg) - neg))
+        ix = clampIndex(ix + IndexTable(code))
+        buf(i) = p
+        i += 1
+      }
+      predictor = p
+      index = ix
+    }
+  }
+
+  /** Validates `bytes` as a `codec` payload and returns its reader, or
+    * the reason it is malformed. The one place that dispatches on the
+    * codec name for decoding.
+    */
+  def reader(codec: String, bytes: Array[Byte]): Either[String, PcmReader] =
+    if (bytes == null) Left("null payload")
+    else codec match {
+      case "pcm16le" =>
+        if (bytes.length % 2 != 0) Left(s"pcm16le odd byte count ${bytes.length}")
+        else Right(new Pcm16Reader(bytes))
+      case "ulaw"  => Right(new TableReader(bytes, UlawTable))
+      case "alaw"  => Right(new TableReader(bytes, AlawTable))
+      case "adpcm" => adpcmReader(bytes)
+      case other   => Left(s"unknown codec: $other")
+    }
+
+  /** The 4-byte ADPCM header holds no sample count: it follows from the
+    * payload length and the parity bit, and a header-only payload with
+    * the parity bit set claims -1 samples. Both reasons, prefix
+    * included, are part of the quarantine surface CodecsSpec pins.
+    */
+  private def adpcmReader(bytes: Array[Byte]): Either[String, PcmReader] = {
+    val fail = "decode failure: requirement failed: adpcm"
+    if (bytes.length < 4) Left(s"$fail payload too short: ${bytes.length}")
+    else {
+      val n = (bytes.length - 4) * 2 - (bytes(3) & 0x01)
+      if (n < 0) Left(s"$fail truncated payload: parity byte claims a sample beyond ${bytes.length} bytes")
+      else Right(new AdpcmReader(bytes, n))
+    }
+  }
+
+  /** [[reader]] that also rejects a payload of zero samples: every
+    * kernel but [[decode]] needs at least one. Its `Left` is the
+    * quarantine reason of a clip.
+    */
+  def nonEmptyReader(codec: String, bytes: Array[Byte]): Either[String, PcmReader] =
+    reader(codec, bytes).filterOrElse(_.length > 0, "empty payload")
+
+  /** A kernel's state, folded one block of samples at a time. */
+  private sealed trait BlockAcc {
+    def add(buf: Array[Int], m: Int): Unit
+  }
+
+  /** Reads `r` to the end, folding every block into `acc` and `more`. */
+  private def drain[A <: BlockAcc](r: PcmReader, acc: A, more: BlockAcc*): A = {
+    val accs = acc +: more
+    val buf = new Array[Int](Block)
+    var m = r.read(buf)
+    while (m > 0) {
+      accs.foreach(_.add(buf, m))
+      m = r.read(buf)
+    }
+    acc
+  }
+
+  // --------------------------------------------------------------- kernels
+
+  private final class Floats(n: Int) extends BlockAcc {
+    val out = new Array[Float](n)
+    private var off = 0
+
+    def add(buf: Array[Int], m: Int): Unit = {
+      var i = 0
+      while (i < m) { out(off + i) = buf(i) / 32768.0f; i += 1 }
+      off += m
+    }
+  }
+
   /** Decode to normalized floats; malformed input → Left(reason). The
     * Either (instead of an exception that kills the stream) is the
     * engine's deliberate divergence from the reference's poison-pill
-    * shutdown (README.md:85-89).
+    * shutdown (README.md:85-89). An empty payload decodes to an empty
+    * array.
     */
-  def decode(codec: String, bytes: Array[Byte]): Either[String, Array[Float]] = {
-    if (bytes == null) return Left("null payload")
-    try {
-      val pcm: Array[Short] = codec match {
-        case "pcm16le" =>
-          if (bytes.length % 2 != 0) return Left(s"pcm16le odd byte count ${bytes.length}")
-          pcm16leDecode(bytes)
-        case "ulaw"  => ulawDecode(bytes)
-        case "alaw"  => alawDecode(bytes)
-        case "adpcm" => adpcmDecode(bytes)
-        case other   => return Left(s"unknown codec: $other")
-      }
-      val out = new Array[Float](pcm.length)
-      var i = 0
-      while (i < pcm.length) { out(i) = pcm(i) / 32768.0f; i += 1 }
-      Right(out)
-    } catch {
-      case e: Exception => Left(s"decode failure: ${e.getMessage}")
-    }
-  }
+  def decode(codec: String, bytes: Array[Byte]): Either[String, Array[Float]] =
+    reader(codec, bytes).map(r => drain(r, new Floats(r.length)).out)
 
   /** One-pass PCM statistics (int16 domain accumulation). */
   final case class PcmStats(
       n: Int, sumSq: Double, peak: Double, zeroCrossings: Int, clipped: Int)
+
+  private final class Stats extends BlockAcc {
+    private var n = 0
+    private var sumSq = 0.0
+    private var peakAbs = 0
+    private var zc = 0
+    private var clipped = 0
+    private var prevNonNeg = true
+
+    def add(buf: Array[Int], m: Int): Unit = {
+      if (n == 0) prevNonNeg = buf(0) >= 0 // the first sample crosses nothing
+      var i = 0
+      while (i < m) {
+        val s = buf(i)
+        val v = s / 32768.0
+        sumSq += v * v
+        val a = math.abs(s)
+        if (a > peakAbs) peakAbs = a
+        if (a >= 32736) clipped += 1 // |v| >= 0.999
+        val nonNeg = s >= 0
+        if (nonNeg != prevNonNeg) zc += 1
+        prevNonNeg = nonNeg
+        i += 1
+      }
+      n += m
+    }
+
+    def result: PcmStats = PcmStats(n, sumSq, peakAbs / 32768.0, zc, clipped)
+  }
 
   /** Decode + summarize WITHOUT materializing the sample array — the
     * fused hot path of the per-record map stage. Semantically
@@ -287,199 +391,72 @@ object Codecs {
     * ~20 M samples/s/core is the difference between GC-bound and
     * compute-bound decode.
     */
-  def summarize(codec: String, bytes: Array[Byte]): Either[String, PcmStats] = {
-    if (bytes == null) return Left("null payload")
+  def summarize(codec: String, bytes: Array[Byte]): Either[String, PcmStats] =
+    nonEmptyReader(codec, bytes).map(r => drain(r, new Stats).result)
 
-    var n = 0
-    var sumSq = 0.0
-    var peakAbs = 0
-    var zc = 0
-    var clipped = 0
-    var prevNonNeg = true
-    var first = true
+  private final class FrameEnergies(n: Int, frameLen: Int) extends BlockAcc {
+    val energies = new Array[Double]((n + frameLen - 1) / frameLen)
+    private var fi = 0      // current frame
+    private var inFrame = 0 // samples consumed in the current frame
 
-    @inline def acc(s: Int): Unit = {
-      val v = s / 32768.0
-      sumSq += v * v
-      val a = math.abs(s)
-      if (a > peakAbs) peakAbs = a
-      if (a >= 32736) clipped += 1 // |v| >= 0.999
-      val nonNeg = s >= 0
-      if (!first && nonNeg != prevNonNeg) zc += 1
-      prevNonNeg = nonNeg
-      first = false
-      n += 1
-    }
-
-    try {
-      codec match {
-        case "pcm16le" =>
-          if (bytes.length % 2 != 0) return Left(s"pcm16le odd byte count ${bytes.length}")
-          var i = 0
-          while (i < bytes.length) {
-            acc((((bytes(i + 1) & 0xff) << 8) | (bytes(i) & 0xff)).toShort.toInt)
-            i += 2
-          }
-        case "ulaw" =>
-          var i = 0
-          while (i < bytes.length) { acc(UlawTable(bytes(i) & 0xff).toInt); i += 1 }
-        case "alaw" =>
-          var i = 0
-          while (i < bytes.length) { acc(AlawTable(bytes(i) & 0xff).toInt); i += 1 }
-        case "adpcm" =>
-          var (predictor, index, total) = adpcmHeader(bytes)
-          var i = 0
-          while (i < total) {
-            val raw = bytes(4 + (i >> 1)) & 0xff
-            val code = if ((i & 1) == 0) raw & 0x0f else (raw >> 4) & 0x0f
-            val step = StepTable(index)
-            var vpdiff = step >> 3
-            if ((code & 4) != 0) vpdiff += step
-            if ((code & 2) != 0) vpdiff += step >> 1
-            if ((code & 1) != 0) vpdiff += step >> 2
-            predictor = clampPcm(if ((code & 8) != 0) predictor - vpdiff else predictor + vpdiff)
-            index = clampIndex(index + IndexTable(code))
-            acc(predictor)
-            i += 1
-          }
-        case other => return Left(s"unknown codec: $other")
+    def add(buf: Array[Int], m: Int): Unit = {
+      var i = 0
+      while (i < m) {
+        if (inFrame == frameLen) { fi += 1; inFrame = 0 }
+        val v = buf(i) / 32768.0
+        energies(fi) += v * v
+        inFrame += 1
+        i += 1
       }
-      if (n == 0) Left("empty payload")
-      else Right(PcmStats(n, sumSq, peakAbs / 32768.0, zc, clipped))
-    } catch {
-      case e: Exception => Left(s"decode failure: ${e.getMessage}")
     }
   }
 
   /** Per-frame energies (sum of squared normalized samples per
-    * `frameLen`-sample window) computed INSIDE the codec loop — the
-    * fused twin of `decode(...)` + framing for the 1:N frame stage
-    * (same trick as [[summarize]]: no Float array per clip; measured
-    * ~2× on p04). Bit-identical to the unfused path: s/32768.0 is
-    * exact for int16 in both float and double, and the per-frame sum
-    * runs in the same order.
+    * `frameLen`-sample window) computed while decoding — the fused
+    * twin of `decode(...)` + framing for the 1:N frame stage (same
+    * trick as [[summarize]]: no Float array per clip; measured ~2× on
+    * p04). Bit-identical to the unfused path: s/32768.0 is exact for
+    * int16 in both float and double, and the per-frame sum runs in the
+    * same order.
     */
   def frameEnergies(codec: String, bytes: Array[Byte],
       frameLen: Int): Either[String, Array[Double]] = {
-    if (bytes == null) return Left("null payload")
     require(frameLen > 0, s"frameLen must be positive: $frameLen")
-
-    var energies: Array[Double] = null
-    var fi = 0       // current frame
-    var inFrame = 0  // samples consumed in current frame
-
-    @inline def alloc(n: Int): Unit =
-      energies = new Array[Double]((n + frameLen - 1) / frameLen)
-
-    @inline def acc(s: Int): Unit = {
-      if (inFrame == frameLen) { fi += 1; inFrame = 0 }
-      val v = s / 32768.0
-      energies(fi) += v * v
-      inFrame += 1
-    }
-
-    try {
-      codec match {
-        case "pcm16le" =>
-          if (bytes.length % 2 != 0) return Left(s"pcm16le odd byte count ${bytes.length}")
-          alloc(bytes.length / 2)
-          var i = 0
-          while (i < bytes.length) {
-            acc((((bytes(i + 1) & 0xff) << 8) | (bytes(i) & 0xff)).toShort.toInt)
-            i += 2
-          }
-        case "ulaw" =>
-          alloc(bytes.length)
-          var i = 0
-          while (i < bytes.length) { acc(UlawTable(bytes(i) & 0xff).toInt); i += 1 }
-        case "alaw" =>
-          alloc(bytes.length)
-          var i = 0
-          while (i < bytes.length) { acc(AlawTable(bytes(i) & 0xff).toInt); i += 1 }
-        case "adpcm" =>
-          var (predictor, index, total) = adpcmHeader(bytes)
-          alloc(total)
-          var i = 0
-          while (i < total) {
-            val raw = bytes(4 + (i >> 1)) & 0xff
-            val code = if ((i & 1) == 0) raw & 0x0f else (raw >> 4) & 0x0f
-            val step = StepTable(index)
-            var vpdiff = step >> 3
-            if ((code & 4) != 0) vpdiff += step
-            if ((code & 2) != 0) vpdiff += step >> 1
-            if ((code & 1) != 0) vpdiff += step >> 2
-            predictor = clampPcm(if ((code & 8) != 0) predictor - vpdiff else predictor + vpdiff)
-            index = clampIndex(index + IndexTable(code))
-            acc(predictor)
-            i += 1
-          }
-        case other => return Left(s"unknown codec: $other")
-      }
-      // mirror summarize's F3 empty guard so the fused twins agree on
-      // every malformed/degenerate payload, not just well-formed ones
-      if (energies.isEmpty) Left("empty payload") else Right(energies)
-    } catch {
-      case e: Exception => Left(s"decode failure: ${e.getMessage}")
-    }
+    nonEmptyReader(codec, bytes)
+      .map(r => drain(r, new FrameEnergies(r.length, frameLen)).energies)
   }
 
-  /** Stream decoded int16 PCM through `f` without materializing the
-    * sample array — the visitor form of [[decode]] for fused secondary
-    * consumers (the resample stage). [[summarize]] keeps its dedicated
-    * loops: it is THE scaling-gate hot path and must not depend on the
-    * JIT inlining a megamorphic callback. Returns the sample count;
-    * same error surface as decode/summarize (empty → Left).
+  /** The Goertzel recurrence for the power at `freqHz` of samples at
+    * rate `srHz`: [[goertzelPowerAt]]'s tone probe and every probe of
+    * the fingerprint filterbank ([[FingerprintWindow]]).
     */
-  def foreachPcm(codec: String, bytes: Array[Byte])(f: Int => Unit)
-      : Either[String, Int] = {
-    if (bytes == null) return Left("null payload")
-    try {
-      var n = 0
-      codec match {
-        case "pcm16le" =>
-          if (bytes.length % 2 != 0) return Left(s"pcm16le odd byte count ${bytes.length}")
-          n = bytes.length / 2
-          var i = 0
-          while (i < bytes.length) {
-            f((((bytes(i + 1) & 0xff) << 8) | (bytes(i) & 0xff)).toShort.toInt)
-            i += 2
-          }
-        case "ulaw" =>
-          n = bytes.length
-          var i = 0
-          while (i < n) { f(UlawTable(bytes(i) & 0xff).toInt); i += 1 }
-        case "alaw" =>
-          n = bytes.length
-          var i = 0
-          while (i < n) { f(AlawTable(bytes(i) & 0xff).toInt); i += 1 }
-        case "adpcm" =>
-          var (predictor, index, total) = adpcmHeader(bytes)
-          n = total
-          var i = 0
-          while (i < total) {
-            val raw = bytes(4 + (i >> 1)) & 0xff
-            val code = if ((i & 1) == 0) raw & 0x0f else (raw >> 4) & 0x0f
-            val step = StepTable(index)
-            var vpdiff = step >> 3
-            if ((code & 4) != 0) vpdiff += step
-            if ((code & 2) != 0) vpdiff += step >> 1
-            if ((code & 1) != 0) vpdiff += step >> 2
-            predictor = clampPcm(if ((code & 8) != 0) predictor - vpdiff else predictor + vpdiff)
-            index = clampIndex(index + IndexTable(code))
-            f(predictor)
-            i += 1
-          }
-        case other => return Left(s"unknown codec: $other")
-      }
-      if (n == 0) Left("empty payload") else Right(n)
-    } catch {
-      case e: Exception => Left(s"decode failure: ${e.getMessage}")
+  private final class Goertzel(freqHz: Double, srHz: Double) extends BlockAcc {
+    private val coeff = 2.0 * math.cos(2.0 * math.Pi * freqHz / srHz)
+    private var s1 = 0.0 // s[n-1]
+    private var s2 = 0.0 // s[n-2]
+    private var n = 0
+
+    def add(x: Double): Unit = {
+      val s0 = x + coeff * s1 - s2
+      s2 = s1
+      s1 = s0
+      n += 1
     }
+
+    def add(buf: Array[Int], m: Int): Unit = {
+      var i = 0
+      while (i < m) { add(buf(i) / 32768.0); i += 1 }
+    }
+
+    /** |X(f)|² from the recurrence tail, normalized by n² so a unit
+      * sine at exactly f yields ~(amplitude/2)² independent of length.
+      */
+    def power: Double = (s1 * s1 + s2 * s2 - coeff * s1 * s2) / (n.toDouble * n.toDouble)
   }
 
   /** Narrowband tone power at `freqHz` via the Goertzel recurrence
     * (O(n) streaming, allocation-free), fused into the single decode
-    * pass over [[foreachPcm]] — the telephony-style tone/hum detector
+    * pass — the telephony-style tone/hum detector
     * (the audio analogue of the reference's code-map gating, SURVEY.md
     * §2.7). The oracle's ground truth recomputes the same quantity by
     * DIRECT DFT accumulation ([[IndependentDecoder.tonePower]]) — a
@@ -491,21 +468,45 @@ object Codecs {
     require(srHz > 0, s"srHz must be positive: $srHz")
     require(freqHz > 0 && freqHz < srHz / 2.0,
       s"probe frequency $freqHz outside (0, ${srHz / 2.0}) for sr $srHz")
-    val w = 2.0 * math.Pi * freqHz / srHz
-    val coeff = 2.0 * math.cos(w)
-    var s1 = 0.0 // s[n-1]
-    var s2 = 0.0 // s[n-2]
-    foreachPcm(codec, bytes) { s =>
-      val x = s / 32768.0
-      val s0 = x + coeff * s1 - s2
-      s2 = s1
-      s1 = s0
-    }.map { n =>
-      // n ≥ 1 here: foreachPcm Lefts empty payloads itself.
-      // |X(f)|² from the recurrence tail; normalized by n² so a unit
-      // sine at exactly f yields ~(amplitude/2)² independent of length
-      val mag2 = s1 * s1 + s2 * s2 - coeff * s1 * s2
-      mag2 / (n.toDouble * n.toDouble)
+    nonEmptyReader(codec, bytes).map(r => drain(r, new Goertzel(freqHz, srHz)).power)
+  }
+
+  /** [[resampleStats]]'s streaming linear interpolator: each output
+    * sample is emitted once the input sample after its position is in.
+    */
+  private final class Resampler(inRate: Int, outRate: Int) extends BlockAcc {
+    private var prev = 0.0f
+    private var i = -1L // index of the last sample received
+    private var j = 0L  // next output index to emit
+    private var sumSq = 0.0
+    private var emitted = 0L
+
+    private def emit(v: Float): Unit = { sumSq += v.toDouble * v; emitted += 1 }
+
+    def add(buf: Array[Int], m: Int): Unit = {
+      var k = 0
+      while (k < m) {
+        val cur = buf(k) / 32768.0f
+        i += 1
+        if (i > 0) {
+          // emit every output whose floor position is the previous sample
+          while ((j * inRate) / outRate == i - 1) {
+            val frac = ((j * inRate) % outRate).toDouble / outRate
+            emit((prev * (1.0 - frac) + cur * frac).toFloat)
+            j += 1
+          }
+        }
+        prev = cur
+        k += 1
+      }
+    }
+
+    /** (n_in, n_out, rms_out), once every input sample is in. */
+    def result: (Int, Int, Double) = {
+      val nIn = (i + 1).toInt
+      val nOut = ((nIn - 1).toLong * outRate / inRate + 1).toInt
+      while (emitted < nOut) emit(prev) // tail: floor position == n_in − 1
+      (nIn, nOut, if (nOut == 0) 0.0 else math.sqrt(sumSq / nOut))
     }
   }
 
@@ -520,29 +521,7 @@ object Codecs {
   def resampleStats(codec: String, bytes: Array[Byte], inRate: Int,
       outRate: Int): Either[String, (Int, Int, Double)] = {
     require(inRate > 0 && outRate > 0, s"rates must be positive: $inRate→$outRate")
-    var prev = 0.0f
-    var i = -1L // index of the last sample received
-    var j = 0L  // next output index to emit
-    var sumSq = 0.0
-    var emitted = 0L
-    @inline def emit(v: Float): Unit = { sumSq += v.toDouble * v; emitted += 1 }
-    foreachPcm(codec, bytes) { s =>
-      val cur = s / 32768.0f
-      i += 1
-      if (i > 0) {
-        // emit every output whose floor position is the previous sample
-        while ((j * inRate) / outRate == i - 1) {
-          val frac = ((j * inRate) % outRate).toDouble / outRate
-          emit((prev * (1.0 - frac) + cur * frac).toFloat)
-          j += 1
-        }
-      }
-      prev = cur
-    }.map { nIn =>
-      val nOut = ((nIn - 1).toLong * outRate / inRate + 1).toInt
-      while (emitted < nOut) emit(prev) // tail: floor position == n_in − 1
-      (nIn, nOut, if (nOut == 0) 0.0 else math.sqrt(sumSq / nOut))
-    }
+    nonEmptyReader(codec, bytes).map(r => drain(r, new Resampler(inRate, outRate)).result)
   }
 
   /** Linear-interpolation sample-rate conversion — the audio analogue
@@ -574,26 +553,36 @@ object Codecs {
     out
   }
 
-  /** Goertzel power over a buffered analysis window (the filterbank
-    * kernel behind [[audioFingerprint]]): same recurrence and n²
-    * normalization as [[goertzelPowerAt]], but over `w` pre-decoded
-    * samples at effective rate `srE` so the full-grid scan can
-    * probe many candidates without re-decoding.
+  /** The decimated analysis window [[audioFingerprint]] scans: every
+    * k-th sample until the window is full.
     */
-  private[audio] def goertzelPowerWin(buf: Array[Double], w: Int,
-      freqHz: Double, srE: Double): Double = {
-    val om = 2.0 * math.Pi * freqHz / srE
-    val coeff = 2.0 * math.cos(om)
-    var s1 = 0.0
-    var s2 = 0.0
-    var i = 0
-    while (i < w) {
-      val s0 = buf(i) + coeff * s1 - s2
-      s2 = s1
-      s1 = s0
-      i += 1
+  private final class FingerprintWindow(srHz: Int) extends BlockAcc {
+    private val k = Fingerprint.decimation(srHz)
+    private val win = new Array[Double](Fingerprint.windowLen(srHz))
+    private var w = 0
+    private var idx = 0
+
+    def add(buf: Array[Int], m: Int): Unit = {
+      var i = 0
+      while (i < m && w < win.length) {
+        if (idx % k == 0) { win(w) = buf(i) / 32768.0; w += 1 }
+        idx += 1
+        i += 1
+      }
     }
-    (s1 * s1 + s2 * s2 - coeff * s1 * s2) / (w.toDouble * w.toDouble)
+
+    /** Full-grid Goertzel filterbank argmax over the window, at its
+      * effective rate.
+      */
+    def fingerprint: (Int, Int) = {
+      val srE = srHz.toDouble / k
+      Fingerprint.estimate { f =>
+        val g = new Goertzel(f, srE)
+        var i = 0
+        while (i < w) { g.add(win(i)); i += 1 }
+        g.power
+      }
+    }
   }
 
   /** Content-level audio fingerprint (dominant two-tone signature,
@@ -605,73 +594,28 @@ object Codecs {
     */
   def audioFingerprint(codec: String, bytes: Array[Byte],
       srHz: Int): Either[String, (Int, Int)] = {
-    val k = Fingerprint.decimation(srHz)
-    val maxW = Fingerprint.windowLen(srHz)
-    val buf = new Array[Double](maxW)
-    var w = 0
-    var idx = 0
-    foreachPcm(codec, bytes) { s =>
-      if (w < maxW && idx % k == 0) { buf(w) = s / 32768.0; w += 1 }
-      idx += 1
-    }.map { _ =>
-      val srE = srHz.toDouble / k
-      Fingerprint.estimate(f => goertzelPowerWin(buf, w, f, srE))
-    }
+    val fp = new FingerprintWindow(srHz) // requires srHz > 0
+    nonEmptyReader(codec, bytes).map(r => drain(r, fp).fingerprint)
   }
 
   /** Everything the audio-curation queries need from one clip in ONE
     * decode pass: [[summarize]] stats + the 500 Hz probe-tone power
     * ([[goertzelPowerAt]]) + the content fingerprint
-    * ([[audioFingerprint]]) — accumulator arithmetic mirrored
-    * operation-for-operation from each standalone kernel (asserted
-    * bit-identical in CodecsSpec), so q67/s28 pay one decode where
-    * three chained calls would pay three.
+    * ([[audioFingerprint]]) — the same three accumulators the
+    * standalone kernels use (asserted bit-identical in CodecsSpec), so
+    * q67/s28 pay one decode where three chained calls would pay three.
     */
   final case class CurationProfile(
       stats: PcmStats, tonePower: Double, fpF1: Int, fpF2: Int)
 
   def curationProfile(codec: String, bytes: Array[Byte],
       srHz: Int): Either[String, CurationProfile] = {
-    require(srHz > 0, s"srHz must be positive: $srHz")
-    // summarize accumulators
-    var sumSq = 0.0
-    var peakAbs = 0
-    var zc = 0
-    var clipped = 0
-    var prevNonNeg = true
-    var first = true
-    // goertzelPowerAt(500 Hz) recurrence
-    val om = 2.0 * math.Pi * 500.0 / srHz
-    val coeff = 2.0 * math.cos(om)
-    var s1 = 0.0
-    var s2 = 0.0
-    // fingerprint window
-    val k = Fingerprint.decimation(srHz)
-    val maxW = Fingerprint.windowLen(srHz)
-    val buf = new Array[Double](maxW)
-    var w = 0
-    var idx = 0
-    foreachPcm(codec, bytes) { s =>
-      val v = s / 32768.0
-      sumSq += v * v
-      val a = math.abs(s)
-      if (a > peakAbs) peakAbs = a
-      if (a >= 32736) clipped += 1
-      val nonNeg = s >= 0
-      if (!first && nonNeg != prevNonNeg) zc += 1
-      prevNonNeg = nonNeg
-      first = false
-      val s0 = v + coeff * s1 - s2
-      s2 = s1
-      s1 = s0
-      if (w < maxW && idx % k == 0) { buf(w) = v; w += 1 }
-      idx += 1
-    }.map { n =>
-      val tone = (s1 * s1 + s2 * s2 - coeff * s1 * s2) / (n.toDouble * n.toDouble)
-      val srE = srHz.toDouble / k
-      val (f1, f2) = Fingerprint.estimate(f => goertzelPowerWin(buf, w, f, srE))
-      CurationProfile(PcmStats(n, sumSq, peakAbs / 32768.0, zc, clipped),
-        tone, f1, f2)
+    val fp = new FingerprintWindow(srHz) // requires srHz > 0
+    nonEmptyReader(codec, bytes).map { r =>
+      val tone = new Goertzel(500.0, srHz)
+      val stats = drain(r, new Stats, tone, fp).result
+      val (f1, f2) = fp.fingerprint
+      CurationProfile(stats, tone.power, f1, f2)
     }
   }
 

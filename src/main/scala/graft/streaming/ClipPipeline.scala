@@ -150,12 +150,14 @@ object ClipPipeline {
   /** Quarantine view: the records the decode stage skips, with the
     * reason — the engine's replacement for the reference's silent
     * error log (F4, AimLabMapper.java:99-106): quarantined rows are a
-    * queryable table, not a log line.
+    * queryable table, not a log line. The reason is the payload check
+    * alone (the decode stage's `Left`s are exactly these); nothing is
+    * decoded.
     */
   def quarantineStage(clips: Dataset[Clip]): Dataset[(String, String, String)] = {
     import clips.sparkSession.implicits._
     clips.flatMap(c =>
-      Codecs.summarize(c.codec, c.bytes).left.toOption
+      Codecs.nonEmptyReader(c.codec, c.bytes).left.toOption
         .map(reason => (c.clip_id, c.codec, reason)))
   }
 

@@ -2,33 +2,14 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Observability (SURVEY.md §2.8 D8) — the engine's answer to the
-  * reference's `// TODO add metrics`
-  * (/root/reference/src/main/java/de/unimarburg/diz/labtofhir/mapper/AimLabMapper.java:104)
-  * and its Prometheus actuator surface (application.yml:72-81):
-  *
-  *  - [[Metrics.observed]] attaches an `observe()` node to any stage —
-  *    counters ride the data path (no second job, no driver loop);
-  *  - [[GraftQueryListener]] collects per-batch progress + observed
-  *    metrics off the streaming listener bus (rows/sec, batch
-  *    durations, per-stage counters), queryable by sink/bench code.
-  */
-object Metrics {
-
-  val DefaultName = "graft_metrics"
-
-  /** Attach a row counter to a stage. */
-  def observed(df: DataFrame, name: String = DefaultName): DataFrame =
-    df.observe(name, count(lit(1)).as("rows_total"))
-}
-
-/** Collects streaming progress per query name. Thread-safe; events
+  * reference's `// TODO add metrics` (`mapper/AimLabMapper.java:104`
+  * in the reference) and its Prometheus actuator surface
+  * (application.yml:72-81): collects per-batch progress per query name
+  * off the streaming listener bus (input rows, batches, rows dropped by
+  * the watermark), queryable by sink/bench code. Thread-safe; events
   * arrive async on the listener bus — callers poll [[totalInputRows]].
   */
 class GraftQueryListener extends StreamingQueryListener {
@@ -36,8 +17,7 @@ class GraftQueryListener extends StreamingQueryListener {
   final case class QueryStats(
       var inputRows: Long = 0L,
       var batches: Long = 0L,
-      var droppedByWatermark: Long = 0L,
-      var lastObserved: Map[String, Row] = Map.empty)
+      var droppedByWatermark: Long = 0L)
 
   private val stats = new ConcurrentHashMap[String, QueryStats]()
 
@@ -51,9 +31,6 @@ class GraftQueryListener extends StreamingQueryListener {
       s.batches += 1
       s.droppedByWatermark +=
         e.progress.stateOperators.map(_.numRowsDroppedByWatermark).sum
-      val om = e.progress.observedMetrics
-      if (om != null && !om.isEmpty)
-        s.lastObserved = om.asScala.toMap
     }
   }
 
@@ -70,7 +47,4 @@ class GraftQueryListener extends StreamingQueryListener {
     */
   def droppedByWatermark(queryName: String): Long =
     Option(stats.get(queryName)).map(_.droppedByWatermark).getOrElse(0L)
-
-  def observedMetric(queryName: String, metricName: String): Option[Row] =
-    Option(stats.get(queryName)).flatMap(_.lastObserved.get(metricName))
 }

@@ -59,6 +59,15 @@ class ScalingRecorderSpec extends AnyFunSuite {
     assert(ScalingBench.dispersionOutlierIndex(Seq(0.68, 0.0, 0.69)) == 1)
   }
 
+  test("a host with fewer cores than cpus_hi gets an invalid block without measuring") {
+    val block = ScalingBench.shortHostBlock(4).get
+    for (field <- Seq(""""cpus_lo":6""", """"cpus_hi":24""", """"work_scale":6""",
+        """"reps":3""", """"isolation":"fork"""", """"host_cpus":4""",
+        """"headline_valid":false""", """"reason":"""))
+      assert(block.contains(field), block)
+    assert(ScalingBench.shortHostBlock(24).isEmpty)
+  }
+
   test("a failed measurement child throws, naming its mode and exit code") {
     // `child-pair` without its sfDir and an unknown mode both make the
     // child print the usage and exit 2; neither may turn into a number

@@ -68,6 +68,18 @@ class CodecsSpec extends AnyFunSuite {
     }
   }
 
+  test("adpcm decode is bit-identical to the spec-form oracle on arbitrary payloads") {
+    // random bytes reach every code, both predictor clamps and step
+    // indices beyond 88 in the header; encoded clips the common path
+    val rnd = new scala.util.Random(11)
+    val payloads = Seq.fill(200)(Array.fill(4 + rnd.nextInt(3000))(rnd.nextInt(256).toByte)) ++
+      (0L until 10L).map(seed => Codecs.encode("adpcm", ClipGen.samplesFor(seed, 8000, 90)))
+    for ((bytes, k) <- payloads.zipWithIndex) {
+      val engine = Codecs.decode("adpcm", bytes).toOption.get
+      assert(engine.sameElements(IndependentDecoder.decode("adpcm", bytes)), s"payload $k")
+    }
+  }
+
   test("adpcm handles odd sample counts exactly") {
     val s = ClipGen.samplesFor(3, 8000, 150).take(801)
     val decoded = Codecs.decode("adpcm", Codecs.encode("adpcm", s)).toOption.get
@@ -293,6 +305,44 @@ class CodecsSpec extends AnyFunSuite {
       assert((p.fpF1, p.fpF2) == Codecs.audioFingerprint(codec, bytes, srHz).toOption.get,
         s"$codec $srHz fp")
     }
+  }
+
+  test("every kernel reports the same Left reason for each malformed payload; quarantine matches summarize") {
+    val pcm = "pcm16le"
+    val payloads: Seq[(String, Array[Byte], String)] = Seq(
+      ("ulaw", null, "null payload"),
+      ("mp3", Array[Byte](1, 2), "unknown codec: mp3"),
+      (pcm, Array[Byte](1, 2, 3), "pcm16le odd byte count 3"),
+      ("adpcm", Array[Byte](1, 2),
+        "decode failure: requirement failed: adpcm payload too short: 2"),
+      // header only, odd-parity bit set: the sample count goes negative
+      ("adpcm", Array[Byte](0, 0, 0, 1),
+        "decode failure: requirement failed: adpcm truncated payload: " +
+          "parity byte claims a sample beyond 4 bytes"),
+      ("ulaw", Array.empty[Byte], "empty payload"))
+    for ((codec, bytes, reason) <- payloads) {
+      val kernels: Seq[(String, Either[String, Any])] = Seq(
+        "summarize" -> Codecs.summarize(codec, bytes),
+        "frameEnergies" -> Codecs.frameEnergies(codec, bytes, 10),
+        "goertzelPowerAt" -> Codecs.goertzelPowerAt(codec, bytes, 8000, 500.0),
+        "resampleStats" -> Codecs.resampleStats(codec, bytes, 8000, 16000),
+        "audioFingerprint" -> Codecs.audioFingerprint(codec, bytes, 8000),
+        "curationProfile" -> Codecs.curationProfile(codec, bytes, 8000))
+      for ((name, got) <- kernels) assert(got == Left(reason), s"$name $codec")
+      val decoded = Codecs.decode(codec, bytes)
+      if (reason == "empty payload") assert(decoded.toOption.exists(_.isEmpty))
+      else assert(decoded == Left(reason), s"decode $codec")
+    }
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val t = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val clips = payloads.zipWithIndex.map { case ((codec, bytes, _), i) =>
+      graft.model.Clip(s"c$i", bytes, 8000, 0, codec, "", t)
+    }
+    val quarantined = graft.streaming.ClipPipeline
+      .quarantineStage(clips.toDS()).collect().map(r => r._1 -> r._3).toMap
+    assert(quarantined == clips.map(c =>
+      c.clip_id -> Codecs.summarize(c.codec, c.bytes).left.toOption.get).toMap)
   }
 
   test("audioFingerprint/curationProfile reject the same malformed payloads decode does") {
