@@ -23,7 +23,7 @@ import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, StreamRunner
   *                                                 bucketed
   *                                                 copy-on-write)
   *   [optional] token-budget admission → sink     (ingestion-time mix
-  *                                                 control; --rocksdb)
+  *                                                 control; TWS)
   *
   * Every sink commits each batchId once (D2); the upsert sink MERGEs,
   * the others append with per-partition lineage (D7); restart with the same
@@ -44,11 +44,12 @@ import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, StreamRunner
   *   --once              Trigger.AvailableNow (drain + exit); default
   *   --interval <dur>    Trigger.ProcessingTime instead of --once
   *   --rocksdb           RocksDB state store for every enabled pipeline;
-  *                       sessions runs its TWS variant; budget needs it
+  *                       sessions runs its TWS variant (a pipeline that
+  *                       holds TWS, like budget, gets RocksDB either way)
   *   --pipelines <csv>   enable only the named pipelines out of
   *                       mapped,dedup,rollup,sessions,join,upsert,budget
   *                       (default: the first four, plus join when
-  *                       --updates is given; budget requires --rocksdb);
+  *                       --updates is given);
   *                       an empty or invalid selection REFUSES to boot
   *                       (exit 2) — the reference's zero-mapper guard
   *                       (LabToFhirProcessor.java:26-29)
@@ -90,9 +91,6 @@ object PipelineMain {
         s"unknown pipeline(s): ${unknown.mkString(",")} (valid: ${AllPipelines.mkString(",")})")
     if (requested.contains("join") && !opt.contains("updates"))
       throw new IllegalArgumentException("pipeline 'join' requires --updates <dir>")
-    if (requested.contains("budget") && !opt.contains("rocksdb"))
-      throw new IllegalArgumentException(
-        "pipeline 'budget' requires --rocksdb (transformWithState state store)")
     if (requested.isEmpty)
       throw new IllegalArgumentException(
         "no pipelines enabled — refusing to start")
@@ -154,7 +152,7 @@ object PipelineMain {
       .mkString("{", ",", "}")
     // each sink's reconciliation: an unreconciled run is visible, not silent
     val reconcile = r.sinks.map { case (name, sink) =>
-      s""""$name":${sink.reconciliation(spark, r.listener.totalInputRows(s"graft_$name"))}"""
+      s""""$name":${sink.reconciliation(spark)}"""
     }.mkString("{", ",", "}")
     // budget conservation: the prefix sum is only correct if the
     // per-source running total survived every batch boundary — then
@@ -289,13 +287,13 @@ object PipelineMain {
           // each codec stratum admits clips in processing order until its
           // running transcript-token total passes --token-budget; rows
           // past the cut are still committed as rejected audit rows,
-          // never silently dropped. Requires --rocksdb
-          // (transformWithState). doc_id is xxhash64(clip_id,
-          // event_time) — the same per-OCCURRENCE identity the dedup
-          // pipeline keys on: bare clip_id repeats in the stream, and
-          // tied doc_ids would leave the fold's in-batch order (hence
-          // cum_tokens attribution and the sink's byte-identical replay)
-          // shuffle-order-dependent.
+          // never silently dropped. StreamRunner.run gives its
+          // transformWithState the RocksDB store. doc_id is
+          // xxhash64(clip_id, event_time) — the same per-OCCURRENCE
+          // identity the dedup pipeline keys on: bare clip_id repeats in
+          // the stream, and tied doc_ids would leave the fold's in-batch
+          // order (hence cum_tokens attribution and the sink's
+          // byte-identical replay) shuffle-order-dependent.
           case "budget" =>
             val docs = clipStream()
               .select(col("codec").as("source"),

@@ -137,13 +137,6 @@ object IndependentDecoder {
       zc, clipped)
   }
 
-  /** Normalized tone power |X(f)|²/n² by DIRECT DFT accumulation
-    * (cos/sin running sums) — the ground-truth twin of the engine's
-    * Goertzel recurrence ([[graft.audio.Codecs.goertzelPowerAt]]).
-    * Different algorithm, different floating-point path: the two agree
-    * to ~1e-9 absolute (CodecsSpec bounds it), which survives the
-    * round(3) the q58 oracle compares at by >5 orders of magnitude.
-    */
   /** Ground-truth content fingerprint by DIRECT DFT accumulation over
     * the decimated analysis window — the independent-numeric-path twin
     * of [[graft.audio.Codecs.audioFingerprint]] (which runs the
@@ -178,6 +171,13 @@ object IndependentDecoder {
     Fingerprint.estimate(dftPower)
   }
 
+  /** Normalized tone power |X(f)|²/n² by DIRECT DFT accumulation
+    * (cos/sin running sums) — the ground-truth twin of the engine's
+    * Goertzel recurrence ([[graft.audio.Codecs.goertzelPowerAt]]).
+    * Different algorithm, different floating-point path: the two agree
+    * to ~1e-9 absolute (CodecsSpec bounds it), which survives the
+    * round(3) the q58 oracle compares at by >5 orders of magnitude.
+    */
   def tonePower(samples: Array[Float], srHz: Int, freqHz: Double): Double = {
     require(samples.nonEmpty, "tonePower of empty PCM")
     val w = 2.0 * math.Pi * freqHz / srHz

@@ -187,17 +187,6 @@ object TextFunctions {
     when(n < 5, md5(norm)).otherwise(array_min(shingleHashes))
   }
 
-  /** Character k-gram shingles of the normalized text (for Jaccard /
-    * MinHash dedup). Distinct, order-free.
-    */
-  def charShingles(text: Column, k: Int): Column = {
-    val norm = normalizeTranscript(text)
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(length(norm) - lit(k - 1), lit(1))),
-        i => norm.substr(i, lit(k))))
-  }
-
   /** Word n-gram shingles (distinct). Prefer [[wordShinglesFromToks]]
     * over a materialized token column in hot paths (see
     * [[fingerprintFromToks]] for why).

@@ -6,6 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 trait CommittedSink extends Serializable {
   def write(df: DataFrame, batchId: Long): Unit
   def committedBatchIds: Seq[Long]
-  /** Its JSON reconciliation record; `inputRows` is what its query read. */
-  def reconciliation(spark: SparkSession, inputRows: Long): String
+  /** Its JSON reconciliation record, from its committed records alone. */
+  def reconciliation(spark: SparkSession): String
 }

@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -19,16 +19,17 @@ import org.apache.spark.sql.functions._
   * Iceberg-MERGE-style commit protocol (no Iceberg runtime in the
   * sandbox):
   *
-  *  1. `stage`: write the batch to `_staging/batch-<id>` (re-runnable),
-  *  2. `lineage`: gather per-partition lineage + metrics,
-  *  3. `publish`: atomically move staging → `data/batch=<id>`,
-  *  4. `mark`: atomically create the commit marker `_commits/<id>`
-  *     ([[BatchCommit]]).
+  *  1. `stage`: write the batch to `_staging/batch-<id>` (re-runnable)
+  *     and build its lineage record from the write's metrics and the
+  *     staged footers,
+  *  2. `publish`: atomically move staging → `data/batch=<id>`,
+  *  3. `mark`: atomically publish the record as the commit marker
+  *     `_commits/<id>` ([[BatchCommit]]), the batch's one record.
   *
   * A replayed batchId short-circuits at the marker check, so restarts
   * from checkpoint produce byte-identical output (rows inside each file
   * are pre-sorted by `orderCols` to make the files themselves stable).
-  * At cluster scale steps 3-4 map onto a metastore/Iceberg snapshot
+  * At cluster scale steps 2-3 map onto a metastore/Iceberg snapshot
   * commit; the protocol (idempotence keyed on batchId) is unchanged.
   */
 class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends CommittedSink {
@@ -36,7 +37,6 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends CommittedS
   private val commit = new BatchCommit(outDir)
   private def dataDir(batchId: Long): Path = Paths.get(outDir, "data", s"batch=$batchId")
   private def stagingDir(batchId: Long): Path = Paths.get(outDir, "_staging", s"batch-$batchId")
-  private def lineageFile(batchId: Long): Path = Paths.get(outDir, "_lineage", s"$batchId.json")
 
   def committedBatchIds: Seq[Long] = commit.committedBatchIds
 
@@ -45,9 +45,9 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends CommittedS
     */
   def write(df: DataFrame, batchId: Long): Unit = steps(df, batchId).foreach(_.run())
 
-  /** Steps `stage, lineage, publish, mark` of batch `batchId`. */
+  /** Steps `stage, publish, mark` of batch `batchId`. */
   private[sink] def steps(df: DataFrame, batchId: Long): Seq[BatchCommit.Step] = {
-    lazy val staged = {
+    lazy val record = {
       // Deterministic file contents: hash-partition on the leading order
       // column, then sort within partitions. (A global orderBy would use
       // sampled range partitioning — file BOUNDARIES would then vary run
@@ -73,12 +73,10 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends CommittedS
         .write.mode("overwrite").parquet(stagingDir(batchId).toString)
       val m = obs.get
       val total = m("rows").asInstanceOf[Long]
-      (total, if (hasTs && total > 0)
+      val tsBounds = if (hasTs && total > 0)
         s""","event_time_min":"${m("mn")}","event_time_max":"${m("mx")}""""
-      else "")
-    }
-    lazy val lineageJson = {
-      val (total, tsBounds) = staged
+      else ""
+      // the footers are read here, before `publish` moves the staging dir
       val conf = df.sparkSession.sessionState.newHadoopConf()
       val partCounts = FsUtil.list(stagingDir(batchId)).filter(_.getFileName.toString.startsWith("part-"))
         .sortBy(_.getFileName.toString).zipWithIndex.map { case (f, seq) =>
@@ -98,29 +96,19 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends CommittedS
       s"""{"batch_id":$batchId,"rows":$total,"partitions":$partCounts$tsBounds}"""
     }
     commit.steps(batchId, df, Seq(
-      BatchCommit.Step("stage", () => staged),
-      BatchCommit.Step("lineage", () => FsUtil.replace(lineageFile(batchId), lineageJson.getBytes("UTF-8"))),
+      BatchCommit.Step("stage", () => record),
       BatchCommit.Step("publish", () => FsUtil.publish(stagingDir(batchId), dataDir(batchId)))),
-      lineageJson, Nil)
+      record, Nil)
   }
 
-  /** Lineage records for every committed batch (D7 evidence). Parsed
-    * with a real JSON reader (field-order independent); a lineage file
-    * corrupted after commit (e.g. a torn write racing a crash) falls
-    * back to the commit marker, which stores the same document and was
-    * written atomically — only both being unreadable fails, with the
-    * batch id in the error instead of a bare NoSuchElementException.
-    */
-  def lineage: Seq[ExactlyOnceSink.BatchLineage] = committedBatchIds.map { id =>
-    ExactlyOnceSink.parseLineage(lineageFile(id), id) match {
-      case Right(l) => l
-      case Left(err1) =>
-        ExactlyOnceSink.parseLineage(commit.marker(id), id) match {
-          case Right(l) => l
-          case Left(err2) => throw new IllegalStateException(
-            s"batch $id lineage unreadable: $err1; commit-marker fallback: $err2")
-        }
-    }
+  /** The lineage of every committed batch (D7 evidence), read from its
+    * commit marker; a record without its row counts fails naming its
+    * batch. */
+  def lineage: Seq[ExactlyOnceSink.BatchLineage] = commit.records.map { case (id, r) =>
+    val parts = r.path("partitions").elements().asScala.toSeq
+    if (!r.hasNonNull("rows") || !r.path("partitions").isArray || parts.exists(!_.hasNonNull("rows")))
+      throw new IllegalStateException(s"batch $id record lacks rows/partitions: $r")
+    ExactlyOnceSink.BatchLineage(id, r.get("rows").asLong(), parts.map(_.get("rows").asLong()))
   }
 
   /** All committed rows (ignores uncommitted staging leftovers). A
@@ -144,7 +132,7 @@ class ExactlyOnceSink(outDir: String, orderCols: Seq[String]) extends CommittedS
   }
 
   /** Lineage (D7): Σ partition rows = each batch's total; Σ totals = committed rows. */
-  def reconciliation(spark: org.apache.spark.sql.SparkSession, inputRows: Long): String = {
+  def reconciliation(spark: org.apache.spark.sql.SparkSession): String = {
     val lin = lineage
     val partsOk = lin.forall(b => b.partitionRows.sum == b.rows)
     val (total, committed) = (lin.map(_.rows).sum, readCommitted(spark).count())
@@ -164,24 +152,4 @@ object ExactlyOnceSink {
     * closes the loop with what a reader actually sees.
     */
   final case class BatchLineage(batchId: Long, rows: Long, partitionRows: Seq[Long])
-
-  private[sink] def parseLineage(
-      file: Path, id: Long): Either[String, BatchLineage] =
-    try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(Files.readAllBytes(file))
-      if (node == null || !node.hasNonNull("rows") ||
-          !node.hasNonNull("partitions") || !node.get("partitions").isArray)
-        Left(s"$file missing rows/partitions fields")
-      else {
-        val elems = node.get("partitions").elements().asScala.toSeq
-        if (elems.exists(e => !e.hasNonNull("rows")))
-          Left(s"$file has a partitions element without rows")
-        else
-          Right(BatchLineage(id, node.get("rows").asLong(),
-            elems.map(_.get("rows").asLong())))
-      }
-    } catch {
-      case e: Exception => Left(s"$file: ${e.getMessage}")
-    }
 }

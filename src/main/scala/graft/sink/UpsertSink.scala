@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   *   snapshots/v=<batchId>/manifest   lines "<bucket>\t<dataDir>" — the
   *                                    FULL bucket→dir map (untouched
   *                                    buckets point into older v= dirs)
-  *   _commits/<batchId>               commit marker (atomic create)
+  *   _commits/<batchId>               commit marker and the batch's
+  *                                    record {"batch_id","rows"}
   *   _latest                          newest committed batchId
   *   _buckets                         pinned bucket count (first write
   *                                    wins; a reopened sink adopts it)
@@ -105,8 +106,10 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
     else spark.read.parquet(dirs: _*)
   }
 
-  /** One merged row per key, and no more merged rows than input rows. */
-  def reconciliation(spark: SparkSession, inputRows: Long): String = {
+  /** One merged row per key, and no more merged rows than the
+    * committed batches' rows. */
+  def reconciliation(spark: SparkSession): String = {
+    val inputRows = commit.records.map(_._2.path("rows").asLong()).sum
     val merged = readLatest(spark)
     val rows = merged.count()
     val keys = if (rows == 0) 0L else merged.select(keyCols.map(col): _*).distinct().count()
@@ -123,60 +126,72 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
   private[sink] def steps(df: DataFrame, batchId: Long): Seq[BatchCommit.Step] = {
     val dataDir = Paths.get(outDir, "data", s"v=$batchId")
     val stagedData = Paths.get(outDir, "data", s"_staging-v=$batchId")
-    lazy val staged: (Map[Int, String], Set[Int]) = { // (previous manifest, touched)
+    // (previous manifest, touched buckets, batch rows)
+    lazy val staged: (Map[Int, String], Set[Int], Long) = {
       val b = effectiveBuckets()
       val prev = latestManifest
-      // touched-bucket set: ≤ B small ints — manifest-scale metadata (the
-      // Iceberg planner does the same partition-pruning collect); NOT a
-      // data-sized driver collect
+      // evaluated once: the bucket count's job fills the cache and the
+      // merge reads it. It counts per partition with no shuffle: an
+      // aggregate over a cached frame runs one more job, only to fill it
       val batch = df.withColumn("__bucket", bucketCol(b))
-      val touched = batch.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (touched.nonEmpty) {
-        // base slice: ONLY the touched buckets' files of the previous
-        // snapshot — untouched buckets are never read
-        val baseDirs = touched.toSeq.flatMap(prev.get).distinct.sorted
-        val base =
-          if (baseDirs.isEmpty) batch.limit(0)
-          else df.sparkSession.read.parquet(baseDirs: _*)
-            .withColumn("__bucket", bucketCol(b))
-            // a carried dir can only hold its own bucket's keys, but a
-            // prev dir shared by several buckets (never the case under
-            // this writer — one dir per bucket) would over-read; filter
-            // keeps the merge window scoped to the touched slice
-            .filter(col("__bucket").isin(touched.toSeq.map(Int.box): _*))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // rows per touched bucket: ≤ B small pairs per partition —
+        // manifest-scale metadata (the Iceberg planner does the same
+        // partition-pruning collect); NOT a data-sized driver collect
+        import df.sparkSession.implicits._
+        val perBucket = batch.select("__bucket").as[Int].mapPartitions { it =>
+          val n = scala.collection.mutable.Map.empty[Int, Long]
+          it.foreach(k => n(k) = n.getOrElse(k, 0L) + 1)
+          n.iterator
+        }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+        val touched = perBucket.keySet
+        if (touched.nonEmpty) {
+          // base slice: ONLY the touched buckets' files of the previous
+          // snapshot — untouched buckets are never read
+          val baseDirs = touched.toSeq.flatMap(prev.get).distinct.sorted
+          val base =
+            if (baseDirs.isEmpty) batch.limit(0)
+            else df.sparkSession.read.parquet(baseDirs: _*)
+              .withColumn("__bucket", bucketCol(b))
+              // a carried dir can only hold its own bucket's keys, but a
+              // prev dir shared by several buckets (never the case under
+              // this writer — one dir per bucket) would over-read; filter
+              // keeps the merge window scoped to the touched slice
+              .filter(col("__bucket").isin(touched.toSeq.map(Int.box): _*))
 
-        // VERSION-GUARDED MERGE (the Iceberg `WHEN MATCHED AND
-        // s.version > t.version THEN UPDATE` shape): one resolution
-        // window over touched-base ∪ batch keeps the max-version row per
-        // key — an out-of-order or late-replayed batch carrying a STALE
-        // version can never regress a key. Ties break by content hash so
-        // the winner is independent of shuffle order AND of which side
-        // carried the row; the single window also dedups within-batch
-        // key collisions, so the merge is one shuffle over the touched
-        // slice, not the table.
-        val all = base.unionByName(batch)
-        val payloadCols = all.columns.filter(_ != "__bucket")
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(versionCol).desc,
-            xxhash64(payloadCols.map(col).toIndexedSeq: _*).desc)
-        val merged = all
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .drop("__rn")
+          // VERSION-GUARDED MERGE (the Iceberg `WHEN MATCHED AND
+          // s.version > t.version THEN UPDATE` shape): one resolution
+          // window over touched-base ∪ batch keeps the max-version row per
+          // key — an out-of-order or late-replayed batch carrying a STALE
+          // version can never regress a key. Ties break by content hash so
+          // the winner is independent of shuffle order AND of which side
+          // carried the row; the single window also dedups within-batch
+          // key collisions, so the merge is one shuffle over the touched
+          // slice, not the table.
+          val all = base.unionByName(batch)
+          val payloadCols = all.columns.filter(_ != "__bucket")
+          val w = Window.partitionBy(keyCols.map(col): _*)
+            .orderBy(col(versionCol).desc,
+              xxhash64(payloadCols.map(col).toIndexedSeq: _*).desc)
+          val merged = all
+            .withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1)
+            .drop("__rn")
 
-        FsUtil.deleteRecursively(stagedData)
-        merged
-          .repartition(col("__bucket"), col(keyCols.head))
-          .sortWithinPartitions((keyCols :+ versionCol).map(col): _*)
-          .write.mode("overwrite")
-          .partitionBy("__bucket")
-          .parquet(stagedData.toString)
-      }
-      (prev, touched)
+          FsUtil.deleteRecursively(stagedData)
+          merged
+            .repartition(col("__bucket"), col(keyCols.head))
+            .sortWithinPartitions((keyCols :+ versionCol).map(col): _*)
+            .write.mode("overwrite")
+            .partitionBy("__bucket")
+            .parquet(stagedData.toString)
+        }
+        (prev, touched, perBucket.values.sum)
+      } finally batch.unpersist()
     }
     def snapshot(): Unit = {
-      val (prev, touched) = staged
+      val (prev, touched, _) = staged
       // an all-dup touched bucket still re-elects its keepers, so every
       // touched bucket with ≥1 surviving key has a dir; a touched
       // bucket whose dir is absent (possible only if the merge emitted
@@ -201,7 +216,7 @@ class UpsertSink(outDir: String, keyCols: Seq[String], versionCol: String,
       BatchCommit.Step("publish", () =>
         if (staged._2.nonEmpty) FsUtil.publish(stagedData, dataDir)),
       BatchCommit.Step("snapshot", () => snapshot())),
-      s"$batchId",
+      s"""{"batch_id":$batchId,"rows":${staged._3}}""",
       Seq(BatchCommit.Step("swing", () =>
         if (latestCommitted.forall(_ < batchId))
           FsUtil.replace(latestPtr, s"$batchId".getBytes("UTF-8")))))

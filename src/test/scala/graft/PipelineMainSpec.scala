@@ -81,7 +81,7 @@ class PipelineMainSpec extends AnyFunSuite {
     assert(r.sinks.keys.toSeq == Seq("mapped", "dedup", "rollup", "sessions", "upsert"))
     assert(r.sinks("upsert").isInstanceOf[UpsertSink])
     r.sinks.foreach { case (name, sink) =>
-      val rec = sink.reconciliation(spark, r.listener.totalInputRows(s"graft_$name"))
+      val rec = sink.reconciliation(spark)
       assert(reconciled(rec), s"$name: $rec")
     }
 
@@ -101,6 +101,15 @@ class PipelineMainSpec extends AnyFunSuite {
     // input − quarantined (nothing silently lost, nothing duplicated)
     val clips = spark.read.parquet(input).as[graft.model.Clip]
     val inputRows = clips.count()
+    // each query reads every input row once: a sink that runs several
+    // jobs per batch must not make its query read the batch again
+    r.sinks.keys.foreach { name =>
+      assert(r.listener.totalInputRows(s"graft_$name") == inputRows,
+        s"$name: listener rows ${r.listener.totalInputRows(s"graft_$name")} != input $inputRows")
+    }
+    // the upsert records count the same rows the query read
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(r.sinks("upsert").reconciliation(spark)).path("input_rows").asLong() == inputRows)
     val quarantined = graft.streaming.ClipPipeline.quarantineStage(clips).count()
     val mappedRows = exactlyOnce(r, "mapped").readCommitted(spark).count()
     assert(quarantined > 0, "fixture must exercise the quarantine path")
@@ -200,33 +209,28 @@ class PipelineMainSpec extends AnyFunSuite {
     val after = files()
     val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
     assert(changed.isEmpty, s"sink files changed by the resumed run: ${changed.toSeq.sorted.mkString(", ")}")
-    // the upsert record's input rows are one run's listener count: a
-    // resumed sink reconciles against the rows its query read in both
+    // every sink reconciles from its committed records alone, with no
+    // new input in this run
     again.sinks.foreach { case (name, sink) =>
-      val q = s"graft_$name"
-      val rec = sink.reconciliation(spark,
-        first.listener.totalInputRows(q) + again.listener.totalInputRows(q))
+      val rec = sink.reconciliation(spark)
       assert(reconciled(rec), s"$name after the resumed run: $rec")
     }
   }
 
-  test("budget pipeline: per-source prefix conservation; boot guard without --rocksdb") {
+  test("budget pipeline: per-source prefix conservation without --rocksdb") {
     val spark = TestSpark.spark
     import spark.implicits._
-    // transformWithState is RocksDB-only — refusing at boot beats a
-    // mid-run provider error
-    intercept[IllegalArgumentException] {
-      PipelineMain.selectPipelines(Map("pipelines" -> "budget"))
-    }
+    assert(PipelineMain.selectPipelines(Map("pipelines" -> "budget")) == Seq("budget"))
     val out = java.nio.file.Files.createTempDirectory("pipe_budget_").toString
     graft.synth.ClipGen.stagedClips(spark, "/root/testdata/sf0.001").head(1)
     val input = graft.synth.ClipGen.clipsTablePath("/root/testdata/sf0.001")
-    // run selects the RocksDB provider itself and restores the session's value
+    // transformWithState is RocksDB-only: run selects the RocksDB
+    // provider itself, without --rocksdb, and restores the session's value
     val provider = "spark.sql.streaming.stateStore.providerClass"
     val providerBefore = spark.conf.getOption(provider)
     val r = PipelineMain.run(spark,
       Map("input" -> input, "output" -> out, "checkpoint" -> s"$out/_ckpt",
-        "rocksdb" -> "true", "token-budget" -> "200"),
+        "token-budget" -> "200"),
       Seq("budget"))
     assert(spark.conf.getOption(provider) == providerBefore)
     val per = exactlyOnce(r, "budget").readCommitted(spark)

@@ -96,7 +96,7 @@ class BatchCommitSpec extends AnyFunSuite {
   test("steps of each sink are named in protocol order; a committed batch only drains and rolls forward") {
     val base = Files.createTempDirectory("commit_steps_")
     val eo = new ExactlyOnceSink(base.resolve("eo").toString, Seq("id"))
-    assert(eo.steps(spark.emptyDataFrame, 0).map(_.name) == Seq("stage", "lineage", "publish", "mark"))
+    assert(eo.steps(spark.emptyDataFrame, 0).map(_.name) == Seq("stage", "publish", "mark"))
     val up = new UpsertSink(base.resolve("up").toString, Seq("k"), "v")
     assert(up.steps(spark.emptyDataFrame, 0).map(_.name) ==
       Seq("pin", "stage", "publish", "snapshot", "mark", "swing"))
@@ -141,6 +141,9 @@ class BatchCommitSpec extends AnyFunSuite {
       assert(merged.filter(col("k") === "k15").select("v").as[Int].collect().toSeq == Seq(1))
       assert(sink.committedBatchIds == Seq(0L, 1L, 2L))
       assert(sink.latestCommitted.contains(2L), "_latest names the last batch")
+      // each batch's record counts its 20 rows once, however often it ran
+      assert(sink.reconciliation(spark).contains("\"input_rows\":60,\"reconciled\":true"),
+        sink.reconciliation(spark))
     }
   }
 
@@ -167,6 +170,24 @@ class BatchCommitSpec extends AnyFunSuite {
         assert(occ == (1 to 6), s"c0 occurs twice per file, numbered through the state: $occ")
       }
     }
+  }
+
+  test("mark publishes the whole record or nothing; a leftover tmp file is not a commit") {
+    val base = Files.createTempDirectory("commit_mark_")
+    val eo = new ExactlyOnceSink(base.toString, Seq("id"))
+    eo.write(spark.range(3).toDF("id"), 0)
+    // a mark that fails before its rename leaves no marker behind
+    Files.createDirectories(base.resolve("_commits").resolve("1.tmp").resolve("occupied"))
+    intercept[java.io.IOException](eo.write(spark.range(3, 5).toDF("id"), 1))
+    assert(!Files.exists(base.resolve("_commits").resolve("1")))
+    FsUtil.deleteRecursively(base.resolve("_commits").resolve("1.tmp"))
+    // a torn tmp file of a crashed mark: only all-digit names count
+    Files.writeString(base.resolve("_commits").resolve("1.tmp"), "{\"batch_id\":1,")
+    assert(eo.committedBatchIds == Seq(0L))
+    assert(eo.lineage.map(_.rows) == Seq(3L))
+    eo.write(spark.range(3, 5).toDF("id"), 1)
+    assert(eo.committedBatchIds == Seq(0L, 1L) && eo.lineage.map(_.rows) == Seq(3L, 2L))
+    assert(FsUtil.list(base.resolve("_commits")).map(_.getFileName.toString).sorted == Seq("0", "1"))
   }
 
   test("FsUtil.replace: a write that fails before the rename leaves the old content") {

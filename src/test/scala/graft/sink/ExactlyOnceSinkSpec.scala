@@ -74,13 +74,11 @@ class ExactlyOnceSinkSpec extends AnyFunSuite {
     sink.write(Seq((999L, "dup")).toDF("id", "payload"), committedAfterCrash.head)
     assert(sink.readCommitted(spark).count() == before)
 
-    // lineage: one record per committed batch with positive row counts
-    val lineageFiles = new java.io.File(s"$outDir/_lineage").listFiles()
-    assert(lineageFiles.length == sink.committedBatchIds.length)
-    val firstLineage = new String(
-      Files.readAllBytes(lineageFiles.sortBy(_.getName).head.toPath), "UTF-8")
-    assert(firstLineage.contains("\"rows\":"))
-    assert(firstLineage.contains("\"partitions\":"))
+    // lineage: one record per committed batch, its commit marker
+    val lin = sink.lineage
+    assert(lin.map(_.batchId) == sink.committedBatchIds)
+    assert(lin.map(_.rows).sum == 500 && lin.forall(b => b.partitionRows.sum == b.rows))
+    assert(!Files.exists(java.nio.file.Paths.get(outDir, "_lineage")), "no second copy of the record")
   }
 
   test("byte-stable output: same batch written twice from scratch is BYTE-identical") {
@@ -127,20 +125,17 @@ class ExactlyOnceSinkSpec extends AnyFunSuite {
     assert(sink.readCommitted(spark).count() == 5)
   }
 
-  test("corrupt lineage file falls back to the commit marker; both unreadable fails with the batch id") {
+  test("a corrupt commit marker fails naming its batch") {
     val base = Files.createTempDirectory("eo_sink_lin_").toString
     val sink = new ExactlyOnceSink(base, Seq("id"))
     sink.write((1 to 10).map(i => (i.toLong, s"p$i")).toDF("id", "payload"), 0)
-    val linFile = java.nio.file.Paths.get(base, "_lineage", "0.json")
-    val intact = sink.lineage.head
-    // truncate the lineage file mid-document → marker fallback
-    Files.writeString(linFile, Files.readString(linFile).take(20))
-    val viaMarker = sink.lineage.head
-    assert(viaMarker == intact,
-      "commit-marker fallback must reproduce the original lineage")
-    // corrupt the marker too → descriptive failure, not NoSuchElement
-    Files.writeString(java.nio.file.Paths.get(base, "_commits", "0"), "{broken")
-    val e = intercept[IllegalStateException](sink.lineage)
-    assert(e.getMessage.contains("batch 0"))
+    assert(sink.lineage.map(_.rows) == Seq(10L))
+    // a torn document, and a JSON object without the counts → a
+    // descriptive failure, not NoSuchElement
+    Seq("{broken", "{}").foreach { content =>
+      Files.writeString(java.nio.file.Paths.get(base, "_commits", "0"), content)
+      val e = intercept[IllegalStateException](sink.lineage)
+      assert(e.getMessage.contains("batch 0"), s"$content: ${e.getMessage}")
+    }
   }
 }
